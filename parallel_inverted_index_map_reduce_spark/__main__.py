@@ -29,9 +29,9 @@ hash-ordered shards:
 
 The serving-store lifecycle is fully drivable: ``index-store`` builds,
 ``extend`` folds a fresh-id batch in (append-only; refuses torn
-stores; ``--defer-chunks`` skips the one store-proportional rewrite),
-``compact`` rebuilds chunks from positions after deferred extends,
-``verify-store`` checks the sidecar corpus fingerprint
+stores), ``compact`` rebuilds the norms and deduplicates the reversed
+vocabulary after extends, ``verify-store`` checks the sidecar corpus
+fingerprint
 (exit 0 match / 3 torn / 4 stale), and ``search --stored`` serves —
 refusing a torn store rather than answering inconsistently (--term,
 --prefix wildcard-tail, --fuzzy typo-tolerant, --and, --phrase,
@@ -106,8 +106,6 @@ def _search(args) -> int:
         if args.term:
             ran = True
             if stored:
-                # staleness-aware: falls back to the positions table
-                # after a deferred-chunks extend (see compact mode)
                 hits = srv.stored_term_postings(spark, stored, args.term)
             else:
                 hits = ix.term_lookup(ix.build_index(docs), args.term)
@@ -265,12 +263,11 @@ def _index_store(args) -> int:
             from .sources.corpus import read_manifest_corpus
 
             docs = read_manifest_corpus(spark, args.input)
-        store_search_index(
-            docs, args.base, n_buckets=args.buckets, chunk_size=args.chunk_size
-        )
+        store_search_index(docs, args.base, n_buckets=args.buckets)
         print(
             f"stored serving index '{args.base}' "
-            f"(chunks/positions/doclen/stats, {args.buckets} buckets) — "
+            f"(positions/doclen/docterms/norms/rwords/stats, "
+            f"{args.buckets} buckets) — "
             f"query it with: search --stored {args.base}"
         )
         return 0
@@ -302,17 +299,9 @@ def _extend(args) -> int:
             )
             return 3
         batch = _read_docs(spark, args.input)
-        srv.extend_search_index(
-            spark, args.base, batch, defer_chunks=args.defer_chunks
-        )
+        srv.extend_search_index(spark, args.base, batch)
         n = batch.count()
-        suffix = (
-            " — chunks deferred; run compact to restore the fast "
-            "lookup path"
-            if args.defer_chunks
-            else ""
-        )
-        print(f"extended '{args.base}' with {n} documents (append-only){suffix}")
+        print(f"extended '{args.base}' with {n} documents (append-only)")
         return 0
     finally:
         spark.stop()
@@ -333,14 +322,13 @@ def _compact(args) -> int:
                 file=sys.stderr,
             )
             return 3
-        if srv.chunks_current(spark, args.base):
-            print(f"store '{args.base}' chunks already current — nothing to do")
-            return 0
-        srv.compact_search_index(spark, args.base)
-        print(
-            f"compacted '{args.base}': chunks rebuilt from positions "
-            "(atomic swap); fast lookup path restored"
-        )
+        if srv.compact_search_index(spark, args.base):
+            print(
+                f"compacted '{args.base}': stale derived tables rebuilt "
+                "(atomic swaps)"
+            )
+        else:
+            print(f"store '{args.base}' already compact — nothing to do")
         return 0
     finally:
         spark.stop()
@@ -359,13 +347,10 @@ def _verify_store(args) -> int:
             print(f"TORN: store '{args.base}' has an unfinished extend")
             return 3
         if srv.verify_search_index(spark, args.base, docs):
-            notes = []
-            if not srv.chunks_current(spark, args.base):
-                notes.append("chunks stale (positions fallback active)")
-            if not srv.norms_current(spark, args.base):
-                notes.append("norms stale (recomputed per mlt query)")
             suffix = (
-                " — " + "; ".join(notes) + "; run compact" if notes else ""
+                ""
+                if srv.norms_current(spark, args.base)
+                else " — norms stale (recomputed per mlt query); run compact"
             )
             print(f"OK: store '{args.base}' matches the corpus{suffix}")
             return 0
@@ -387,7 +372,7 @@ def _store_stats(args) -> int:
     spark = get_spark(app_name="store-stats", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        srv.recover_chunks_swap(spark, args.base)
+        srv.recover_table_swaps(spark, args.base)
         print(_json.dumps(srv.serving_store_stats(spark, args.base), indent=2))
         return 0
     except FileNotFoundError:
@@ -752,27 +737,24 @@ def main(argv: list[str] | None = None) -> int:
         parser = argparse.ArgumentParser(
             prog="parallel_inverted_index_map_reduce_spark extend",
             description="Fold NEW documents into a stored serving index "
-            "incrementally (append-only; doc ids must be new). Torn "
-            "extends from a previous crash are refused — rebuild first.",
+            "incrementally (append-only; doc ids must be new): every "
+            "table is appended, no store-sized table is rewritten, and "
+            "norms stay stale until 'compact' runs. Torn extends from a "
+            "previous crash are refused — rebuild first.",
         )
         parser.add_argument("base", help="store name (see index-store)")
         parser.add_argument(
             "input", help="manifest file, or a documents .parquet path"
-        )
-        parser.add_argument(
-            "--defer-chunks", action="store_true",
-            help="skip the chunks rewrite (the one store-proportional "
-            "cost): queries fall back to the positions table until "
-            "'compact' runs",
         )
         return _extend(parser.parse_args(argv[1:]))
 
     if argv and argv[0] == "compact":
         parser = argparse.ArgumentParser(
             prog="parallel_inverted_index_map_reduce_spark compact",
-            description="Rebuild a stored index's chunks table from its "
-            "positions table (atomic swap) after deferred-chunks "
-            "extends, restoring the fast lookup path.",
+            description="After extends, rebuild a stored index's TF-IDF "
+            "norms and deduplicate its reversed vocabulary (atomic "
+            "swaps). No-op when no extend ran since the last build or "
+            "compaction.",
         )
         parser.add_argument("base", help="store name (see index-store)")
         return _compact(parser.parse_args(argv[1:]))
@@ -794,7 +776,7 @@ def main(argv: list[str] | None = None) -> int:
             prog="parallel_inverted_index_map_reduce_spark store-stats",
             description="Inspect a stored serving index: sidecar facts, "
             "per-table file counts/bytes, and the health flags "
-            "(torn extend / stale chunks / stale norms) as one JSON "
+            "(torn extend / stale norms) as one JSON "
             "object. Metadata only — no Spark jobs.",
         )
         parser.add_argument("base", help="store name (see index-store)")
@@ -854,15 +836,15 @@ def main(argv: list[str] | None = None) -> int:
         parser = argparse.ArgumentParser(
             prog="parallel_inverted_index_map_reduce_spark index-store",
             description="Build and persist the serving index layout "
-            "(chunked flat index, positional postings, doclen, stats) "
-            "so later sessions answer queries at pruned-lookup cost.",
+            "(positional postings, doclen, docterms, norms, reversed "
+            "vocabulary, stats) so later sessions answer queries at "
+            "pruned-lookup cost.",
         )
         parser.add_argument(
             "input", help="manifest file, or a documents .parquet path"
         )
         parser.add_argument("--base", required=True, help="store name")
         parser.add_argument("--buckets", type=int, default=8)
-        parser.add_argument("--chunk-size", type=int, default=4096)
         return _index_store(parser.parse_args(argv[1:]))
 
     if argv and argv[0] == "search":

@@ -174,9 +174,7 @@ def build_index_chunked(
 
 def chunk_pairs(pairs: DataFrame, chunk_size: int = 4096) -> DataFrame:
     """The chunking tail of :func:`build_index_chunked` over an
-    already-built DISTINCT (word, doc_id) frame — callers that hold the
-    pairs from another derivation (e.g. the serving store's one
-    tokenization feeding positions AND chunks) skip the re-tokenize."""
+    already-built DISTINCT (word, doc_id) frame."""
     w = Window.partitionBy("word").orderBy("doc_id")
     chunks = (
         pairs.withColumn("ord", F.row_number().over(w) - 1)
@@ -258,7 +256,6 @@ def merge_index_chunked(
     new_docs: DataFrame,
     chunk_size: int = 4096,
     one_based: bool = False,
-    new_pairs: DataFrame | None = None,
     delta_only: bool = False,
 ) -> DataFrame:
     """Incremental maintenance of the CHUNKED layout: fold new documents
@@ -274,10 +271,7 @@ def merge_index_chunked(
     chunked rebuild in tests/test_index_merge_upsert.py.
 
     ``one_based`` must match the stored index's id space (applies to
-    the new side's tokens only). ``new_pairs`` lets a caller that
-    already derived the new documents' distinct (word, doc_id) frame
-    (e.g. from a pinned positional-postings build) skip the
-    re-tokenization.
+    the new side's tokens only).
 
     ``delta_only`` returns ONLY the affected words' rebuilt rows and
     skips the pass-through anti-join entirely — the streaming delta
@@ -286,8 +280,7 @@ def merge_index_chunked(
     and last-writer-wins composition per word reconstructs exactly
     ``untouched UNION rebuilt``.
     """
-    if new_pairs is None:
-        new_pairs = postings_flat(new_docs, one_based=one_based)
+    new_pairs = postings_flat(new_docs, one_based=one_based)
     affected = new_pairs.select("word").distinct()
 
     old_pairs = (
@@ -360,13 +353,18 @@ def assemble_term_chunks(chunks: DataFrame) -> DataFrame:
 
 
 def lookup_stored_terms(spark, table: str, terms: list[str]) -> DataFrame:
-    """Point lookup against the stored chunked index: the IN filter
-    pushes into the parquet scan (PushedFilters) AND prunes buckets, so
-    the read cost is one bucket's worth of one column-pruned scan —
-    independent of index size.
+    """Point lookup against the stored chunked index, double-pruned:
+    the terms' derived first letters prune whole partition directories
+    (PartitionFilters), and the IN filter pushes into the parquet scan
+    (PushedFilters) AND prunes buckets, so the read cost is one
+    bucket's worth of the terms' letter directories — independent of
+    index size.
     """
+    letters = sorted({t[0] for t in terms if t})
     return assemble_term_chunks(
-        spark.table(table).where(F.col("word").isin(terms))
+        spark.table(table)
+        .where(F.col("letter").isin(letters))
+        .where(F.col("word").isin(terms))
     )
 
 

@@ -11,15 +11,14 @@ the other half the reference's design implies but never builds
 stops — it has no query side at all): persist the index ONCE in a
 pruned layout, then serve each query at lookup cost.
 
-Layout written by :func:`store_search_index` under a ``base`` name:
+Layout written by :func:`store_search_index` under a ``base`` name —
+six tables, each fact stored once:
 
-- ``<base>_chunks``    — the chunked flat index (letter-partitioned,
-  word-bucketed+sorted; operators/index.py store_chunked_index): point
-  lookups and boolean ops read ONE bucket of one letter directory.
-- ``<base>_positions`` — positional postings (word, doc_id, positions),
-  same two-level layout: phrase/proximity/BM25 read only the query
-  terms' buckets. tf = size(positions), so BM25 needs no separate tf
-  table.
+- ``<base>_positions`` — positional postings (word, doc_id, positions,
+  tf), partitioned by letter and word-bucketed+sorted: the ONE source
+  of truth for postings. Term, boolean, prefix, phrase, proximity and
+  BM25 lookups read only the query terms' letter directories and
+  buckets; a posting list is the sorted doc_ids of a word's rows.
 - ``<base>_doclen``    — (doc_id, dl), bucketed by doc_id: the BM25
   length-normalization join co-locates without an exchange when the
   candidate side is shuffled to match, and AQE broadcasts the (tiny,
@@ -27,10 +26,15 @@ Layout written by :func:`store_search_index` under a ``base`` name:
 - ``<base>_stats``     — ONE row (n_docs, avgdl): the corpus scalars
   BM25 needs, precomputed at build time instead of two corpus
   aggregations per query.
+- ``<base>_docterms``  — (doc_id, word, tf), the doc-major transpose
+  more-like-this reads one doc_id bucket of.
+- ``<base>_norms``     — (doc_id, n2) TF-IDF vector norms; idf is baked
+  in, so extends flag them stale until compaction.
 - ``<base>_rwords``    — (rword, word) reversed-vocabulary companion,
   partitioned by rletter (the word's LAST letter): a suffix query is a
   prefix query over rword, restoring the directory pruning the
-  word-major layout cannot give a wildcard-head predicate.
+  word-major layout cannot give a wildcard-head predicate. Its word
+  column is also the vocabulary fuzzy lookup scans.
 
 Every query operator here is proven ROW-IDENTICAL to its corpus-scan
 twin (tests/test_index_storage.py) because both share the same scoring
@@ -59,17 +63,13 @@ from .index import (
     _normalize_single_term,
     _py_deletion_variants,
     _with_df_letter,
-    assemble_term_chunks,
     bm25_rank,
-    chunk_pairs,
     deletion_variants,
-    lookup_stored_terms,
     mlt_rank,
     normalize_query_tokens,
     phrase_adjacency_filter,
     positional_postings,
     proximity_min_filter,
-    store_chunked_index,
     tfidf_norms,
     tfidf_weighted,
 )
@@ -112,15 +112,14 @@ def store_search_index(
     docs: DataFrame,
     base: str,
     n_buckets: int = 8,
-    chunk_size: int = 4096,
 ) -> None:
     """Build and persist the full serving layout for ``docs`` under
-    ``base`` (seven tables, see module docstring). ONE tokenization of
+    ``base`` (six tables, see module docstring). ONE tokenization of
     the corpus feeds every table: the positional-postings frame is
-    pinned (lazy localCheckpoint) and chunks derive from its (word,
-    doc_id) pairs, doclen from its per-doc position counts — without
-    the pinning, chunks/positions/doclen would each re-tokenize the
-    corpus (the materialization discipline of operators/dedup.py).
+    pinned (lazy localCheckpoint) and doclen, docterms, norms and
+    rwords all derive from it — without the pinning, each table would
+    re-tokenize the corpus (the materialization discipline of
+    operators/dedup.py).
     Everything downstream of this call is lookup-cost.
 
     Crash safety: the sidecar is DELETED first and rewritten last, so a
@@ -149,11 +148,6 @@ def store_search_index(
         n_buckets,
         sort_col="word",
         partition_cols=("letter",),
-    )
-    store_chunked_index(
-        chunk_pairs(pos.select("word", "doc_id"), chunk_size=chunk_size),
-        f"{base}_chunks",
-        n_buckets=n_buckets,
     )
     doclen = pos.groupBy("doc_id").agg(
         F.sum(F.size("positions")).cast("long").alias("dl")
@@ -202,11 +196,7 @@ def store_search_index(
             {
                 "version": 5,
                 "n_buckets": n_buckets,
-                "chunk_size": chunk_size,
                 "fingerprint": fp,
-                # chunks cover the whole corpus on a fresh build; a
-                # deferred extend flips this (see extend_search_index)
-                "chunks_current": True,
                 # norms bake idf in, so ANY extend flips this (df moved)
                 # and compaction rebuilds; stale norms are recomputed
                 # on the fly by mlt_search_stored — slower, never wrong
@@ -232,12 +222,12 @@ def _read_meta(spark: SparkSession, base: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Lifecycle protection: extend marker + atomic chunk swap + fingerprint
+# Lifecycle protection: extend marker + atomic table swap + fingerprint
 # verify. Together these close the two round-4 durability defects: a
-# torn multi-table extend is DETECTABLE (marker), a crash mid-chunk-
-# rewrite can never destroy the only copy (__next write + rename swap),
-# and a store serving a regenerated corpus is CAUGHT, not silently
-# served (sidecar fingerprint checked by ensure_search_index).
+# torn multi-table extend is DETECTABLE (marker), a crash mid-rewrite
+# of a derived table can never destroy the only copy (__next write +
+# rename swap), and a store serving a regenerated corpus is CAUGHT, not
+# silently served (sidecar fingerprint checked by ensure_search_index).
 # ---------------------------------------------------------------------------
 
 
@@ -259,8 +249,8 @@ def _clear_extend_marker(spark: SparkSession, base: str) -> None:
 
 def extend_in_progress(spark: SparkSession, base: str) -> bool:
     """True when a previous :func:`extend_search_index` started mutating
-    the four tables and never finished — the store may be TORN (e.g.
-    positions include the new docs while chunks/stats exclude them) and
+    the tables and never finished — the store may be TORN (e.g.
+    positions include the new docs while stats exclude them) and
     must be rebuilt (or rolled forward by re-running the same extend
     after a rebuild from the pre-extend corpus)."""
     return os.path.exists(_extend_marker_path(spark, base))
@@ -273,17 +263,13 @@ def _swap_paths(
     return loc, table_location(spark, f"{base}{suffix}__next"), loc + "__old"
 
 
-def _chunks_swap_paths(spark: SparkSession, base: str) -> tuple[str, str, str]:
-    return _swap_paths(spark, base, "_chunks")
-
-
 # table suffixes replaced via the atomic swap (everything derived-and-
 # rewritten; append-only tables never swap)
-_SWAPPED_SUFFIXES = ("_chunks", "_norms", "_rwords")
+_SWAPPED_SUFFIXES = ("_norms", "_rwords")
 
 
-def recover_chunks_swap(spark: SparkSession, base: str) -> None:
-    """Roll crashed table swaps forward (chunks AND norms — every
+def recover_table_swaps(spark: SparkSession, base: str) -> None:
+    """Roll crashed table swaps forward (norms AND rwords — every
     derived table replaced via :func:`_replace_table_atomic`).
     Invariant of the swap protocol: a live location is only ever
     missing AFTER ``__next`` is completely written, so live-missing +
@@ -355,23 +341,11 @@ def _replace_table_atomic(
     _create_stored_table(spark, table, spec, n_buckets)
 
 
-def _replace_chunks_atomic(
-    spark: SparkSession, base: str, merged: DataFrame, n_buckets: int
-) -> None:
-    _replace_table_atomic(spark, base, "_chunks", merged, n_buckets)
-
-
 def _bucketed_specs(base: str) -> dict[str, tuple[str, str, str]]:
     """table -> (column DDL, partition clause, bucket/sort column) for
-    the three bucketed tables of a serving layout — ONE source of truth
+    the bucketed tables of a serving layout — ONE source of truth
     shared by the fresh-session attach and the post-swap re-register."""
     return {
-        f"{base}_chunks": (
-            "(word string, chunk_id bigint, df bigint, "
-            "postings array<bigint>, letter string)",
-            "PARTITIONED BY (letter)",
-            "word",
-        ),
         f"{base}_positions": (
             "(word string, doc_id bigint, positions array<int>, "
             "tf bigint, letter string)",
@@ -428,6 +402,11 @@ def _create_stored_table(
         spark.catalog.recoverPartitions(table)
 
 
+# every text-store table a query may read; the rwords companion is
+# optional (pre-v5 stores lack it) and handled separately
+_TEXT_TABLES = ("_positions", "_doclen", "_docterms", "_norms", "_stats")
+
+
 def attach_search_index(spark: SparkSession, base: str) -> None:
     """Re-register a previously stored serving layout in THIS session's
     catalog. ``store_search_index`` writes EXTERNAL tables (data under
@@ -437,14 +416,14 @@ def attach_search_index(spark: SparkSession, base: str) -> None:
     DDL carrying the same bucket/sort/partition spec, so every pruning
     property (PartitionFilters, SelectedBucketsCount, sorted files)
     survives the session boundary. No-op when the tables are already
-    registered. Rolls a crashed chunk swap forward before registering.
+    registered. Rolls a crashed table swap forward before registering.
     The local stand-in for a metastore-backed lake, where this whole
     function is the metastore's job."""
-    recover_chunks_swap(spark, base)
-    tables = [f"{base}{sfx}" for sfx in ("_chunks", "_positions", "_doclen", "_docterms", "_norms", "_stats")]
+    recover_table_swaps(spark, base)
+    tables = [f"{base}{sfx}" for sfx in _TEXT_TABLES]
     # the rwords companion ships with v5 stores; a pre-v5 store stays
-    # attachable (suffix_search_stored falls back to the vocabulary
-    # scan), so its presence is a filesystem fact, not a requirement
+    # attachable (the vocabulary passes fall back to positions), so its
+    # presence is a filesystem fact, not a requirement
     if os.path.isdir(table_location(spark, f"{base}_rwords")):
         tables.append(f"{base}_rwords")
     registered = [t for t in tables if spark.catalog.tableExists(t)]
@@ -502,11 +481,10 @@ def ensure_search_index(
     docs: DataFrame,
     base: str,
     n_buckets: int = 8,
-    chunk_size: int = 4096,
 ) -> None:
     """The one attach-or-build entry point query paths should use:
-    after this returns, ``base``'s four tables are registered and
-    provably current for ``docs``.
+    after this returns, ``base``'s tables are registered and provably
+    current for ``docs``.
 
     - tables already registered in THIS session: trusted as-is (they
       were verified or built by the call that registered them; a
@@ -518,7 +496,7 @@ def ensure_search_index(
     - nothing on disk / verification fails: full rebuild.
     """
     spark = docs.sparkSession
-    tables = [f"{base}{sfx}" for sfx in ("_chunks", "_positions", "_doclen", "_docterms", "_norms", "_stats")]
+    tables = [f"{base}{sfx}" for sfx in _TEXT_TABLES]
     if all(spark.catalog.tableExists(t) for t in tables) and not (
         extend_in_progress(spark, base)
     ):
@@ -529,7 +507,7 @@ def ensure_search_index(
             return
     except FileNotFoundError:
         pass
-    store_search_index(docs, base, n_buckets=n_buckets, chunk_size=chunk_size)
+    store_search_index(docs, base, n_buckets=n_buckets)
 
 
 def pruned_positions(positions: DataFrame, words: set[str]) -> DataFrame:
@@ -702,40 +680,29 @@ def proximity_search_stored(
     return proximity_min_filter(per_doc, max_dist)
 
 
-def chunks_current(spark: SparkSession, base: str) -> bool:
-    """False when a deferred-chunks extend left the chunks table lagging
-    the positions table (see :func:`extend_search_index`'s
-    ``defer_chunks``) — chunk-served queries must fall back to the
-    positions table until :func:`compact_search_index` runs. Absent
-    flag (pre-deferral sidecars) means current."""
-    return bool(_read_meta(spark, base).get("chunks_current", True))
+def _postings_from_positions(rows: DataFrame) -> DataFrame:
+    """(letter, word, df, postings) from a (pruned) slice of positional
+    postings: each word's sorted doc_ids. Positions hold exactly one row
+    per (word, doc_id), so a word's rows ARE its posting list — the one
+    aggregation every postings-serving path shares (the corpus-scan
+    twins in index.py end in the same sort_array(collect_set) tail)."""
+    idx = rows.groupBy("word").agg(
+        F.sort_array(F.collect_set("doc_id")).alias("postings")
+    )
+    return _with_df_letter(idx).select("letter", "word", "df", "postings")
 
 
 def stored_term_postings(
     spark: SparkSession, base: str, terms: list[str]
 ) -> DataFrame:
-    """(letter, word, df, postings) for exact ``terms`` from the store,
-    routing around staleness: the chunks table when it is current
-    (bucket-pruned point lookup, the fast path), else the positions
-    table (same letter-partitioned/word-bucketed pruning; postings
-    re-aggregate from the pruned rows — slower per query, but CORRECT
-    the instant a deferred extend commits, which is the contract that
-    makes deferring the chunks rewrite safe)."""
-    words = sorted({t for t in terms if t})
-    if not words:
-        # empty lookup: an always-false filter keeps the schema without
-        # isin() over zero values
-        return assemble_term_chunks(
-            spark.table(f"{base}_chunks").where(F.lit(False))
-        )
-    if chunks_current(spark, base):
-        return lookup_stored_terms(spark, f"{base}_chunks", words)
-    idx = (
-        _positions_for(spark, base, set(words))
-        .groupBy("word")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("postings"))
-    )
-    return _with_df_letter(idx).select("letter", "word", "df", "postings")
+    """(letter, word, df, postings) for exact ``terms`` from the store:
+    the positions table read double-pruned (the terms' letter
+    directories + the pushed word IN filter over word-bucketed, sorted
+    files), only its word/doc_id columns, then one per-word
+    aggregation. Correct the instant an extend commits — positions is
+    append-maintained, so there is nothing to catch up. Empty or
+    absent terms match nothing."""
+    return _postings_from_positions(_positions_for(spark, base, set(terms)))
 
 
 # Above this many matched vocabulary terms, the stored suffix/fuzzy
@@ -755,7 +722,7 @@ def stored_postings_for_matched(
     """(letter, word, df, postings) for a matched-vocabulary FRAME
     (single ``word`` column), row-identical to
     ``stored_term_postings(spark, base, collected_words)`` on every
-    input by construction (same source tables, same reassembly tails;
+    input by construction (same source table, same aggregation tail;
     pinned by tests/test_vocab_search.py's branch-identity tests):
 
     - at most ``cap`` matches (the common case — fuzzy neighborhoods,
@@ -765,9 +732,9 @@ def stored_postings_for_matched(
       bounded by the match set, flat in corpus size;
     - above ``cap``: NEVER collect — broadcast semi-join the matched
       frame (with its derived letter, so the join lands on the
-      partition key) against the chunks table, or the positions table
-      when a deferred extend left chunks stale. Scan cost is then the
-      table's, not the driver's memory — unconditionally scale-safe.
+      partition key) against the positions table. Scan cost is then
+      the table's, not the driver's memory — unconditionally
+      scale-safe.
     """
     head = [r["word"] for r in matched.limit(cap + 1).collect()]
     if len(head) <= cap:
@@ -777,17 +744,9 @@ def stored_postings_for_matched(
             F.substring("word", 1, 1).alias("letter"), "word"
         ).distinct()
     )
-    if chunks_current(spark, base):
-        return assemble_term_chunks(
-            spark.table(f"{base}_chunks").join(keys, ["letter", "word"], "left_semi")
-        )
-    idx = (
-        spark.table(f"{base}_positions")
-        .join(keys, ["letter", "word"], "left_semi")
-        .groupBy("word")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("postings"))
+    return _postings_from_positions(
+        spark.table(f"{base}_positions").join(keys, ["letter", "word"], "left_semi")
     )
-    return _with_df_letter(idx).select("letter", "word", "df", "postings")
 
 
 def prefix_search_stored(
@@ -797,22 +756,38 @@ def prefix_search_stored(
     the stored layout — the prefix's FIRST LETTER prunes to one
     partition directory (PartitionFilters), and the StartsWith predicate
     pushes into the parquet scan over word-sorted files. Row-identical
-    to the corpus-scan form (shared reassembly/aggregation tails).
-    Routes around a stale chunks table like :func:`stored_term_postings`."""
+    to the corpus-scan form (shared aggregation tail)."""
     p = _normalize_single_term(prefix, "prefix")
-    if chunks_current(spark, base):
-        return assemble_term_chunks(
-            spark.table(f"{base}_chunks").where(
-                (F.col("letter") == p[0]) & F.col("word").startswith(p)
-            )
+    return _postings_from_positions(
+        spark.table(f"{base}_positions").where(
+            (F.col("letter") == p[0]) & F.col("word").startswith(p)
         )
-    idx = (
-        spark.table(f"{base}_positions")
-        .where((F.col("letter") == p[0]) & F.col("word").startswith(p))
-        .groupBy("word")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("postings"))
     )
-    return _with_df_letter(idx).select("letter", "word", "df", "postings")
+
+
+def _rwords_table(spark: SparkSession, base: str) -> str | None:
+    """The ``<base>_rwords`` companion's table name, registered in this
+    session if needed, or None for a pre-v5 store that has none (its
+    vocabulary passes fall back to positions)."""
+    table = f"{base}_rwords"
+    if not os.path.isdir(table_location(spark, table)):
+        return None
+    if not spark.catalog.tableExists(table):
+        _create_stored_table(
+            spark, table, _bucketed_specs(base)[table],
+            int(_read_meta(spark, base)["n_buckets"]),
+        )
+    return table
+
+
+def _stored_vocabulary(spark: SparkSession, base: str) -> DataFrame:
+    """Single-column ``word`` frame of the store's distinct vocabulary:
+    the rwords companion's word column (one row per word, plus
+    un-compacted extend duplicates the distinct drops), or the positions
+    table's word column for a pre-v5 store without rwords — one row per
+    (word, doc), so that fallback scans far more rows."""
+    table = _rwords_table(spark, base) or f"{base}_positions"
+    return spark.table(table).select("word").distinct()
 
 
 def fuzzy_term_search_stored(
@@ -825,10 +800,10 @@ def fuzzy_term_search_stored(
     """(letter, word, df, postings): index.py fuzzy_term_search served
     from the stored layout. Two stored reads, each pruned its own way:
 
-    1. vocabulary pass — ONE COLUMN (word) of the chunks table (or
-       positions when chunks are stale), distinct, through the SymSpell
-       deletion-neighborhood filter + levenshtein verify; vocabulary-
-       scale, postings never read.
+    1. vocabulary pass — :func:`_stored_vocabulary` (one column of the
+       rwords companion), through the SymSpell deletion-neighborhood
+       filter + levenshtein verify; vocabulary-scale, postings never
+       read.
     2. postings fetch — through :func:`stored_postings_for_matched`:
        a neighborhood-bounded match set (the common case) collects to
        a driver-scalar IN list that prunes buckets/partitions; a match
@@ -840,8 +815,7 @@ def fuzzy_term_search_stored(
     q = _normalize_single_term(term, "fuzzy term")
     if max_dist < 1:
         raise ValueError("max_dist must be >= 1")
-    src = "_chunks" if chunks_current(spark, base) else "_positions"
-    vocab = spark.table(f"{base}{src}").select("word").distinct()
+    vocab = _stored_vocabulary(spark, base)
     q_variants = sorted(_py_deletion_variants(q, max_dist))
     matched = (
         deletion_variants(vocab, max_deletes=max_dist)
@@ -876,7 +850,7 @@ def mlt_search_stored(
       words (tf = size(positions)), with df derived from the SAME
       pruned rows (positions holds every (word, doc) pair for the
       query words, so a df window over the candidates is exact — no
-      separate df lookup, no extra job, immune to chunk staleness);
+      separate df lookup, no extra job);
     - norms come from the precomputed norms table when current, else
       recomputed on the fly from docterms + stats
       (:func:`_stored_weighted_terms` — bit-identical values, the
@@ -942,9 +916,8 @@ def boolean_search_stored(
     spark: SparkSession, base: str, t1: str, t2: str
 ) -> DataFrame:
     """(op, term1, term2, doc_ids): AND/OR/NOT posting ops served from
-    the stored chunked index — the lookup reads one bucket per term
-    (stored_term_postings; positions-table fallback when a deferred
-    extend left chunks stale), the three ops project from ONE collected
+    the stored positions table — the lookup reads one bucket per term
+    (stored_term_postings), the three ops project from ONE collected
     pair of posting arrays. Emits 0 rows when either term is absent,
     matching index.py boolean_search's both-present semantics."""
     merged = stored_term_postings(spark, base, [t1, t2])
@@ -1435,65 +1408,51 @@ def extend_search_index(
     spark: SparkSession,
     base: str,
     new_docs: DataFrame,
-    defer_chunks: bool = False,
 ) -> None:
     """Fold NEW documents into a stored serving layout incrementally —
     the daily-ingest path (same role as index.py merge_index_chunked,
-    extended to the whole four-table layout).
+    extended to the whole layout).
 
     Incrementality per table, honestly stated:
 
-    - ``positions`` / ``doclen``: pure bucketed APPENDS. New documents
-      only ever add (word, doc_id) rows — no stored row changes — and
+    - ``positions`` / ``doclen`` / ``docterms``: pure bucketed APPENDS.
+      New documents only ever add rows — no stored row changes — and
       Spark's bucketed writer routes appended files into the same
       bucket ids (verified: filename bucket suffixes match across
       writes, and bucket pruning keeps working over the union). Write
-      cost is proportional to the NEW data only.
+      cost is proportional to the NEW data only, and every postings
+      query reads positions, so it is current the instant the extend
+      commits.
+    - ``rwords``: the batch's distinct words appended (duplicates of
+      stored words tolerated until compaction).
     - ``stats``: one tiny rewrite (n_docs add + doclen re-average).
-    - ``chunks``: COMPUTE-incremental, storage-rewritten — the merge
-      re-chunks only the words the new docs touch (untouched words
-      pass through byte-identical via merge_index_chunked's anti-join)
-      but the rewrite is table-sized, because plain parquet cannot
-      replace individual bucketed rows. ``defer_chunks=True`` removes
-      this term entirely — the ONE store-proportional cost in the
-      extend (measured in BENCH_NOTES.md round 5): the chunks table is
-      left as-is and flagged stale in the sidecar
-      (``chunks_current: false``), every chunk-served query path
-      (:func:`stored_term_postings` and everything built on it)
-      transparently falls back to the appended positions table — same
-      letter/bucket pruning, correct the instant the extend commits —
-      and :func:`compact_search_index` is the scheduled job that
-      rebuilds chunks from positions (atomic swap) and restores the
-      fast path. A non-deferred extend on a stale store folds the
-      catch-up in: chunks rebuild from (positions + batch), so the
-      merge can never resurrect a pre-deferral view.
+    - ``norms``: left as-is and flagged stale (``norms_current: false``)
+      — idf moves with every batch; mlt_search_stored recomputes them
+      on the fly until :func:`compact_search_index` rebuilds them.
+
+    No step rewrites a store-sized table: the extend's cost is the
+    batch's.
 
     Doc ids must be NEW: a re-ingested id would corrupt the append-only
     positions contract, so overlap is a loud error (one semi-join
     against the stored doclen, bounded by the new batch's ids).
 
-    Durability protocol (round-5 hardening; crash-injected in
+    Durability protocol (crash-injected in
     tests/test_serving_lifecycle.py):
 
-    - EVERYTHING is computed and pinned BEFORE the first byte of the
-      store is touched — a failure in the compute phase leaves the
-      store byte-identical.
+    - the batch's positional postings are computed and pinned BEFORE
+      the first byte of the store is touched — a failure in the compute
+      phase leaves the store byte-identical.
     - an ``extend_inprogress`` marker brackets the multi-table mutation:
-      the four tables cannot be updated in one atomic step on plain
-      parquet, so a crash mid-extend leaves a TORN store (e.g.
-      positions include the new docs while chunks/stats exclude them) —
-      the marker makes that state detectable; verify_search_index /
-      ensure_search_index refuse it and rebuild.
-    - the chunks rewrite goes through :func:`_replace_chunks_atomic`
-      (write ``__next`` completely, publish by rename): no crash window
-      destroys the only copy of the chunks table, which the previous
-      DROP+rmtree+rewrite could.
+      the tables cannot be updated in one atomic step on plain parquet,
+      so a crash mid-extend leaves a TORN store (e.g. positions include
+      the new docs while stats exclude them) — the marker makes that
+      state detectable; verify_search_index / ensure_search_index
+      refuse it and rebuild.
     - the sidecar fingerprint is updated by xor-composition with the
       batch's fingerprint, so a later ensure over (old corpus + batch)
       verifies clean without a rebuild.
     """
-    from .index import merge_index_chunked
-
     new_ids = new_docs.select("doc_id").distinct()
     n_overlap = (
         spark.table(f"{base}_doclen")
@@ -1507,38 +1466,17 @@ def extend_search_index(
             "rebuild or a versioned swap)"
         )
     meta = _read_meta(spark, base)
-    n_buckets, chunk_size = int(meta["n_buckets"]), int(meta["chunk_size"])
+    n_buckets = int(meta["n_buckets"])
 
     # ---- compute phase: store untouched until everything is pinned ----
-    # ONE tokenization of the new batch (pinned positional frame) feeds
-    # positions, doclen, AND the chunk merge's new-pairs side
+    # ONE tokenization of the new batch (eagerly pinned positional
+    # frame) feeds positions, doclen, docterms and rwords
     new_pos = (
         positional_postings(new_docs)
         .withColumn("tf", F.size("positions").cast("long"))
         .withColumn("letter", F.substring("word", 1, 1))
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
-    # chunks: merge BEFORE touching storage, EAGERLY materialized so the
-    # write cannot lazily re-read tables this extend mutates first
-    if defer_chunks:
-        merged = None  # positions fallback serves until compaction
-    elif not meta.get("chunks_current", True):
-        # stale store: an incremental merge against the lagging chunks
-        # would miss earlier deferred batches — rebuild from the source
-        # of truth (stored positions + this batch) instead
-        merged = chunk_pairs(
-            spark.table(f"{base}_positions")
-            .select("word", "doc_id")
-            .unionByName(new_pos.select("word", "doc_id")),
-            chunk_size=chunk_size,
-        ).localCheckpoint()
-    else:
-        merged = merge_index_chunked(
-            spark.table(f"{base}_chunks"),
-            new_docs,
-            chunk_size=chunk_size,
-            new_pairs=new_pos.select("word", "doc_id"),
-        ).localCheckpoint()
     batch_fp = corpus_fingerprint(new_docs)
 
     # ---- mutate phase: bracketed by the torn-extend marker ----
@@ -1583,26 +1521,18 @@ def extend_search_index(
     # pruning bounds the cost by the match set) and compaction dedupes;
     # the alternative, an anti-join against the stored vocabulary,
     # would put a store-proportional read in the ingest path
-    rwords_table = f"{base}_rwords"
-    loc = table_location(spark, rwords_table)
-    if os.path.isdir(loc):
-        if not spark.catalog.tableExists(rwords_table):
-            _create_stored_table(
-                spark, rwords_table,
-                _bucketed_specs(base)[rwords_table], n_buckets,
-            )
+    rwords_table = _rwords_table(spark, base)
+    if rwords_table is not None:
         (
             _rwords_frame(new_pos.select("word"))
             .write.format("parquet")
             .mode("append")
-            .option("path", loc)
+            .option("path", table_location(spark, rwords_table))
             .partitionBy("rletter")
             .bucketBy(n_buckets, "rword")
             .sortBy("rword")
             .saveAsTable(rwords_table)
         )
-    if merged is not None:
-        _replace_chunks_atomic(spark, base, merged, n_buckets)
     old = spark.table(f"{base}_stats").first()
     n_docs = int(old["n_docs"]) + batch_fp["n_docs"]
     stats = spark.table(f"{base}_doclen").agg(
@@ -1616,51 +1546,39 @@ def extend_search_index(
             "n_docs": int(old_fp["n_docs"]) + batch_fp["n_docs"],
             "xor64": int(old_fp["xor64"]) ^ batch_fp["xor64"],
         }
-    # merged is None  -> this extend deferred: chunks now lag positions;
-    # merged written  -> chunks cover everything again (incl. catch-up)
-    meta["chunks_current"] = merged is not None
     # norms bake idf in and EVERY extend moves df, so norms always go
-    # stale here — recomputing them is a corpus-scale aggregation, the
-    # exact cost class deferral exists to keep out of the ingest path;
-    # mlt_search_stored recomputes on the fly until compaction
+    # stale here — recomputing them is a corpus-scale aggregation, a
+    # cost class the ingest path must not pay; mlt_search_stored
+    # recomputes on the fly until compaction
     meta["norms_current"] = False
     with open(_meta_path(spark, base), "w") as fh:
         json.dump(meta, fh)
     _clear_extend_marker(spark, base)
 
 
-def compact_search_index(spark: SparkSession, base: str) -> None:
-    """Rebuild the DERIVED tables from the positions table and restore
-    every fast lookup path — the scheduled compaction that pairs with
-    :func:`extend_search_index`: chunks when a deferred extend left
-    them lagging, norms after ANY extend (idf moved). No-op when both
-    are current.
+def compact_search_index(spark: SparkSession, base: str) -> bool:
+    """Rebuild the DERIVED tables an extend leaves stale — the
+    scheduled compaction that pairs with :func:`extend_search_index`:
+    norms (idf moved) and the rwords companion (batch vocabularies
+    appended without dedup). No-op when no extend ran since the last
+    build or compaction; a pre-v5 store additionally gains its rwords
+    companion here.
 
-    Each rebuild reads one projection of positions — already distinct
-    by construction — through the same derivations as a from-scratch
-    build, and publishes via the atomic __next-then-rename swap, so a
-    crash at any point leaves a complete table on disk. The sidecar
-    flags flip only AFTER the swaps: a crash between leaves fresh
-    tables still flagged stale — queries stay correct on the fallback
-    paths and the next compaction clears it; never the reverse state,
-    where a stale table would be trusted."""
+    Each rebuild reads the stored docterms or positions through the
+    same derivations as a from-scratch build, and publishes via the
+    atomic __next-then-rename swap, so a crash at any point leaves a
+    complete table on disk. The sidecar flag flips only AFTER the
+    swaps: a crash between leaves fresh tables still flagged stale —
+    queries stay correct on the fallback path and the next compaction
+    clears it; never the reverse state, where a stale table would be
+    trusted. Returns whether anything was rebuilt."""
     meta = _read_meta(spark, base)
     n_buckets = int(meta["n_buckets"])
     changed = False
-    # extends append the batch vocabulary to rwords without dedup (see
-    # extend_search_index); stale norms is the reliable "an extend
-    # happened since the last compaction" signal, so it also schedules
-    # the rwords dedup below
+    # stale norms is the reliable "an extend happened since the last
+    # compaction" signal, so it also schedules the rwords dedup below
     had_extends = not meta.get("norms_current", True)
-    if not meta.get("chunks_current", True):
-        merged = chunk_pairs(
-            spark.table(f"{base}_positions").select("word", "doc_id"),
-            chunk_size=int(meta["chunk_size"]),
-        ).localCheckpoint()
-        _replace_chunks_atomic(spark, base, merged, n_buckets)
-        meta["chunks_current"] = True
-        changed = True
-    if not meta.get("norms_current", True):
+    if had_extends:
         norms = (
             tfidf_norms(_stored_weighted_terms(spark, base))
             .select("doc_id", F.col("n2").cast("decimal(38,12)").alias("n2"))
@@ -1695,6 +1613,7 @@ def compact_search_index(spark: SparkSession, base: str) -> None:
     if changed:
         with open(_meta_path(spark, base), "w") as fh:
             json.dump(meta, fh)
+    return changed
 
 
 def _stored_weighted_terms(spark: SparkSession, base: str) -> DataFrame:
@@ -1712,9 +1631,12 @@ def serving_store_stats(spark: SparkSession, base: str) -> dict:
     """Operational introspection of a stored serving layout — metadata
     and filesystem facts only (no Spark jobs): sidecar version, bucket
     count, corpus fingerprint, per-table file counts and byte sizes,
-    and the three health flags an operator acts on (torn extend ->
-    rebuild; stale chunks/norms -> schedule compact_search_index; all
-    healthy -> nothing to do)."""
+    and the two health flags an operator acts on (torn extend ->
+    rebuild; stale norms -> schedule compact_search_index; both healthy
+    -> nothing to do). The ``chunks`` entry names a table no layout
+    writes any more; it stays only so existing reports keep their keys
+    (absent, 0 files, 0 bytes on a new store; a leftover directory in
+    an older store is counted but never read)."""
     meta = _read_meta(spark, base)
     tables = {}
     for suffix in ("_chunks", "_positions", "_doclen", "_docterms",
@@ -1736,10 +1658,8 @@ def serving_store_stats(spark: SparkSession, base: str) -> dict:
         "base": base,
         "version": int(meta.get("version", 1)),
         "n_buckets": int(meta["n_buckets"]),
-        "chunk_size": int(meta["chunk_size"]),
         "fingerprint": meta.get("fingerprint"),
         "extend_in_progress": extend_in_progress(spark, base),
-        "chunks_current": bool(meta.get("chunks_current", True)),
         "norms_current": bool(meta.get("norms_current", True)),
         "tables": tables,
     }
@@ -1759,30 +1679,19 @@ def suffix_matched_words(
       with the startswith pushed into it — prefix_search_stored's cost,
       bounded by the match set, flat in corpus size. Duplicate rows
       from un-compacted extends are dropped by the distinct.
-    - pre-v5 stores fall back to the column-pruned vocabulary scan over
-      chunks/positions (the fuzzy_term_search_stored shape)."""
-    rwords_table = f"{base}_rwords"
-    if os.path.isdir(table_location(spark, rwords_table)):
-        if not spark.catalog.tableExists(rwords_table):
-            _create_stored_table(
-                spark, rwords_table,
-                _bucketed_specs(base)[rwords_table],
-                int(_read_meta(spark, base)["n_buckets"]),
-            )
-        rsfx = sfx[::-1]
-        return (
-            spark.table(rwords_table)
-            .where(F.col("rletter") == rsfx[0])
-            .where(F.col("rword").startswith(rsfx))
-            .select("word")
-            .distinct()
-        )
-    src = "_chunks" if chunks_current(spark, base) else "_positions"
+    - pre-v5 stores fall back to the column-pruned vocabulary scan
+      (:func:`_stored_vocabulary`, the fuzzy_term_search_stored
+      shape)."""
+    rwords_table = _rwords_table(spark, base)
+    if rwords_table is None:
+        return _stored_vocabulary(spark, base).where(F.col("word").endswith(sfx))
+    rsfx = sfx[::-1]
     return (
-        spark.table(f"{base}{src}")
+        spark.table(rwords_table)
+        .where(F.col("rletter") == rsfx[0])
+        .where(F.col("rword").startswith(rsfx))
         .select("word")
         .distinct()
-        .where(F.col("word").endswith(sfx))
     )
 
 
@@ -1797,7 +1706,7 @@ def suffix_search_stored(
     :func:`stored_postings_for_matched` (bucket-pruned IN list up to
     ``cap`` matches, collect-free semi-join above it — a short suffix
     over a huge vocabulary must never pull the match set to the
-    driver); staleness-aware on both branches."""
+    driver)."""
     sfx = _normalize_single_term(suffix, "suffix")
     matched = suffix_matched_words(spark, base, sfx)
     return stored_postings_for_matched(spark, base, matched, cap=cap)

@@ -86,7 +86,7 @@ def _serving_base(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
 
     base = "rrserve_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     with tuned_shuffle(spark):
-        srv.ensure_search_index(docs, base, n_buckets=4, chunk_size=256)
+        srv.ensure_search_index(docs, base, n_buckets=4)
     return base
 
 
@@ -96,9 +96,10 @@ def _streamed_serving_store(
     """Build (or reuse this session's — plans/stores.py) streamed
     serving snapshot and return its store directory: the corpus lands
     as three parquet files, a maxFilesPerTrigger=1 availableNow stream
-    folds them through streaming/serving_stream.py's build-then-merge
-    path (batch 0 builds, batches 1-2 exercise the incremental merge),
-    and the caller serves from the latest committed snapshot."""
+    folds them through streaming/serving_stream.py's delta path (batch
+    0 starts the version chain, batches 1-2 exercise the delta
+    composition and the incremental stats fold), and the caller serves
+    from the latest committed snapshot."""
     from ..streaming import serving_stream as svs
     from .stores import drain, input_key, session_store, tuned_shuffle
 
@@ -351,16 +352,16 @@ FROM idx WHERE levenshtein(word, 'sow') <= 1
     "(term2 carries df, doc_ids the posting list — projected from the "
     "SAME single filtered aggregate as the boolean ops, zero extra "
     "scans; against a stored index the word predicate instead pushes "
-    "into the bucket-pruned scan, see lookup_stored_terms), then "
+    "into the bucket-pruned scan, see stored_term_postings), then "
     "AND (array_intersect), OR (array_union), NOT (array_except), and "
     "exact-phrase match via the positional index "
     "(operators/index.py phrase_search — one scan + one aggregation, "
     "adjacency checked by a per-row array predicate; the oracle uses "
     "the n-way positional self-join formulation, proving equivalence). "
     "The '*_stored' rows answer the SAME queries from the persisted "
-    "serving layout (operators/serving.py boolean_search_stored over "
-    "the bucket-pruned chunked index; phrase_search_stored over the "
-    "letter-partitioned positional store) while the oracle stays the "
+    "serving layout (operators/serving.py boolean_search_stored and "
+    "phrase_search_stored, both over the letter-partitioned, "
+    "bucket-pruned positional store) while the oracle stays the "
     "corpus-scan formulation — the hash match PROVES each stored path "
     "returns exactly what a full corpus scan returns, at pruned-lookup "
     "cost. 'slop'/'slop_stored' rows are SLOPPY-phrase match "

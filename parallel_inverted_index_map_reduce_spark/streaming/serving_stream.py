@@ -2,9 +2,10 @@
 
 streaming/index_stream.py maintains the chunked index incrementally;
 this module maintains everything a QUERY needs — positional postings,
-doclen, docterms, chunks, and the BM25 stats row — so the streamed
-artifact can serve bm25/phrase/boolean/NEAR directly, with no batch
-job in between.
+doclen, docterms, and the BM25 stats row — so the streamed artifact
+can serve bm25/phrase/more-like-this directly, with no batch job in
+between. Posting lists are the positions artifact's (word, doc_id)
+rows, exactly as in the batch store (operators/serving.py).
 
 Since round 11 versions are LOGICAL (streaming/deltas.py): each
 micro-batch writes ONLY its own contribution —
@@ -12,10 +13,6 @@ micro-batch writes ONLY its own contribution —
 - ``positions`` / ``doclen`` / ``docterms``: append-mode deltas (every
   row belongs to exactly one batch forever, so composition is a plain
   union of the live deltas),
-- ``chunks``: an lww-mode delta keyed by word
-  (:func:`operators.index.merge_index_chunked` with ``delta_only=True``
-  re-chunks ONLY the words the batch touches; composition takes each
-  word's rows from the LAST delta that wrote them),
 - ``stats``: a full (O(1)) per-version row, maintained INCREMENTALLY —
   (n_docs, n_dl, sum_dl) fold the batch's own doclen delta into the
   previous version's counters, and avgdl = sum_dl / n_dl reproduces
@@ -24,8 +21,8 @@ micro-batch writes ONLY its own contribution —
   operation either way)
 
 — and a ``_MANIFEST.json`` naming the live deltas per artifact. The
-per-batch write cost is O(batch + affected vocabulary), the same shape
-as operators/serving.py's batch extend path, where the pre-round-11
+per-batch write cost is O(batch), the same shape as
+operators/serving.py's batch extend path, where the pre-round-11
 protocol rewrote the complete layout every micro-batch (O(store) per
 increment). Commit-marker crash safety is unchanged: deltas + manifest
 land before the marker, a version is complete-or-invisible, and a
@@ -33,7 +30,7 @@ replayed batch rebuilds from the latest COMMITTED manifest — proven by
 the crash-injection test. Doc ids must be unique across the stream
 (append-only corpus), the same contract as extend_search_index.
 
-Every positions/chunks delta is letter-partitioned parquet, so the
+Every positions delta is letter-partitioned parquet, so the
 query-side pruning (PartitionFilters + pushed word IN) holds per delta
 scan, matching the stored-table path; queries run through the SAME
 frame-parameterized bodies (serving.bm25_from_frames /
@@ -50,7 +47,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import index as ix
 from ..operators.index import positional_postings
 from . import deltas as dv
 from . import sinks as eo
@@ -63,20 +59,14 @@ ARTIFACTS = {
     "positions": "word string, doc_id bigint, positions array<int>, letter string",
     "doclen": "doc_id long, dl bigint",
     "docterms": "doc_id long, word string, tf bigint",
-    "chunks": (
-        "word string, chunk_id bigint, df bigint, "
-        "postings array<bigint>, letter string"
-    ),
     "stats": "n_docs long, avgdl double, n_dl long, sum_dl long",
 }
 
-# which deltas compose by union vs last-writer-wins; stats is the O(1)
-# per-version row
+# which deltas compose by union; stats is the O(1) per-version row
 MODES = {
     "positions": ("append", None),
     "doclen": ("append", None),
     "docterms": ("append", None),
-    "chunks": ("lww", "word"),
     "stats": ("full", None),
 }
 
@@ -109,7 +99,6 @@ def start_incremental_serving(
     docs_stream: DataFrame,
     store_dir: str,
     checkpoint: str,
-    chunk_size: int = 4096,
 ):
     """Maintain the serving layout over a document stream; returns the
     StreamingQuery (callers await it)."""
@@ -123,8 +112,8 @@ def start_incremental_serving(
         prev_man = dv.read_manifest(prev_dir) if prev_dir else None
 
         # ONE tokenization of the batch: the pinned positional frame
-        # feeds positions, doclen, docterms, AND the chunk merge.
-        # EAGER: the four artifact writes below run concurrently, and
+        # feeds positions, doclen and docterms.
+        # EAGER: the three artifact writes below run concurrently, and
         # a lazy checkpoint materialized by racing jobs would tokenize
         # once per racer — materialize first, fan out after.
         new_pos = (
@@ -136,7 +125,6 @@ def start_incremental_serving(
             .withColumn("letter", F.substring("word", 1, 1))
             .localCheckpoint()
         )
-        new_pairs = new_pos.select("word", "doc_id")
         new_dl = new_pos.groupBy("doc_id").agg(
             F.sum(F.size("positions")).cast("long").alias("dl")
         )
@@ -145,16 +133,8 @@ def start_incremental_serving(
         )
         n_batch = batch.count()
         if prev_man is None:
-            chunks_delta = ix.chunk_pairs(new_pairs, chunk_size=chunk_size)
             prev_stats = {"n_docs": 0, "n_dl": 0, "sum_dl": 0}
         else:
-            prev_chunks = dv.read_artifact(
-                store_dir, prev_man, "chunks", _read_one(spark, "chunks")
-            )
-            chunks_delta = ix.merge_index_chunked(
-                prev_chunks, batch, chunk_size=chunk_size,
-                new_pairs=new_pairs, delta_only=True,
-            )
             prev_stats = dv.read_artifact(
                 store_dir, prev_man, "stats", _read_one(spark, "stats")
             ).first().asDict()
@@ -162,14 +142,12 @@ def start_incremental_serving(
         out = eo.batch_dir(store_dir, batch_id)
         rel = os.path.basename(out)
 
-        # The four artifact writes are independent once new_pos is
-        # materialized (chunks additionally reads the previous version,
-        # never this batch's other artifacts): submit them from a small
-        # thread pool so their jobs overlap instead of serializing
-        # (guide-style concurrent independent jobs — the per-batch
-        # fixed cost at small batch sizes is mostly these four write
-        # jobs' scheduling + commit latency, measured ~6-7 s/increment
-        # at sf1 before this change). Any failure propagates out of
+        # The three artifact writes are independent once new_pos is
+        # materialized: submit them from a small thread pool so their
+        # jobs overlap instead of serializing (guide-style concurrent
+        # independent jobs — the per-batch fixed cost at small batch
+        # sizes is mostly these write jobs' scheduling + commit
+        # latency). Any failure propagates out of
         # result(), the batch aborts, and no commit marker lands —
         # partially written artifact dirs stay invisible, exactly the
         # crash-injection contract.
@@ -188,17 +166,11 @@ def start_incremental_serving(
         def _w_docterms() -> None:
             new_dt.write.mode("overwrite").parquet(os.path.join(out, "docterms"))
 
-        def _w_chunks() -> None:
-            chunks_delta.write.mode("overwrite").partitionBy("letter").parquet(
-                os.path.join(out, "chunks")
-            )
-
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             for fut in [
-                pool.submit(w)
-                for w in (_w_positions, _w_doclen, _w_docterms, _w_chunks)
+                pool.submit(w) for w in (_w_positions, _w_doclen, _w_docterms)
             ]:
                 fut.result()
         # fold the WRITTEN doclen delta into the previous counters
@@ -246,7 +218,7 @@ def start_incremental_serving(
 def compact_serving_store(spark: SparkSession, store_dir: str) -> int:
     """Offline maintenance: materialize the latest committed version's
     composition of every delta-chained artifact into one ``compact=V``
-    directory (same letter partitioning for positions/chunks), commit
+    directory (same letter partitioning for positions), commit
     the compact marker, and atomically repoint version V's manifest —
     content-equal by construction. Returns V; follow with
     ``deltas.prune_versions`` to free superseded per-batch deltas."""
@@ -257,10 +229,10 @@ def compact_serving_store(spark: SparkSession, store_dir: str) -> int:
     man = dv.read_manifest(latest)
     cdir = dv.compact_dir(store_dir, version)
     rewrites = {}
-    for a in ("positions", "doclen", "docterms", "chunks"):
+    for a in ("positions", "doclen", "docterms"):
         composed = dv.read_artifact(store_dir, man, a, _read_one(spark, a))
         writer = composed.write.mode("overwrite")
-        if a in ("positions", "chunks"):
+        if a == "positions":
             writer = writer.partitionBy("letter")
         writer.parquet(os.path.join(cdir, a))
         rewrites[a] = f"{os.path.basename(cdir)}/{a}"

@@ -2,12 +2,11 @@
 extend_search_index cost vs BATCH size and vs STORE size.
 
 The claim under test (operators/serving.py extend_search_index
-docstring): positions/doclen are pure bucketed appends whose write cost
-is proportional to the NEW batch only; chunks is compute-incremental
-(only touched words re-chunk) but storage-rewritten, the scheduled-
-compaction trade. So extend time should grow ~linearly with the batch
-at fixed store size, and only weakly with the store at fixed batch
-(the residual being the chunks rewrite + the doclen re-average).
+docstring): every table an extend touches is a pure bucketed append
+whose write cost is proportional to the NEW batch only; norms go stale
+and the scheduled compaction rebuilds them. So extend time should grow
+~linearly with the batch at fixed store size, and only weakly with the
+store at fixed batch (the residual being the doclen re-average).
 
 Design: build stores at 1x and 10x of the sf0.1 corpus (replicated
 with offset ids + a replica suffix token, as scripts/bench_scale.py),
@@ -15,6 +14,7 @@ then measure
   - extend(10x store, {1x, 3x, 10x} batch)  -> batch-growth curve
   - extend(1x store, 1x batch)              -> store-growth pair with
     the 10x-store/1x-batch point
+  - compact(10x store) after its three extends
 Each extend gets FRESH doc ids (append-only contract). Batches are
 localCheckpointed first so the measured time is the extend, not corpus
 construction.
@@ -79,10 +79,10 @@ def replicated(mult: int, id_offset: int):
 results = []
 
 
-def measure(label: str, base: str, batch, extra=None, defer=False):
+def measure(label: str, base: str, batch, extra=None):
     n = batch.count()  # materialize before the clock
     t0 = time.perf_counter()
-    srv.extend_search_index(spark, base, batch, defer_chunks=defer)
+    srv.extend_search_index(spark, base, batch)
     dt = round(time.perf_counter() - t0, 3)
     row = {"measure": label, "store": base, "batch_docs": n, "sec": dt}
     if extra:
@@ -103,7 +103,7 @@ def fresh_batch(mult: int):
 def build_store(name: str, mult: int):
     docs = fresh_batch(mult)
     t0 = time.perf_counter()
-    srv.store_search_index(docs, name, n_buckets=8, chunk_size=4096)
+    srv.store_search_index(docs, name, n_buckets=8)
     dt = round(time.perf_counter() - t0, 3)
     row = {"measure": "build", "store": name, "store_docs": docs.count(), "sec": dt}
     results.append(row)
@@ -120,20 +120,12 @@ measure("extend_batch1x_into_store10x", "ing10x", fresh_batch(1))
 measure("extend_batch3x_into_store10x", "ing10x", fresh_batch(3))
 measure("extend_batch10x_into_store10x", "ing10x", fresh_batch(10))
 
-# ---- deferred-chunks mode: the store-proportional term (the chunks
-# merge/rewrite) removed from the ingest path entirely; the compact at
-# the end is the scheduled job the deferral buys back ----
-build_store("ingd1x", 1)
-build_store("ingd10x", 10)
-measure("defer_batch1x_into_store1x", "ingd1x", fresh_batch(1), defer=True)
-measure("defer_batch1x_into_store10x", "ingd10x", fresh_batch(1), defer=True)
-measure("defer_batch3x_into_store10x", "ingd10x", fresh_batch(3), defer=True)
-measure("defer_batch10x_into_store10x", "ingd10x", fresh_batch(10), defer=True)
+# the scheduled compaction: norms rebuild + rwords dedup after extends
 t0 = time.perf_counter()
-srv.compact_search_index(spark, "ingd10x")
+srv.compact_search_index(spark, "ing10x")
 row = {
-    "measure": "compact_store10x_after_3_deferred_extends",
-    "store": "ingd10x",
+    "measure": "compact_store10x_after_3_extends",
+    "store": "ing10x",
     "sec": round(time.perf_counter() - t0, 3),
 }
 results.append(row)

@@ -78,7 +78,7 @@ for mult, tag in ((1, "1x"), (10, "10x")):
     docs = corpus(mult)
     base = f"srvbench{tag}"
     t0 = time.perf_counter()
-    srv.store_search_index(docs, base, n_buckets=8, chunk_size=4096)
+    srv.store_search_index(docs, base, n_buckets=8)
     print(
         json.dumps(
             {"measure": f"build_{tag}", "sec": round(time.perf_counter() - t0, 3)}

@@ -52,7 +52,7 @@ import hashlib  # noqa: E402
 base = "vocabfb_" + hashlib.md5(SF_DIR.encode()).hexdigest()[:8]
 t0 = time.time()
 with tuned_shuffle(spark):
-    srv.ensure_search_index(docs, base, n_buckets=4, chunk_size=256)
+    srv.ensure_search_index(docs, base, n_buckets=4)
 t_build = time.time() - t0
 print(f"store build/attach: {t_build:.1f}s", flush=True)
 

@@ -34,7 +34,8 @@ _SLOW_TESTS = {
     ("test_ann_serving.py", "test_stored_ann_matches_in_session_ivf"),
     ("test_cli_and_formats.py", "test_cli_ann_store_then_ann_across_processes"),
     ("test_cli_and_formats.py", "test_cli_builds_reference_output"),
-    ("test_cli_and_formats.py", "test_cli_defer_extend_vocab_search_and_compact"),
+    ("test_cli_and_formats.py", "test_cli_compact_after_plain_extend_refreshes_norms"),
+    ("test_cli_and_formats.py", "test_cli_extend_then_vocab_search"),
     ("test_cli_and_formats.py", "test_cli_extend_and_verify_store_across_processes"),
     ("test_cli_and_formats.py", "test_cli_index_store_then_stored_search_across_processes"),
     ("test_cli_and_formats.py", "test_cli_prep_mode"),
@@ -63,16 +64,16 @@ _SLOW_TESTS = {
     ("test_plan_quality.py", "test_registry_wide_no_cartesian_products"),
     ("test_schema_drift.py", "test_queries_survive_float64_embeddings"),
     ("test_schema_drift.py", "test_streamed_serving_survives_int32_doc_ids"),
-    ("test_serving_lifecycle.py", "test_nondeferred_extend_on_stale_store_catches_up"),
+    ("test_serving_lifecycle.py", "test_successive_extends_equal_full_rebuild"),
     ("test_serving_stream.py", "test_streamed_serving_converges_and_serves"),
     ("test_similarity.py", "test_multiprobe_recall_monotone_and_consistent"),
     ("test_similarity.py", "test_semantic_dedup_multicluster_sound_and_complete"),
     ("test_streaming_pipeline.py", "test_cross_batch_near_dup_suppressed_via_signature_store"),
     ("test_streaming_pipeline.py", "test_empty_batch_commits_and_later_batches_land"),
     ("test_vocab_search.py", "test_compact_dedupes_rwords_after_extends"),
-    ("test_vocab_search.py", "test_stored_paths_follow_deferred_extend"),
-    ("test_vocab_search.py", "test_suffix_stored_matches_scan_and_follows_staleness"),
-    ("test_vocab_search.py", "test_vocab_cap_semi_join_branch_follows_staleness"),
+    ("test_vocab_search.py", "test_stored_paths_follow_extend"),
+    ("test_vocab_search.py", "test_suffix_stored_matches_scan_and_follows_extend"),
+    ("test_vocab_search.py", "test_vocab_cap_semi_join_branch_follows_extend"),
 }
 
 

@@ -237,7 +237,7 @@ def test_cli_index_store_then_stored_search_across_processes(tmp_path):
         [
             sys.executable, "-m", "parallel_inverted_index_map_reduce_spark",
             "index-store", str(manifest), "--base", "cliidx",
-            "--buckets", "4", "--chunk-size", "16",
+            "--buckets", "4",
         ],
         cwd=REPO, capture_output=True, text=True, timeout=300, env=env,
     )
@@ -303,7 +303,7 @@ def test_cli_extend_and_verify_store_across_processes(spark, tmp_path):
         )
 
     res = cli("index-store", str(v1), "--base", "cliext",
-              "--buckets", "4", "--chunk-size", "16")
+              "--buckets", "4")
     assert res.returncode == 0, res.stderr[-2000:]
     res = cli("verify-store", "cliext", str(v1))
     assert res.returncode == 0 and "OK" in res.stdout, res.stdout + res.stderr[-500:]
@@ -398,12 +398,10 @@ def test_cli_search_without_manifest_or_store_errors(tmp_path):
     assert "manifest" in res.stderr
 
 
-def test_cli_defer_extend_vocab_search_and_compact(spark, tmp_path):
-    """Deferred-chunks ingest over the CLI, across processes: extend
-    --defer-chunks leaves the store answering from positions (prefix /
-    fuzzy / term lookups all include the fresh docs), compact restores
-    the chunk path with identical answers, and a second compact is a
-    no-op."""
+def test_cli_extend_then_vocab_search(spark, tmp_path):
+    """Ingest over the CLI, across processes: right after a plain
+    extend, term / prefix / fuzzy lookups in a new process all include
+    the fresh docs."""
     import os
 
     v1 = tmp_path / "v1.parquet"
@@ -426,14 +424,14 @@ def test_cli_defer_extend_vocab_search_and_compact(spark, tmp_path):
         )
 
     res = cli("index-store", str(v1), "--base", "clidef",
-              "--buckets", "4", "--chunk-size", "16")
+              "--buckets", "4")
     assert res.returncode == 0, res.stderr[-2000:]
 
-    res = cli("extend", "clidef", str(batch), "--defer-chunks")
+    res = cli("extend", "clidef", str(batch))
     assert res.returncode == 0, res.stderr[-2000:]
-    assert "chunks deferred" in res.stdout
+    assert "extended 'clidef' with 2 documents" in res.stdout
 
-    # positions fallback: fresh docs visible to every lookup flavor
+    # fresh docs visible to every lookup flavor
     res = cli(
         "search", "--stored", "clidef",
         "--term", "sparse",
@@ -447,32 +445,11 @@ def test_cli_defer_extend_vocab_search_and_compact(spark, tmp_path):
     assert "prefix sp*: spray [100]" in res.stdout
     assert "fuzzy~1 query: query [2]" in res.stdout
     assert "fuzzy~1 query: quary [101]" in res.stdout
-    stale_out = res.stdout
-
-    res = cli("compact", "clidef")
-    assert res.returncode == 0, res.stderr[-2000:]
-    assert "compacted 'clidef'" in res.stdout
-
-    res = cli(
-        "search", "--stored", "clidef",
-        "--term", "sparse",
-        "--prefix", "sp",
-        "--fuzzy", "query",
-    )
-    assert res.returncode == 0, res.stderr[-2000:]
-    assert res.stdout == stale_out  # identical answers, faster path
-
-    res = cli("compact", "clidef")
-    assert res.returncode == 0
-    assert "already current" in res.stdout
 
 
-def test_cli_store_stats_reports_health(spark, tmp_path):
-    """store-stats surfaces the operator-facing health facts: fresh
-    store all-current, deferred extend flips chunks/norms stale and
-    verify-store says so while still exiting 0 (the store IS correct),
-    compact restores both flags."""
-    import json
+def _cli_store_env(spark, tmp_path):
+    """(cli runner, v1, batch, both) over a private warehouse: a
+    two-doc corpus, a one-doc fresh-id batch, and their union."""
     import os
 
     v1 = tmp_path / "v1.parquet"
@@ -480,15 +457,10 @@ def test_cli_store_stats_reports_health(spark, tmp_path):
     both = tmp_path / "both.parquet"
     rows1 = [(1, "spark makes indexes"), (2, "spark query engines rock")]
     rows2 = [(100, "fresh spark ingest")]
-    spark.createDataFrame(rows1, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(v1))
-    spark.createDataFrame(rows2, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(batch))
-    spark.createDataFrame(rows1 + rows2, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(both))
+    for path, rows in ((v1, rows1), (batch, rows2), (both, rows1 + rows2)):
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("overwrite").parquet(str(path))
     env = dict(os.environ, SPARK_GRAFT_WAREHOUSE=str(tmp_path / "wh"))
 
     def cli(*args):
@@ -497,27 +469,63 @@ def test_cli_store_stats_reports_health(spark, tmp_path):
             cwd=REPO, capture_output=True, text=True, timeout=300, env=env,
         )
 
+    return cli, v1, batch, both
+
+
+def test_cli_store_stats_reports_health(spark, tmp_path):
+    """store-stats surfaces the operator-facing health facts: fresh
+    store all-current with no chunks table, an extend flips norms stale
+    and verify-store says so while still exiting 0 (the store IS
+    correct)."""
+    import json
+
+    cli, v1, batch, both = _cli_store_env(spark, tmp_path)
     assert cli("index-store", str(v1), "--base", "clistat",
-               "--buckets", "4", "--chunk-size", "16").returncode == 0
+               "--buckets", "4").returncode == 0
     res = cli("store-stats", "clistat")
     assert res.returncode == 0, res.stderr[-2000:]
     st = json.loads(res.stdout)
-    assert st["version"] == 5 and st["chunks_current"] and st["norms_current"]
-    assert all(t["present"] and t["n_files"] > 0 for t in st["tables"].values())
+    assert st["version"] == 5 and st["norms_current"]
+    assert "chunks_current" not in st and "chunk_size" not in st
+    tables = st["tables"]
+    assert tables["chunks"] == {"present": False, "n_files": 0, "bytes": 0}
+    assert all(
+        t["present"] and t["n_files"] > 0
+        for name, t in tables.items()
+        if name != "chunks"
+    )
 
-    assert cli("extend", "clistat", str(batch), "--defer-chunks").returncode == 0
+    assert cli("extend", "clistat", str(batch)).returncode == 0
     st = json.loads(cli("store-stats", "clistat").stdout)
-    assert not st["chunks_current"] and not st["norms_current"]
+    assert not st["norms_current"]
     assert not st["extend_in_progress"]
     res = cli("verify-store", "clistat", str(both))
     assert res.returncode == 0  # stale-but-correct is OK, with a note
-    assert "chunks stale" in res.stdout and "norms stale" in res.stdout
+    assert "norms stale" in res.stdout
 
-    assert cli("compact", "clistat").returncode == 0
-    st = json.loads(cli("store-stats", "clistat").stdout)
-    assert st["chunks_current"] and st["norms_current"]
-    res = cli("verify-store", "clistat", str(both))
+
+def test_cli_compact_after_plain_extend_refreshes_norms(spark, tmp_path):
+    """compact must act on stale norms: index-store -> extend -> compact
+    leaves store-stats reporting norms_current, verify-store reports no
+    staleness, and a second compact is a no-op."""
+    import json
+
+    cli, v1, batch, both = _cli_store_env(spark, tmp_path)
+    assert cli("index-store", str(v1), "--base", "clicomp",
+               "--buckets", "4").returncode == 0
+    assert cli("extend", "clicomp", str(batch)).returncode == 0
+
+    res = cli("compact", "clicomp")
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert "compacted 'clicomp'" in res.stdout
+    st = json.loads(cli("store-stats", "clicomp").stdout)
+    assert st["norms_current"]
+    res = cli("verify-store", "clicomp", str(both))
     assert res.returncode == 0 and "stale" not in res.stdout
+
+    res = cli("compact", "clicomp")
+    assert res.returncode == 0
+    assert "nothing to do" in res.stdout
 
 
 def test_cli_sample_and_cdc_modes(spark, tmp_path):

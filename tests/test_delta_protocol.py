@@ -157,7 +157,6 @@ def test_serving_compaction_preserves_queries_and_stats(spark, tmp_path):
         ),
         store,
         ckpt,
-        chunk_size=32,
     )
     assert q.awaitTermination(420)
 
@@ -175,7 +174,7 @@ def test_serving_compaction_preserves_queries_and_stats(spark, tmp_path):
 
     version = svs.compact_serving_store(spark, store)
     man = dv.read_manifest(os.path.join(store, f"batch_id={version}"))
-    for a in ("positions", "doclen", "docterms", "chunks"):
+    for a in ("positions", "doclen", "docterms"):
         assert man["artifacts"][a]["deltas"] == [f"compact={version}/{a}"]
     # stats stays version-local (O(1), never chained)
     assert man["artifacts"]["stats"]["deltas"] == [

@@ -64,7 +64,11 @@ def test_stored_chunked_lookup_prunes_and_matches(spark):
     got = lookup_stored_terms(spark, "chunked_index", terms)
 
     plan = _plan(got)
-    # the IN predicate reaches the parquet scan...
+    # the terms' derived letters prune partition directories...
+    assert "PartitionFilters" in plan and "letter" in plan.split(
+        "PartitionFilters"
+    )[1][:120], plan
+    # ...the IN predicate reaches the parquet scan...
     assert "PushedFilters" in plan and "In(word" in plan, plan
     # ...and bucket pruning reads 1 of 8 buckets per term's bucket
     assert "SelectedBucketsCount" in plan, plan
@@ -102,7 +106,7 @@ BASE = "srvidx"
 @pytest.fixture(scope="module")
 def served(spark):
     docs = load_table(spark, SF_ORACLE, "documents")
-    srv.store_search_index(docs, BASE, n_buckets=8, chunk_size=16)
+    srv.store_search_index(docs, BASE, n_buckets=8)
     return docs
 
 
@@ -198,9 +202,9 @@ def test_attach_reregisters_stored_tables_after_catalog_loss(spark, served):
 
     # simulate a fresh session: drop every catalog entry (external
     # tables -> data files stay on disk)
-    for suffix in ("_chunks", "_positions", "_doclen", "_stats"):
+    for suffix in ("_positions", "_doclen", "_stats"):
         spark.sql(f"DROP TABLE {BASE}{suffix}")
-    assert not spark.catalog.tableExists(f"{BASE}_chunks")
+    assert not spark.catalog.tableExists(f"{BASE}_positions")
 
     srv.attach_search_index(spark, BASE)
     got = srv.bm25_search_stored(spark, BASE, q, k=10)
@@ -222,9 +226,9 @@ def test_extend_search_index_equals_full_rebuild(spark):
     first = docs.where(F.col("doc_id") < 30)
     rest = docs.where(F.col("doc_id") >= 30)
 
-    srv.store_search_index(first, "incidx", n_buckets=4, chunk_size=16)
+    srv.store_search_index(first, "incidx", n_buckets=4)
     srv.extend_search_index(spark, "incidx", rest)
-    srv.store_search_index(docs, "fullidx", n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, "fullidx", n_buckets=4)
 
     q = "spark query hash"
     assert _rows(srv.bm25_search_stored(spark, "incidx", q)) == _rows(
@@ -240,8 +244,8 @@ def test_extend_search_index_equals_full_rebuild(spark):
         srv.proximity_search_stored(spark, "incidx", "spark", "query")
     ) == _rows(srv.proximity_search_stored(spark, "fullidx", "spark", "query"))
     assert _rows(
-        srv.lookup_stored_terms(spark, "incidx_chunks", ["spark", "query"])
-    ) == _rows(srv.lookup_stored_terms(spark, "fullidx_chunks", ["spark", "query"]))
+        srv.stored_term_postings(spark, "incidx", ["spark", "query"])
+    ) == _rows(srv.stored_term_postings(spark, "fullidx", ["spark", "query"]))
 
     # the appended positions table still bucket-prunes
     plan = _plan(srv.bm25_search_stored(spark, "incidx", q))
@@ -257,7 +261,7 @@ def test_extend_search_index_equals_full_rebuild(spark):
 def test_extend_rejects_duplicate_doc_ids(spark):
     docs = load_table(spark, SF_ORACLE, "documents")
     srv.store_search_index(
-        docs.where(F.col("doc_id") < 20), "dupidx", n_buckets=4, chunk_size=16
+        docs.where(F.col("doc_id") < 20), "dupidx", n_buckets=4
     )
     with pytest.raises(ValueError, match="append-only"):
         srv.extend_search_index(

@@ -87,7 +87,7 @@ def test_mlt_stored_lifecycle_matches_scan(spark):
 
     base = "mltstore"
     docs = load_table(spark, SF_ORACLE, "documents").where(F.col("doc_id") < 80)
-    srv.store_search_index(docs, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base, n_buckets=4)
     assert srv.norms_current(spark, base)
     assert _rows(srv.mlt_search_stored(spark, base, 7, k=10)) == _rows(
         more_like_this(docs, 7, k=10)
@@ -96,7 +96,7 @@ def test_mlt_stored_lifecycle_matches_scan(spark):
     new = load_table(spark, SF_ORACLE, "documents").where(
         (F.col("doc_id") >= 80) & (F.col("doc_id") < 120)
     )
-    srv.extend_search_index(spark, base, new)  # NON-deferred still stales norms
+    srv.extend_search_index(spark, base, new)  # every extend stales norms
     assert not srv.norms_current(spark, base)
     combined = docs.unionByName(new)
     stale = _rows(srv.mlt_search_stored(spark, base, 7, k=10))
@@ -116,7 +116,7 @@ def test_mlt_stored_missing_doc_is_loud(spark):
 
     base = "mltmiss"
     docs = load_table(spark, SF_ORACLE, "documents").where(F.col("doc_id") < 40)
-    srv.store_search_index(docs, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base, n_buckets=4)
     with pytest.raises(ValueError, match="no weighted terms"):
         srv.mlt_search_stored(spark, base, 99999, k=3)
 
@@ -132,10 +132,10 @@ def test_mlt_stored_norms_rebuild_is_bit_identical(spark):
     b = load_table(spark, SF_ORACLE, "documents").where(
         (F.col("doc_id") >= 50) & (F.col("doc_id") < 90)
     )
-    srv.store_search_index(a, "mltinc", n_buckets=4, chunk_size=16)
+    srv.store_search_index(a, "mltinc", n_buckets=4)
     srv.extend_search_index(spark, "mltinc", b)
     srv.compact_search_index(spark, "mltinc")
-    srv.store_search_index(a.unionByName(b), "mltref", n_buckets=4, chunk_size=16)
+    srv.store_search_index(a.unionByName(b), "mltref", n_buckets=4)
     got = sorted(tuple(r) for r in spark.table("mltinc_norms").collect())
     want = sorted(tuple(r) for r in spark.table("mltref_norms").collect())
     assert got == want

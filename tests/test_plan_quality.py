@@ -146,10 +146,9 @@ def test_boolean_search_single_scan(spark):
     part's vocabulary + postings passes (deletion_variants is one
     linear lineage — a union-of-rounds shape would re-scan the
     vocabulary per round). Stored-read budget, exactly SIX, none
-    touching the corpus parquet: bucket-pruned chunks reads for
-    AND/OR/NOT, prefix_stored, suffix_stored, and fuzzy_stored's
-    postings fetches, plus the letter-pruned positions reads for the
-    stored phrase and stored slop. (fuzzy_stored's and suffix's
+    touching the corpus parquet, all of them letter-pruned positions
+    reads: AND/OR/NOT, prefix_stored, suffix_stored's and fuzzy_stored's
+    postings fetches, the stored phrase and the stored slop. (fuzzy_stored's and suffix's
     vocabulary passes collect eagerly at build time — neighborhood-
     bounded driver scalars — so they are not in this plan.)"""
     plan = _spec_plan(spark, "boolean_search")
@@ -163,13 +162,12 @@ def test_boolean_search_single_scan(spark):
     # corpus: fused boolean, phrase, slop, prefix, suffix,
     # fuzzy vocab+postings
     assert _count_scans(plan) - len(stored) == 7, plan
-    # stored: chunks x4 (boolean, prefix_stored, suffix_stored fetch,
-    # fuzzy_stored fetch) + positions x2 (phrase_stored, slop_stored);
-    # the suffix/fuzzy vocabulary passes collect eagerly at build time
-    # and are not in this plan
+    # stored: positions x6 (boolean, prefix_stored, suffix_stored
+    # fetch, fuzzy_stored fetch, phrase_stored, slop_stored); the
+    # suffix/fuzzy vocabulary passes collect eagerly at build time and
+    # are not in this plan
     assert len(stored) == 6, stored
-    assert sum("_chunks" in t for t in stored) == 4, stored
-    assert sum("_positions" in t for t in stored) == 2, stored
+    assert sum("_positions" in t for t in stored) == 6, stored
     assert _count_exchanges(plan) <= 24, plan
 
 

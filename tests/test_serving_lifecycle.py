@@ -1,9 +1,10 @@
 """Serving-store LIFECYCLE durability (round-5 hardening of the two
 round-4 defects): the sidecar corpus fingerprint must catch a
 regenerated corpus at the same path (stale-store detection + rebuild),
-and the chunk swap in extend_search_index must survive a crash at any
-point without destroying the only copy of the chunks table. The torn-
-extend marker makes a mid-extend crash detectable (ADVICE round 4)."""
+and the atomic table swap compaction uses (norms, rwords) must survive
+a crash at any point without destroying the only copy of the table.
+The torn-extend marker makes a mid-extend crash detectable (ADVICE
+round 4)."""
 
 from __future__ import annotations
 
@@ -18,7 +19,10 @@ from parallel_inverted_index_map_reduce_spark.operators import serving as srv
 from parallel_inverted_index_map_reduce_spark.operators.bucketing import (
     table_location,
 )
-from parallel_inverted_index_map_reduce_spark.operators.index import bm25_search
+from parallel_inverted_index_map_reduce_spark.operators.index import (
+    bm25_search,
+    more_like_this,
+)
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
 from .conftest import SF_ORACLE
@@ -42,7 +46,7 @@ def _docs_v2(spark):
 
 def _drop_tables(spark, base):
     """Simulate a fresh session: catalog forgets, files stay."""
-    for sfx in ("_chunks", "_positions", "_doclen", "_stats"):
+    for sfx in ("_positions", "_doclen", "_norms", "_stats"):
         spark.sql(f"DROP TABLE IF EXISTS {base}{sfx}")
 
 
@@ -68,12 +72,12 @@ def test_stale_store_detected_and_rebuilt(spark):
     scenario ADVICE flagged for ranked_retrieval's reuse path."""
     base = "lcstale"
     v1, v2 = _docs_v1(spark), _docs_v2(spark)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v1, base, n_buckets=4)
     assert srv.verify_search_index(spark, base, v1)
     assert not srv.verify_search_index(spark, base, v2)
 
     _drop_tables(spark, base)  # fresh-session attach
-    srv.ensure_search_index(v2, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v2, base, n_buckets=4)
     # rebuilt: fingerprint now matches v2, and served answers are v2's
     assert srv.verify_search_index(spark, base, v2)
     got = _rows(srv.bm25_search_stored(spark, base, "regen", k=5))
@@ -86,10 +90,10 @@ def test_same_session_reuse_skips_rebuild(spark):
     (the plan-sweep fast path must not pay a verify scan or rebuild)."""
     base = "lcreuse"
     v1 = _docs_v1(spark)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
-    loc = table_location(spark, f"{base}_chunks")
+    srv.ensure_search_index(v1, base, n_buckets=4)
+    loc = table_location(spark, f"{base}_positions")
     mtime = os.path.getmtime(loc)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v1, base, n_buckets=4)
     assert os.path.getmtime(loc) == mtime
 
 
@@ -98,7 +102,7 @@ def test_unfingerprinted_legacy_sidecar_rebuilds_on_attach(spark):
     ensure must rebuild rather than trust it."""
     base = "lclegacy"
     v1 = _docs_v1(spark)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v1, base, n_buckets=4)
     meta_path = srv._meta_path(spark, base)
     with open(meta_path) as fh:
         meta = json.load(fh)
@@ -106,7 +110,7 @@ def test_unfingerprinted_legacy_sidecar_rebuilds_on_attach(spark):
     with open(meta_path, "w") as fh:
         json.dump(meta, fh)
     _drop_tables(spark, base)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v1, base, n_buckets=4)
     assert srv.verify_search_index(spark, base, v1)
 
 
@@ -119,7 +123,7 @@ def test_extend_updates_fingerprint_incrementally(spark):
     first = docs.where(F.col("doc_id") < 40)
     batch = docs.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 70))
     both = docs.where(F.col("doc_id") < 70)
-    srv.store_search_index(first, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(first, base, n_buckets=4)
     srv.extend_search_index(spark, base, batch)
     assert not srv.extend_in_progress(spark, base)
     assert srv.verify_search_index(spark, base, both)
@@ -131,11 +135,11 @@ def test_torn_extend_is_detected_and_rebuilt(spark):
     verify refuses, ensure rebuilds, marker cleared."""
     base = "lctorn"
     v1 = _docs_v1(spark)
-    srv.store_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(v1, base, n_buckets=4)
     srv._write_extend_marker(spark, base, {"n_new_docs": 99})
     assert srv.extend_in_progress(spark, base)
     assert not srv.verify_search_index(spark, base, v1)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v1, base, n_buckets=4)
     assert not srv.extend_in_progress(spark, base)
     assert srv.verify_search_index(spark, base, v1)
 
@@ -147,7 +151,7 @@ def test_crashed_rebuild_leaves_no_attachable_sidecar(spark):
     fingerprint still matches beside half-written tables."""
     base = "lcrebuild"
     v1 = _docs_v1(spark)
-    srv.store_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(v1, base, n_buckets=4)
     assert os.path.exists(srv._meta_path(spark, base))
 
     import parallel_inverted_index_map_reduce_spark.operators.serving as serving_mod
@@ -160,7 +164,7 @@ def test_crashed_rebuild_leaves_no_attachable_sidecar(spark):
     serving_mod.write_bucketed = crashing_write
     try:
         with pytest.raises(OSError, match="mid-rebuild"):
-            srv.store_search_index(v1, base, n_buckets=4, chunk_size=16)
+            srv.store_search_index(v1, base, n_buckets=4)
     finally:
         serving_mod.write_bucketed = real
 
@@ -169,86 +173,102 @@ def test_crashed_rebuild_leaves_no_attachable_sidecar(spark):
     _drop_tables(spark, base)
     with pytest.raises(FileNotFoundError):
         srv.attach_search_index(spark, base)
-    srv.ensure_search_index(v1, base, n_buckets=4, chunk_size=16)
+    srv.ensure_search_index(v1, base, n_buckets=4)
     assert srv.verify_search_index(spark, base, v1)
 
 
-def test_chunk_swap_crash_windows_never_lose_chunks(spark):
+def _data_files(loc):
+    """path -> mtime of every data file under a table directory (commit
+    markers like _SUCCESS are rewritten by every append, so skipped)."""
+    return {
+        os.path.join(root, f): os.path.getmtime(os.path.join(root, f))
+        for root, _dirs, files in os.walk(loc)
+        for f in files
+        if not f.startswith(("_", "."))
+    }
+
+
+def _split(spark):
+    docs = load_table(spark, SF_ORACLE, "documents")
+    first = docs.where(F.col("doc_id") < 40)
+    batch = docs.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 70))
+    both = docs.where(F.col("doc_id") < 70)
+    return first, batch, both
+
+
+def test_swap_crash_windows_never_lose_norms(spark):
     """Simulate every on-disk state the swap protocol can crash in and
-    prove recover_chunks_swap restores a complete, queryable chunks
+    prove recover_table_swaps restores a complete, queryable norms
     table each time."""
     base = "lcswap"
     v1 = _docs_v1(spark)
-    srv.store_search_index(v1, base, n_buckets=4, chunk_size=16)
-    loc, next_loc, old_loc = srv._chunks_swap_paths(spark, base)
-    want = _rows(spark.table(f"{base}_chunks"))
+    srv.store_search_index(v1, base, n_buckets=4)
+    loc, next_loc, old_loc = srv._swap_paths(spark, base, "_norms")
+    want = _rows(spark.table(f"{base}_norms"))
     n = 4
 
     # state A: crash during the __next write (live intact, partial next)
     os.makedirs(next_loc, exist_ok=True)
-    srv.recover_chunks_swap(spark, base)
+    srv.recover_table_swaps(spark, base)
     assert os.path.isdir(loc) and not os.path.isdir(next_loc)
 
     # state B: crash after live -> __old rename, before publish
-    spark.sql(f"DROP TABLE IF EXISTS {base}_chunks")
+    spark.sql(f"DROP TABLE IF EXISTS {base}_norms")
     shutil.copytree(loc, next_loc)  # a COMPLETE new version
     os.rename(loc, old_loc)
-    srv.recover_chunks_swap(spark, base)
+    srv.recover_table_swaps(spark, base)
     assert os.path.isdir(loc) and not os.path.isdir(next_loc)
     assert not os.path.isdir(old_loc)
     srv._create_stored_table(
-        spark, f"{base}_chunks", srv._bucketed_specs(base)[f"{base}_chunks"], n
+        spark, f"{base}_norms", srv._bucketed_specs(base)[f"{base}_norms"], n
     )
-    assert _rows(spark.table(f"{base}_chunks")) == want
+    assert _rows(spark.table(f"{base}_norms")) == want
 
     # state C: crash after publish, before __old cleanup
     shutil.copytree(loc, old_loc)
-    srv.recover_chunks_swap(spark, base)
+    srv.recover_table_swaps(spark, base)
     assert os.path.isdir(loc) and not os.path.isdir(old_loc)
-    assert _rows(spark.table(f"{base}_chunks")) == want
+    assert _rows(spark.table(f"{base}_norms")) == want
 
     # attach path also runs recovery (fresh session after a crash)
     _drop_tables(spark, base)
     shutil.copytree(loc, next_loc)
     shutil.rmtree(loc)  # live missing + complete __next
     srv.attach_search_index(spark, base)
-    assert _rows(spark.table(f"{base}_chunks")) == want
+    assert _rows(spark.table(f"{base}_norms")) == want
 
 
-def test_extend_crash_inside_chunk_swap_is_recoverable(spark):
-    """Inject a crash at the most dangerous instant of extend — after
-    the old chunks directory is moved aside, before the publish rename
-    — then prove ensure_search_index recovers to a consistent store
-    with the extend's answers intact after roll-forward + rebuild."""
+def test_extend_crash_at_append_is_recoverable(spark, monkeypatch):
+    """Inject a crash in the middle of extend's appends — positions
+    already hold the batch, docterms/stats/sidecar do not — then prove
+    the marker flags the torn store and ensure_search_index rebuilds it
+    to a consistent store with the extend's answers intact."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     base = "lccrash"
-    docs = load_table(spark, SF_ORACLE, "documents")
-    first = docs.where(F.col("doc_id") < 40)
-    batch = docs.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 70))
-    both = docs.where(F.col("doc_id") < 70)
-    srv.store_search_index(first, base, n_buckets=4, chunk_size=16)
+    first, batch, both = _split(spark)
+    srv.store_search_index(first, base, n_buckets=4)
 
-    real_rename = os.rename
-    loc, next_loc, old_loc = srv._chunks_swap_paths(spark, base)
+    real_save = DataFrameWriter.saveAsTable
 
-    def crashing_rename(src, dst):
-        if dst == loc:  # the publish rename
-            raise OSError("injected crash at the publish point")
-        return real_rename(src, dst)
+    def crashing_save(self, name, *a, **kw):
+        if name == f"{base}_docterms":
+            raise OSError("injected crash at an append")
+        return real_save(self, name, *a, **kw)
 
-    srv.os.rename = crashing_rename
-    try:
-        with pytest.raises(OSError, match="injected crash"):
-            srv.extend_search_index(spark, base, batch)
-    finally:
-        srv.os.rename = real_rename
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", crashing_save)
+    with pytest.raises(OSError, match="injected crash"):
+        srv.extend_search_index(spark, base, batch)
+    monkeypatch.undo()
 
-    # torn: marker present, live chunks dir missing, __next complete
+    # torn: marker present, so neither corpus verifies
     assert srv.extend_in_progress(spark, base)
-    assert not os.path.isdir(loc) and os.path.isdir(next_loc)
+    assert not srv.verify_search_index(spark, base, first)
+    assert not srv.verify_search_index(spark, base, both)
 
-    # recovery: roll the swap forward, then the marker forces a rebuild
-    # from the caller's (extended) corpus; answers match a clean build
-    srv.ensure_search_index(both, base, n_buckets=4, chunk_size=16)
+    # recovery: the marker forces a rebuild from the caller's
+    # (extended) corpus; answers match a clean build
+    srv.ensure_search_index(both, base, n_buckets=4)
     assert not srv.extend_in_progress(spark, base)
     assert srv.verify_search_index(spark, base, both)
     got = _rows(srv.bm25_search_stored(spark, base, "spark query", k=5))
@@ -256,118 +276,151 @@ def test_extend_crash_inside_chunk_swap_is_recoverable(spark):
     assert got == want
 
 
-def test_deferred_extend_skips_chunk_rewrite_and_stays_correct(spark):
-    """defer_chunks=True must not touch the chunks table's files at all
-    (the whole point: the ONE store-proportional cost removed), while
-    every query path stays correct via the positions fallback, and
-    BM25 — which never read chunks — is unaffected."""
-    base = "lcdefer"
-    docs = load_table(spark, SF_ORACLE, "documents")
-    first = docs.where(F.col("doc_id") < 40)
-    batch = docs.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 70))
-    both = docs.where(F.col("doc_id") < 70)
-    srv.store_search_index(first, base, n_buckets=4, chunk_size=16)
+def test_compact_crash_at_norms_publish_is_recoverable(spark, monkeypatch):
+    """Inject a crash at the most dangerous instant of compaction —
+    after the old norms directory is moved aside, before the publish
+    rename — then prove a fresh-session attach rolls the swap forward
+    and the store keeps answering correctly until the next compaction
+    heals the flag."""
+    base = "lcnormcrash"
+    first, batch, both = _split(spark)
+    srv.store_search_index(first, base, n_buckets=4)
+    srv.extend_search_index(spark, base, batch)
+    loc, next_loc, _old = srv._swap_paths(spark, base, "_norms")
 
-    loc = table_location(spark, f"{base}_chunks")
-    before = sorted(os.listdir(loc))
-    mtimes = {
-        f: os.path.getmtime(os.path.join(loc, f)) for f in before
-    }
-    srv.extend_search_index(spark, base, batch, defer_chunks=True)
-    assert sorted(os.listdir(loc)) == before
-    assert {
-        f: os.path.getmtime(os.path.join(loc, f)) for f in before
-    } == mtimes
-    assert not srv.chunks_current(spark, base)
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if dst == loc:  # the publish rename
+            raise OSError("injected crash at the publish point")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(srv.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        srv.compact_search_index(spark, base)
+    monkeypatch.undo()
+
+    # live norms dir missing, __next complete, flag still stale
+    assert not os.path.isdir(loc) and os.path.isdir(next_loc)
+    assert not srv.norms_current(spark, base)
+
+    _drop_tables(spark, base)  # fresh session after the crash
+    srv.attach_search_index(spark, base)
+    assert os.path.isdir(loc) and not os.path.isdir(next_loc)
+    assert srv.verify_search_index(spark, base, both)
+    want = _rows(more_like_this(both, 7, k=5))
+    assert _rows(srv.mlt_search_stored(spark, base, 7, k=5)) == want
+
+    srv.compact_search_index(spark, base)  # heals
+    assert srv.norms_current(spark, base)
+    assert _rows(srv.mlt_search_stored(spark, base, 7, k=5)) == want
+
+
+def test_extend_appends_without_rewriting_and_stays_correct(spark):
+    """A plain extend rewrites no stored file: every positions file
+    written by the build survives byte-for-byte (same paths, same
+    mtimes) and the batch lands as new files, while term lookups and
+    BM25 answer over the full corpus the instant the extend commits."""
+    base = "lcappend"
+    first, batch, both = _split(spark)
+    srv.store_search_index(first, base, n_buckets=4)
+
+    loc = table_location(spark, f"{base}_positions")
+    before = _data_files(loc)
+    srv.extend_search_index(spark, base, batch)
+    after = _data_files(loc)
+    assert {f: after.get(f) for f in before} == before
+    assert len(after) > len(before)
+    assert not srv.norms_current(spark, base)
     assert not srv.extend_in_progress(spark, base)
     assert srv.verify_search_index(spark, base, both)
 
+    from parallel_inverted_index_map_reduce_spark.operators.index import (
+        build_index,
+    )
+
+    terms = ["spark", "query", "zzznotaword"]
+    want = _rows(
+        build_index(both)
+        .where(F.col("word").isin(terms))
+        .select("letter", "word", "df", "postings")
+    )
+    assert _rows(srv.stored_term_postings(spark, base, terms)) == want
     got = _rows(srv.bm25_search_stored(spark, base, "spark query", k=5))
     assert got == _rows(bm25_search(both, "spark query", k=5))
 
 
 def test_compact_noop_when_current(spark):
     base = "lcnoop"
-    srv.store_search_index(_docs_v1(spark), base, n_buckets=4, chunk_size=16)
-    loc = table_location(spark, f"{base}_chunks")
-    before = sorted(os.listdir(loc))
+    srv.store_search_index(_docs_v1(spark), base, n_buckets=4)
+    before = {
+        sfx: _data_files(table_location(spark, f"{base}{sfx}"))
+        for sfx in ("_norms", "_rwords")
+    }
     srv.compact_search_index(spark, base)
-    assert sorted(os.listdir(loc)) == before
-    assert srv.chunks_current(spark, base)
+    assert {
+        sfx: _data_files(table_location(spark, f"{base}{sfx}"))
+        for sfx in ("_norms", "_rwords")
+    } == before
+    assert srv.norms_current(spark, base)
 
 
-def test_compact_crash_after_swap_keeps_positions_path(spark):
-    """Crash between the atomic chunk swap and the sidecar flag flip:
-    the fresh chunks are on disk but still flagged stale. That state
-    must (a) keep answering correctly (positions path), (b) verify
-    clean, and (c) heal on the next compaction."""
-    from parallel_inverted_index_map_reduce_spark.operators.index import (
-        boolean_search,
-    )
-
+def test_compact_crash_after_norms_swap_keeps_fallback_path(spark):
+    """Crash between the atomic norms swap and the sidecar flag flip:
+    the fresh norms are on disk but still flagged stale. That state
+    must (a) keep answering correctly (norms recomputed per query),
+    (b) verify clean, and (c) heal on the next compaction."""
     base = "lccompactcrash"
-    docs = load_table(spark, SF_ORACLE, "documents")
-    first = docs.where(F.col("doc_id") < 40)
-    batch = docs.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 70))
-    both = docs.where(F.col("doc_id") < 70)
-    srv.store_search_index(first, base, n_buckets=4, chunk_size=16)
-    srv.extend_search_index(spark, base, batch, defer_chunks=True)
+    first, batch, both = _split(spark)
+    srv.store_search_index(first, base, n_buckets=4)
+    srv.extend_search_index(spark, base, batch)
 
-    real_replace = srv._replace_chunks_atomic
+    real_replace = srv._replace_table_atomic
 
-    def replace_then_crash(*a, **kw):
-        real_replace(*a, **kw)
-        raise OSError("injected crash after the swap, before the flag")
+    def replace_then_crash(spark_, base_, suffix, *a, **kw):
+        real_replace(spark_, base_, suffix, *a, **kw)
+        if suffix == "_norms":
+            raise OSError("injected crash after the swap, before the flag")
 
-    srv._replace_chunks_atomic = replace_then_crash
+    srv._replace_table_atomic = replace_then_crash
     try:
         with pytest.raises(OSError, match="injected crash"):
             srv.compact_search_index(spark, base)
     finally:
-        srv._replace_chunks_atomic = real_replace
+        srv._replace_table_atomic = real_replace
 
-    # fresh chunks on disk, flag still stale -> positions path serves
-    assert not srv.chunks_current(spark, base)
+    # fresh norms on disk, flag still stale -> recompute path serves
+    assert not srv.norms_current(spark, base)
     assert srv.verify_search_index(spark, base, both)
-    want = sorted(
-        (r["op"], tuple(r["doc_ids"]))
-        for r in boolean_search(both, "spark", "query").collect()
-    )
-    got = sorted(
-        (r["op"], tuple(r["doc_ids"]))
-        for r in srv.boolean_search_stored(spark, base, "spark", "query").collect()
-    )
-    assert got == want
+    want = _rows(more_like_this(both, 7, k=5))
+    assert _rows(srv.mlt_search_stored(spark, base, 7, k=5)) == want
 
     srv.compact_search_index(spark, base)  # heals
-    assert srv.chunks_current(spark, base)
-    got2 = sorted(
-        (r["op"], tuple(r["doc_ids"]))
-        for r in srv.boolean_search_stored(spark, base, "spark", "query").collect()
-    )
-    assert got2 == want
+    assert srv.norms_current(spark, base)
+    assert _rows(srv.mlt_search_stored(spark, base, 7, k=5)) == want
 
 
-def test_nondeferred_extend_on_stale_store_catches_up(spark):
-    """A plain extend after a deferred one must fold the catch-up in:
-    chunks rebuild from (positions + batch), never an incremental merge
-    against the lagging chunks that would resurrect a pre-deferral
-    view. Proven by comparing against a from-scratch store of the full
-    corpus."""
-    base = "lccatchup"
+def test_successive_extends_equal_full_rebuild(spark):
+    """Two extends in a row must leave the store answering exactly what
+    a from-scratch store of the full corpus answers — every word's
+    posting list, served from the appended positions table."""
+    base = "lcsucc"
     docs = load_table(spark, SF_ORACLE, "documents")
     a = docs.where(F.col("doc_id") < 30)
     b = docs.where((F.col("doc_id") >= 30) & (F.col("doc_id") < 55))
     c = docs.where((F.col("doc_id") >= 55) & (F.col("doc_id") < 80))
     full = docs.where(F.col("doc_id") < 80)
-    srv.store_search_index(a, base, n_buckets=4, chunk_size=16)
-    srv.extend_search_index(spark, base, b, defer_chunks=True)
-    srv.extend_search_index(spark, base, c)  # catch-up
-    assert srv.chunks_current(spark, base)
+    srv.store_search_index(a, base, n_buckets=4)
+    srv.extend_search_index(spark, base, b)
+    srv.extend_search_index(spark, base, c)
     assert srv.verify_search_index(spark, base, full)
 
-    ref = "lccatchupref"
-    srv.store_search_index(full, ref, n_buckets=4, chunk_size=16)
-    assert _rows(spark.table(f"{base}_chunks")) == _rows(
-        spark.table(f"{ref}_chunks")
+    ref = "lcsuccref"
+    srv.store_search_index(full, ref, n_buckets=4)
+    words = [
+        r["word"]
+        for r in spark.table(f"{ref}_positions").select("word").distinct().collect()
+    ]
+    assert _rows(srv.stored_term_postings(spark, base, words)) == _rows(
+        srv.stored_term_postings(spark, ref, words)
     )

@@ -18,9 +18,6 @@ from parallel_inverted_index_map_reduce_spark.streaming import serving_stream as
 
 from .conftest import SF_ORACLE
 
-CHUNK = 32
-
-
 def _rows(df):
     return sorted(
         tuple(tuple(v) if isinstance(v, list) else v for v in r)
@@ -41,7 +38,7 @@ def test_streamed_serving_converges_and_serves(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = svs.start_incremental_serving(stream, store, ckpt, chunk_size=CHUNK)
+    q = svs.start_incremental_serving(stream, store, ckpt)
     assert q.awaitTermination(420), "stream did not finish"
     assert len(svs.eo.committed_batch_dirs(store)) == 3
 
@@ -104,7 +101,7 @@ def test_streamed_serving_crash_before_marker_recovers(
             .parquet(src)
         )
 
-    q = svs.start_incremental_serving(_stream(), store, ckpt, chunk_size=CHUNK)
+    q = svs.start_incremental_serving(_stream(), store, ckpt)
     try:
         q.awaitTermination(420)
     except Exception:
@@ -117,7 +114,7 @@ def test_streamed_serving_crash_before_marker_recovers(
     assert svs.read_serving_version(spark, store) is not None
 
     # same-checkpoint restart redelivers the failed batch and converges
-    q2 = svs.start_incremental_serving(_stream(), store, ckpt, chunk_size=CHUNK)
+    q2 = svs.start_incremental_serving(_stream(), store, ckpt)
     assert q2.awaitTermination(420)
     got = svs.bm25_search_version(spark, store, "spark query hash")
     want = bm25_search(docs, "spark query hash")

@@ -96,7 +96,7 @@ def test_plain_sql_bm25_over_the_attached_serving_store(spark):
     from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    srv.store_search_index(docs, "sqlidx", n_buckets=4, chunk_size=64)
+    srv.store_search_index(docs, "sqlidx", n_buckets=4)
 
     terms = ("hash", "query", "spark")
     st = spark.table("sqlidx_stats").first()

@@ -8,7 +8,7 @@ after the exact levenshtein verify the result must equal the brute-force
 "levenshtein over the whole vocabulary" formulation on EVERY corpus.
 That equality is asserted here on the oracle corpus and on randomized
 mutation corpora; the stored forms are asserted row-identical to the
-scan forms (fresh store, stale-chunks store, and compacted store)."""
+scan forms (fresh store, extended store, and compacted store)."""
 
 from __future__ import annotations
 
@@ -163,7 +163,7 @@ def test_fuzzy_rejects_bad_args(spark):
 
 
 # --------------------------------------------------------------------------
-# stored forms: fresh store, stale-chunks store, compacted store
+# stored forms: fresh store, extended store, compacted store
 # --------------------------------------------------------------------------
 
 
@@ -171,7 +171,7 @@ def test_fuzzy_rejects_bad_args(spark):
 def vocab_store(spark):
     base = "vocstore"
     docs = _docs(spark)
-    srv.store_search_index(docs, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base, n_buckets=4)
     return base, docs
 
 
@@ -215,45 +215,55 @@ def test_fuzzy_stored_no_match_is_empty(spark, vocab_store):
     assert srv.fuzzy_term_search_stored(spark, base, "zzzzqqq").count() == 0
 
 
-def test_stored_paths_follow_deferred_extend(spark, vocab_store):
-    """After a deferred-chunks extend the chunks table lags; prefix,
-    fuzzy, and boolean stored paths must answer from positions —
-    correct over the FULL corpus — and return to the chunk path after
-    compaction with identical answers."""
+def test_stored_paths_follow_extend(spark, vocab_store):
+    """Right after a plain extend, the term, prefix, fuzzy, and boolean
+    stored paths must answer over the FULL corpus — the batch's new
+    docs included — and keep identical answers after compaction."""
     from parallel_inverted_index_map_reduce_spark.operators.index import (
         boolean_search,
+        build_index,
     )
 
-    base = "vocdefer"
+    base = "vocextend"
     docs = _docs(spark)
-    srv.store_search_index(docs, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base, n_buckets=4)
     new = (
         load_table(spark, SF_ORACLE, "documents")
         .where((F.col("doc_id") >= 60) & (F.col("doc_id") < 90))
     )
-    srv.extend_search_index(spark, base, new, defer_chunks=True)
-    assert not srv.chunks_current(spark, base)
+    srv.extend_search_index(spark, base, new)
     combined = docs.unionByName(new)
-    # a deferred extend is NOT a torn store: it verifies clean
+    # an extend leaves only norms stale, never a torn store
     assert srv.verify_search_index(spark, base, combined)
 
-    stale_prefix = _rows(srv.prefix_search_stored(spark, base, "s"))
-    assert stale_prefix == _rows(prefix_search(combined, "s"))
-    stale_fuzzy = _rows(srv.fuzzy_term_search_stored(spark, base, "sow"))
-    assert stale_fuzzy == _rows(fuzzy_term_search(combined, "sow"))
-    stale_bool = sorted(
+    # the batch's words are served with the batch's docs at once
+    new_words = [
+        r["word"] for r in build_index(new).orderBy("word").limit(3).collect()
+    ]
+    got = _rows(srv.stored_term_postings(spark, base, new_words))
+    assert got == _rows(
+        build_index(combined)
+        .where(F.col("word").isin(new_words))
+        .select("letter", "word", "df", "postings")
+    )
+    assert len(got) == 3 and all(max(p) >= 60 for *_, p in got)
+    ext_prefix = _rows(srv.prefix_search_stored(spark, base, "s"))
+    assert ext_prefix == _rows(prefix_search(combined, "s"))
+    ext_fuzzy = _rows(srv.fuzzy_term_search_stored(spark, base, "sow"))
+    assert ext_fuzzy == _rows(fuzzy_term_search(combined, "sow"))
+    ext_bool = sorted(
         (r["op"], tuple(r["doc_ids"]))
         for r in srv.boolean_search_stored(spark, base, "spark", "query").collect()
     )
-    assert stale_bool == sorted(
+    assert ext_bool == sorted(
         (r["op"], tuple(r["doc_ids"]))
         for r in boolean_search(combined, "spark", "query").collect()
     )
 
     srv.compact_search_index(spark, base)
-    assert srv.chunks_current(spark, base)
-    assert _rows(srv.prefix_search_stored(spark, base, "s")) == stale_prefix
-    assert _rows(srv.fuzzy_term_search_stored(spark, base, "sow")) == stale_fuzzy
+    assert srv.norms_current(spark, base)
+    assert _rows(srv.prefix_search_stored(spark, base, "s")) == ext_prefix
+    assert _rows(srv.fuzzy_term_search_stored(spark, base, "sow")) == ext_fuzzy
     assert (
         sorted(
             (r["op"], tuple(r["doc_ids"]))
@@ -261,7 +271,7 @@ def test_stored_paths_follow_deferred_extend(spark, vocab_store):
                 spark, base, "spark", "query"
             ).collect()
         )
-        == stale_bool
+        == ext_bool
     )
 
 
@@ -437,7 +447,7 @@ def test_suffix_search_matches_brute_filter(spark):
         suffix_search(docs, "two words")
 
 
-def test_suffix_stored_matches_scan_and_follows_staleness(spark, vocab_store):
+def test_suffix_stored_matches_scan_and_follows_extend(spark, vocab_store):
     from parallel_inverted_index_map_reduce_spark.operators.index import (
         suffix_search,
     )
@@ -446,13 +456,13 @@ def test_suffix_stored_matches_scan_and_follows_staleness(spark, vocab_store):
     assert _rows(srv.suffix_search_stored(spark, base, "er")) == _rows(
         suffix_search(docs, "er")
     )
-    # stale-chunks store: the vocabulary pass must come from positions
+    # extended store: the vocabulary pass must see the batch's words
     base2 = "vocsuffix"
-    srv.store_search_index(docs, base2, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base2, n_buckets=4)
     new = load_table(spark, SF_ORACLE, "documents").where(
         (F.col("doc_id") >= 60) & (F.col("doc_id") < 90)
     )
-    srv.extend_search_index(spark, base2, new, defer_chunks=True)
+    srv.extend_search_index(spark, base2, new)
     combined = docs.unionByName(new)
     assert _rows(srv.suffix_search_stored(spark, base2, "er")) == _rows(
         suffix_search(combined, "er")
@@ -522,11 +532,11 @@ def test_compact_dedupes_rwords_after_extends(spark):
 
     base = "vocrdedup"
     docs = _docs(spark)
-    srv.store_search_index(docs, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base, n_buckets=4)
     new = load_table(spark, SF_ORACLE, "documents").where(
         (F.col("doc_id") >= 60) & (F.col("doc_id") < 90)
     )
-    srv.extend_search_index(spark, base, new, defer_chunks=True)
+    srv.extend_search_index(spark, base, new)
     combined = docs.unionByName(new)
     n_distinct = (
         tokens_df(combined).select("word").distinct().count()
@@ -604,7 +614,7 @@ def _plan_of(df):
 def test_vocab_cap_semi_join_branch_row_identical(spark, vocab_store):
     """cap=0 forces the collect-free semi-join fallback; it must be
     row-identical to the literal-IN fast path for suffix AND fuzzy, on
-    a current-chunks store."""
+    a freshly built store."""
     base, _ = vocab_store
     for sfx in ("er", "s"):
         assert _rows(srv.suffix_search_stored(spark, base, sfx, cap=0)) == _rows(
@@ -616,24 +626,28 @@ def test_vocab_cap_semi_join_branch_row_identical(spark, vocab_store):
         ) == _rows(srv.fuzzy_term_search_stored(spark, base, term, max_dist=d)), term
 
 
-def test_vocab_cap_semi_join_branch_follows_staleness(spark):
-    """The fallback must route to the positions table while a deferred
-    extend leaves chunks stale — identical rows to the literal path
-    over the FULL extended corpus."""
+def test_vocab_cap_semi_join_branch_follows_extend(spark):
+    """After an extend, the semi-join fallback must return rows
+    identical to the corpus-scan forms over the FULL extended corpus —
+    the batch's new docs included."""
+    from parallel_inverted_index_map_reduce_spark.operators.index import (
+        suffix_search,
+    )
+
     base = "voccap"
     docs = _docs(spark)
-    srv.store_search_index(docs, base, n_buckets=4, chunk_size=16)
+    srv.store_search_index(docs, base, n_buckets=4)
     new = load_table(spark, SF_ORACLE, "documents").where(
         (F.col("doc_id") >= 60) & (F.col("doc_id") < 90)
     )
-    srv.extend_search_index(spark, base, new, defer_chunks=True)
-    assert not srv.chunks_current(spark, base)
+    srv.extend_search_index(spark, base, new)
+    combined = docs.unionByName(new)
     assert _rows(srv.suffix_search_stored(spark, base, "er", cap=0)) == _rows(
-        srv.suffix_search_stored(spark, base, "er")
+        suffix_search(combined, "er")
     )
     assert _rows(
         srv.fuzzy_term_search_stored(spark, base, "sow", cap=0)
-    ) == _rows(srv.fuzzy_term_search_stored(spark, base, "sow"))
+    ) == _rows(fuzzy_term_search(combined, "sow"))
 
 
 def test_vocab_cap_common_case_still_prunes(spark, vocab_store):
