@@ -46,13 +46,38 @@ def write_bucketed(
     loc = table_location(spark, table)
     if os.path.isdir(loc):
         shutil.rmtree(loc)
-    writer = df.write.format("parquet").mode("overwrite").option("path", loc)
+    _bucketed_writer(
+        df, "overwrite", loc, bucket_col, n_buckets, sort_col, partition_cols
+    ).saveAsTable(table)
+
+
+def append_bucketed(
+    df: DataFrame,
+    table: str,
+    bucket_col: str,
+    n_buckets: int = 8,
+    sort_col: str | None = None,
+    partition_cols: tuple[str, ...] = (),
+) -> None:
+    """Append rows to a table :func:`write_bucketed` wrote, with the
+    same spec: Spark's bucketed writer routes the appended files into
+    the same bucket ids (filename bucket suffixes match across writes),
+    so bucket and partition pruning keep working over the union. No
+    stored file is rewritten."""
+    loc = table_location(df.sparkSession, table)
+    _bucketed_writer(
+        df, "append", loc, bucket_col, n_buckets, sort_col, partition_cols
+    ).saveAsTable(table)
+
+
+def _bucketed_writer(df, mode, loc, bucket_col, n_buckets, sort_col, partition_cols):
+    writer = df.write.format("parquet").mode(mode).option("path", loc)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer = writer.bucketBy(n_buckets, bucket_col)
     if sort_col is not None:
         writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
+    return writer
 
 
 def write_partitioned_table(

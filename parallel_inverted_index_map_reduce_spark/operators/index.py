@@ -288,84 +288,11 @@ def merge_index_chunked(
         .select("word", F.explode("postings").alias("doc_id"))
     )
     merged_pairs = old_pairs.unionByName(new_pairs).distinct()
-
-    w = Window.partitionBy("word").orderBy("doc_id")
-    rebuilt = (
-        merged_pairs.withColumn("ord", F.row_number().over(w) - 1)
-        .withColumn("chunk_id", F.floor(F.col("ord") / chunk_size))
-        .groupBy("word", "chunk_id")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("postings"))
-    )
-    w_df = Window.partitionBy("word")
-    rebuilt = (
-        rebuilt.withColumn(
-            "df", F.sum(F.size("postings")).over(w_df).cast("long")
-        )
-        .withColumn("letter", F.substring("word", 1, 1))
-        .select("letter", "word", "chunk_id", "df", "postings")
-    )
+    rebuilt = chunk_pairs(merged_pairs, chunk_size)
     if delta_only:
         return rebuilt
     untouched = stored_chunks.join(affected, "word", "left_anti")
     return untouched.unionByName(rebuilt)
-
-
-def store_chunked_index(
-    chunked: DataFrame, table: str, n_buckets: int = 8
-) -> None:
-    """Persist the chunked index partitioned by letter, bucketed +
-    sorted by word — the 100 TB serving layout with two pruning levels:
-    a letter scan prunes to one directory (PartitionFilters, the
-    reference's own 26-way layout made physical), a term lookup
-    additionally prunes to ONE bucket inside it (SelectedBucketsCount
-    1/N), and word-sorted files keep a term's chunks contiguous. Write
-    once, serve point lookups and per-letter scans without ever
-    rebuilding posting arrays.
-    """
-    from .bucketing import write_bucketed
-
-    write_bucketed(
-        chunked,
-        table,
-        "word",
-        n_buckets,
-        sort_col="word",
-        partition_cols=("letter",),
-    )
-
-
-def assemble_term_chunks(chunks: DataFrame) -> DataFrame:
-    """(letter, word, df, postings) from a (pre-filtered) slice of the
-    chunked layout: each word's chunks concatenate in chunk_id order.
-    The reassembly tail shared by point lookups and prefix scans —
-    callers prune the slice first; the per-word merge is tiny
-    (df/chunk_size rows each)."""
-    merged = chunks.groupBy("word").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_id", "postings"))),
-                lambda s: s["postings"],
-            )
-        ).alias("postings")
-    )
-    # no rank column: rank is a whole-index property, not a lookup's
-    return _with_df_letter(merged).select("letter", "word", "df", "postings")
-
-
-def lookup_stored_terms(spark, table: str, terms: list[str]) -> DataFrame:
-    """Point lookup against the stored chunked index, double-pruned:
-    the terms' derived first letters prune whole partition directories
-    (PartitionFilters), and the IN filter pushes into the parquet scan
-    (PushedFilters) AND prunes buckets, so the read cost is one
-    bucket's worth of the terms' letter directories — independent of
-    index size.
-    """
-    letters = sorted({t[0] for t in terms if t})
-    return assemble_term_chunks(
-        spark.table(table)
-        .where(F.col("letter").isin(letters))
-        .where(F.col("word").isin(terms))
-    )
 
 
 def document_frequency(docs: DataFrame) -> DataFrame:

@@ -36,6 +36,13 @@ six tables, each fact stored once:
   word-major layout cannot give a wildcard-head predicate. Its word
   column is also the vocabulary fuzzy lookup scans.
 
+Each table's columns, bucket/sort column and partition column are
+declared once, in ``_TEXT_LAYOUT``; build, extend, compaction and attach
+all write and register through it. Every table is required: a store
+older than the current layout (sidecar version < 5) or missing a table
+is refused by :func:`attach_search_index` and rebuilt by
+:func:`ensure_search_index` — there is no fallback read path.
+
 Every query operator here is proven ROW-IDENTICAL to its corpus-scan
 twin (tests/test_index_storage.py) because both share the same scoring
 or matching tail (index.py bm25_rank / phrase_adjacency_filter /
@@ -49,11 +56,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bucketing import (
+    append_bucketed,
     table_location,
     write_bucketed,
     write_partitioned_table,
@@ -68,11 +77,117 @@ from .index import (
     mlt_rank,
     normalize_query_tokens,
     phrase_adjacency_filter,
+    phrase_slop_filter,
     positional_postings,
     proximity_min_filter,
     tfidf_norms,
     tfidf_weighted,
 )
+
+# sidecar version of the layout below; attach refuses older stores
+_LAYOUT_VERSION = 5
+
+
+class _TableSpec(NamedTuple):
+    cols: str  # column DDL
+    key: str | None  # bucket AND sort column; None = unbucketed
+    part: str | None  # partition column; None = unpartitioned
+    swapped: bool = False  # compaction rebuilds it via the atomic swap
+
+
+# The text store's layout, keyed by table suffix — the ONE place that
+# says how each table is bucketed, sorted and partitioned.
+_TEXT_LAYOUT = {
+    "_positions": _TableSpec(
+        "word string, doc_id bigint, positions array<int>, tf bigint, "
+        "letter string",
+        "word",
+        "letter",
+    ),
+    "_doclen": _TableSpec("doc_id bigint, dl bigint", "doc_id", None),
+    # doc-major transpose: the query-by-document access path (one bucket
+    # per doc) the word-major tables cannot serve; tf only — no idf
+    # baked in, so it stays append-only under extends
+    "_docterms": _TableSpec(
+        "doc_id bigint, word string, tf bigint", "doc_id", None
+    ),
+    # TF-IDF vector norms; idf IS baked in, so extends flag this stale
+    # (norms_current) and compaction rebuilds it
+    "_norms": _TableSpec(
+        "doc_id bigint, n2 decimal(38,12)", "doc_id", None, swapped=True
+    ),
+    # reversed-word vocabulary companion: suffix lookup becomes prefix
+    # lookup over rword, so rletter (= the word's LAST letter) restores
+    # the directory pruning a suffix predicate cannot get from the
+    # word-major tables. Extends append the batch's words (duplicates
+    # tolerated — readers distinct); compaction dedupes
+    "_rwords": _TableSpec(
+        "rword string, word string, rletter string",
+        "rword",
+        "rletter",
+        swapped=True,
+    ),
+    "_stats": _TableSpec("n_docs bigint, avgdl double", None, None),
+}
+_TEXT_TABLES = tuple(_TEXT_LAYOUT)
+# derived tables compaction replaces via the atomic swap (every other
+# table is append-only or a one-row rewrite and never swaps)
+_SWAPPED_SUFFIXES = tuple(s for s, t in _TEXT_LAYOUT.items() if t.swapped)
+
+
+def _write_text_table(
+    df: DataFrame, base: str, suffix: str, n_buckets: int, table: str = ""
+) -> None:
+    """Overwrite ``<base><suffix>`` (or ``table``, e.g. a swap's
+    ``__next`` scratch name) with that suffix's layout."""
+    spec = _TEXT_LAYOUT[suffix]
+    table = table or f"{base}{suffix}"
+    if spec.key is None:
+        write_table(df, table)
+    else:
+        write_bucketed(
+            df, table, spec.key, n_buckets, sort_col=spec.key,
+            partition_cols=(spec.part,) if spec.part else (),
+        )
+
+
+def _append_text_table(
+    df: DataFrame, base: str, suffix: str, n_buckets: int
+) -> None:
+    """Append ``df`` to the bucketed ``<base><suffix>`` with its layout."""
+    spec = _TEXT_LAYOUT[suffix]
+    append_bucketed(
+        df, f"{base}{suffix}", spec.key, n_buckets, sort_col=spec.key,
+        partition_cols=(spec.part,) if spec.part else (),
+    )
+
+
+def _register_text_table(
+    spark: SparkSession, base: str, suffix: str, n_buckets: int
+) -> None:
+    """CREATE TABLE ... LOCATION DDL over existing external files,
+    carrying the layout's bucket/sort/partition spec so every pruning
+    property (PartitionFilters, SelectedBucketsCount, sorted files)
+    survives. A missing directory is a loud FileNotFoundError."""
+    spec = _TEXT_LAYOUT[suffix]
+    table = f"{base}{suffix}"
+    loc = table_location(spark, table)
+    if not os.path.isdir(loc):
+        raise FileNotFoundError(f"no stored data for {table} at {loc}")
+    part = f"PARTITIONED BY ({spec.part})" if spec.part else ""
+    buckets = (
+        f"CLUSTERED BY ({spec.key}) SORTED BY ({spec.key}) "
+        f"INTO {n_buckets} BUCKETS"
+        if spec.key
+        else ""
+    )
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(
+        f"CREATE TABLE {table} ({spec.cols}) USING parquet {part} {buckets} "
+        f"LOCATION '{loc}'"
+    )
+    if spec.part:
+        spark.catalog.recoverPartitions(table)
 
 
 def corpus_fingerprint(docs: DataFrame) -> dict:
@@ -108,6 +223,41 @@ def _rwords_frame(words: DataFrame) -> DataFrame:
     )
 
 
+def _positions_frame(docs: DataFrame) -> DataFrame:
+    """The stored positions rows of ``docs``: positional postings plus
+    the derived ``letter`` partition column and ``tf`` as a stored
+    column, so consumers that only need term counts (more-like-this
+    candidates, BM25) read a long column instead of materializing the
+    positions arrays."""
+    return (
+        positional_postings(docs)
+        .withColumn("tf", F.size("positions").cast("long"))
+        .withColumn("letter", F.substring("word", 1, 1))
+    )
+
+
+def _appendable_frames(pos: DataFrame) -> dict[str, DataFrame]:
+    """suffix -> rows for every table that derives from the (pinned)
+    positions frame alone — the tables a build writes and an extend
+    appends, in that order (positions first)."""
+    return {
+        "_positions": pos,
+        "_doclen": pos.groupBy("doc_id").agg(
+            F.sum(F.size("positions")).cast("long").alias("dl")
+        ),
+        "_docterms": pos.select("doc_id", "word", "tf"),
+        "_rwords": _rwords_frame(pos.select("word")),
+    }
+
+
+def _stats_frame(spark: SparkSession, base: str, n_docs: int) -> DataFrame:
+    """The one-row (n_docs, avgdl) stats over the stored doclen table."""
+    return spark.table(f"{base}_doclen").agg(
+        F.lit(n_docs).cast("long").alias("n_docs"),
+        F.coalesce(F.avg("dl"), F.lit(1.0)).alias("avgdl"),
+    )
+
+
 def store_search_index(
     docs: DataFrame,
     base: str,
@@ -132,60 +282,23 @@ def store_search_index(
         os.remove(_meta_path(spark, base))
     except FileNotFoundError:
         pass
-    pos = (
-        positional_postings(docs)
-        # tf as a stored column: consumers that only need term counts
-        # (more-like-this candidates) read a long column instead of
-        # materializing the positions arrays
-        .withColumn("tf", F.size("positions").cast("long"))
-        .withColumn("letter", F.substring("word", 1, 1))
-        .localCheckpoint(eager=False)
-    )
-    write_bucketed(
-        pos,
-        f"{base}_positions",
-        "word",
-        n_buckets,
-        sort_col="word",
-        partition_cols=("letter",),
-    )
-    doclen = pos.groupBy("doc_id").agg(
-        F.sum(F.size("positions")).cast("long").alias("dl")
-    )
-    write_bucketed(doclen, f"{base}_doclen", "doc_id", n_buckets, sort_col="doc_id")
+    pos = _positions_frame(docs).localCheckpoint(eager=False)
+    frames = _appendable_frames(pos)
+    for suffix, frame in frames.items():
+        _write_text_table(frame, base, suffix, n_buckets)
     # n_docs counts ALL documents (token-less ones contribute to BM25's
     # N exactly as in the corpus-scan form); avgdl averages over
     # tokenized docs, matching bm25_search's doclen aggregate. The same
     # corpus aggregation yields the fingerprint the sidecar stores.
     fp = corpus_fingerprint(docs)
     n_docs = fp["n_docs"]
-    # doc-major transpose (query-by-document access: one doc_id bucket
-    # instead of a word-major full scan) + TF-IDF vector norms for
-    # more-like-this — both derive from the same pinned pos frame
-    docterms = pos.select("doc_id", "word", "tf")
-    write_bucketed(
-        docterms, f"{base}_docterms", "doc_id", n_buckets, sort_col="doc_id"
-    )
-    norms = tfidf_norms(tfidf_weighted(docterms, n_docs)).select(
+    # TF-IDF vector norms for more-like-this, from the same pinned frame
+    norms = tfidf_norms(tfidf_weighted(frames["_docterms"], n_docs)).select(
         "doc_id", F.col("n2").cast("decimal(38,12)").alias("n2")
     )
-    write_bucketed(
-        norms, f"{base}_norms", "doc_id", n_buckets, sort_col="doc_id"
-    )
-    # reversed-word vocabulary companion (suffix -> prefix lookup)
-    write_bucketed(
-        _rwords_frame(pos.select("word")),
-        f"{base}_rwords",
-        "rword",
-        n_buckets,
-        sort_col="rword",
-        partition_cols=("rletter",),
-    )
-    stats = spark.table(f"{base}_doclen").agg(
-        F.lit(n_docs).cast("long").alias("n_docs"),
-        F.coalesce(F.avg("dl"), F.lit(1.0)).alias("avgdl"),
-    )
-    write_table(stats, f"{base}_stats")
+    _write_text_table(norms, base, "_norms", n_buckets)
+    stats = _stats_frame(spark, base, n_docs)
+    _write_text_table(stats, base, "_stats", n_buckets)
     # sidecar: the layout facts a FRESH session needs to re-register the
     # external tables (the in-memory catalog forgets them; the files do
     # not) — see attach_search_index — plus the corpus fingerprint that
@@ -194,7 +307,7 @@ def store_search_index(
     with open(_meta_path(spark, base), "w") as fh:
         json.dump(
             {
-                "version": 5,
+                "version": _LAYOUT_VERSION,
                 "n_buckets": n_buckets,
                 "fingerprint": fp,
                 # norms bake idf in, so ANY extend flips this (df moved)
@@ -263,11 +376,6 @@ def _swap_paths(
     return loc, table_location(spark, f"{base}{suffix}__next"), loc + "__old"
 
 
-# table suffixes replaced via the atomic swap (everything derived-and-
-# rewritten; append-only tables never swap)
-_SWAPPED_SUFFIXES = ("_norms", "_rwords")
-
-
 def recover_table_swaps(spark: SparkSession, base: str) -> None:
     """Roll crashed table swaps forward (norms AND rwords — every
     derived table replaced via :func:`_replace_table_atomic`).
@@ -310,23 +418,11 @@ def _replace_table_atomic(
     (proven by the crash-injection sweep in
     tests/test_serving_lifecycle.py), unlike a DROP+rmtree+rewrite
     whose crash window destroys the only copy. The bucket/sort/
-    partition spec comes from :func:`_bucketed_specs`, so the rewritten
-    table keeps every pruning property."""
+    partition spec comes from ``_TEXT_LAYOUT``, so the rewritten table
+    keeps every pruning property."""
     table = f"{base}{suffix}"
     next_table = f"{table}__next"
-    spec = _bucketed_specs(base)[table]
-    _cols, part, bcol = spec
-    # partition column comes from the spec's DDL clause (e.g.
-    # "PARTITIONED BY (letter)" -> letter; rwords partitions by rletter)
-    part_col = part.split("(")[1].rstrip(")") if part else None
-    write_bucketed(
-        merged,
-        next_table,
-        bcol,
-        n_buckets,
-        sort_col=bcol,
-        partition_cols=(part_col,) if part_col else (),
-    )
+    _write_text_table(merged, base, suffix, n_buckets, table=next_table)
     # keep the files, drop the scratch catalog entry (external table)
     spark.sql(f"DROP TABLE IF EXISTS {next_table}")
     loc, next_loc, old_loc = _swap_paths(spark, base, suffix)
@@ -338,73 +434,7 @@ def _replace_table_atomic(
     os.rename(next_loc, loc)  # the publish point
     if os.path.isdir(old_loc):
         shutil.rmtree(old_loc)
-    _create_stored_table(spark, table, spec, n_buckets)
-
-
-def _bucketed_specs(base: str) -> dict[str, tuple[str, str, str]]:
-    """table -> (column DDL, partition clause, bucket/sort column) for
-    the bucketed tables of a serving layout — ONE source of truth
-    shared by the fresh-session attach and the post-swap re-register."""
-    return {
-        f"{base}_positions": (
-            "(word string, doc_id bigint, positions array<int>, "
-            "tf bigint, letter string)",
-            "PARTITIONED BY (letter)",
-            "word",
-        ),
-        f"{base}_doclen": ("(doc_id bigint, dl bigint)", "", "doc_id"),
-        # doc-major transpose: the query-by-document access path (one
-        # bucket per doc) the word-major tables cannot serve; tf only —
-        # no idf baked in, so it stays append-only under extends
-        f"{base}_docterms": (
-            "(doc_id bigint, word string, tf bigint)",
-            "",
-            "doc_id",
-        ),
-        # TF-IDF vector norms; idf IS baked in, so extends flag this
-        # stale (norms_current) and compaction rebuilds it
-        f"{base}_norms": (
-            "(doc_id bigint, n2 decimal(38,12))",
-            "",
-            "doc_id",
-        ),
-        # reversed-word vocabulary companion: suffix lookup becomes
-        # prefix lookup over rword, so rletter (= the word's LAST
-        # letter) restores the directory pruning a suffix predicate
-        # cannot get from the word-major tables. Append-only under
-        # extends (duplicate words across batches tolerated — readers
-        # distinct); compaction dedupes
-        f"{base}_rwords": (
-            "(rword string, word string, rletter string)",
-            "PARTITIONED BY (rletter)",
-            "rword",
-        ),
-    }
-
-
-def _create_stored_table(
-    spark: SparkSession, table: str, spec: tuple[str, str, str], n_buckets: int
-) -> None:
-    """CREATE TABLE ... LOCATION DDL over existing external files,
-    carrying the bucket/sort/partition spec so every pruning property
-    (PartitionFilters, SelectedBucketsCount, sorted files) survives."""
-    cols, part, bcol = spec
-    loc = table_location(spark, table)
-    if not os.path.isdir(loc):
-        raise FileNotFoundError(f"no stored data for {table} at {loc}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"CREATE TABLE {table} {cols} USING parquet {part} "
-        f"CLUSTERED BY ({bcol}) SORTED BY ({bcol}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{loc}'"
-    )
-    if part:
-        spark.catalog.recoverPartitions(table)
-
-
-# every text-store table a query may read; the rwords companion is
-# optional (pre-v5 stores lack it) and handled separately
-_TEXT_TABLES = ("_positions", "_doclen", "_docterms", "_norms", "_stats")
+    _register_text_table(spark, base, suffix, n_buckets)
 
 
 def attach_search_index(spark: SparkSession, base: str) -> None:
@@ -418,14 +448,14 @@ def attach_search_index(spark: SparkSession, base: str) -> None:
     survives the session boundary. No-op when the tables are already
     registered. Rolls a crashed table swap forward before registering.
     The local stand-in for a metastore-backed lake, where this whole
-    function is the metastore's job."""
+    function is the metastore's job.
+
+    Every table of ``_TEXT_LAYOUT`` is required. A store whose sidecar
+    predates the current layout version, or that lacks any table, is
+    refused with FileNotFoundError — older stores are rebuilt (by
+    :func:`ensure_search_index`), never served through a fallback."""
     recover_table_swaps(spark, base)
     tables = [f"{base}{sfx}" for sfx in _TEXT_TABLES]
-    # the rwords companion ships with v5 stores; a pre-v5 store stays
-    # attachable (the vocabulary passes fall back to positions), so its
-    # presence is a filesystem fact, not a requirement
-    if os.path.isdir(table_location(spark, f"{base}_rwords")):
-        tables.append(f"{base}_rwords")
     registered = [t for t in tables if spark.catalog.tableExists(t)]
     if len(registered) == len(tables):
         return
@@ -436,28 +466,17 @@ def attach_search_index(spark: SparkSession, base: str) -> None:
     for t in registered:
         spark.sql(f"DROP TABLE {t}")
     meta = _read_meta(spark, base)
-    if int(meta.get("version", 1)) < 4:
-        # pre-v4 layouts lack the docterms/norms tables and the
-        # positions tf column — attaching them through the v4 DDL would
-        # silently read nulls; refuse so ensure_search_index rebuilds
+    version = int(meta.get("version", 1))
+    if version < _LAYOUT_VERSION:
+        # an older layout lacks tables or columns this one reads;
+        # attaching it through the current DDL would read nulls
         raise FileNotFoundError(
-            f"store '{base}' predates the v4 layout "
-            "(no docterms/norms/tf) — rebuild with store_search_index"
+            f"store '{base}' is layout version {version}, older than "
+            f"v{_LAYOUT_VERSION} — rebuild with store_search_index"
         )
     n = int(meta["n_buckets"])
-    for table, spec in _bucketed_specs(base).items():
-        if table == f"{base}_rwords" and not os.path.isdir(
-            table_location(spark, table)
-        ):
-            continue  # pre-v5 store: suffix queries fall back
-        _create_stored_table(spark, table, spec, n)
-    loc = table_location(spark, f"{base}_stats")
-    if not os.path.isdir(loc):
-        raise FileNotFoundError(f"no stored data for {base}_stats at {loc}")
-    spark.sql(
-        f"CREATE TABLE {base}_stats (n_docs bigint, avgdl double) "
-        f"USING parquet LOCATION '{loc}'"
-    )
+    for suffix in _TEXT_TABLES:
+        _register_text_table(spark, base, suffix, n)
 
 
 def verify_search_index(spark: SparkSession, base: str, docs: DataFrame) -> bool:
@@ -605,8 +624,13 @@ def phrase_search_stored(
     return phrase_from_frames(spark.table(f"{base}_positions"), phrase)
 
 
-def phrase_from_frames(positions: DataFrame, phrase: str) -> DataFrame:
-    """Frame-parameterized phrase-match body (see bm25_from_frames)."""
+def _phrase_positions(
+    positions: DataFrame, phrase: str
+) -> tuple[DataFrame, int]:
+    """(per_doc, n_words): the phrase's normalized words' position arrays
+    per document — (doc_id, p0 .. p{n-1}), an absent word an empty
+    array — from the pruned positional frame; the input both phrase
+    filters take."""
     words = normalize_query_tokens(phrase)
     if not words:
         raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
@@ -620,7 +644,12 @@ def phrase_from_frames(positions: DataFrame, phrase: str) -> DataFrame:
             for i, w in enumerate(words)
         ]
     )
-    return phrase_adjacency_filter(per_doc, len(words))
+    return per_doc, len(words)
+
+
+def phrase_from_frames(positions: DataFrame, phrase: str) -> DataFrame:
+    """Frame-parameterized phrase-match body (see bm25_from_frames)."""
+    return phrase_adjacency_filter(*_phrase_positions(positions, phrase))
 
 
 def phrase_slop_search_stored(
@@ -639,24 +668,10 @@ def phrase_slop_from_frames(
     positions: DataFrame, phrase: str, slop: int = 0
 ) -> DataFrame:
     """Frame-parameterized sloppy-phrase body (see bm25_from_frames)."""
-    from .index import phrase_slop_filter
-
     if slop < 0:
         raise ValueError("slop must be >= 0")
-    words = normalize_query_tokens(phrase)
-    if not words:
-        raise ValueError(f"phrase normalizes to nothing: {phrase!r}")
-    pos = pruned_positions(positions, set(words))
-    empty = F.array().cast("array<int>")
-    per_doc = pos.groupBy("doc_id").agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("word") == w, F.col("positions"))), empty
-            ).alias(f"p{i}")
-            for i, w in enumerate(words)
-        ]
-    )
-    return phrase_slop_filter(per_doc, len(words), slop)
+    per_doc, n_words = _phrase_positions(positions, phrase)
+    return phrase_slop_filter(per_doc, n_words, slop)
 
 
 def proximity_search_stored(
@@ -765,29 +780,12 @@ def prefix_search_stored(
     )
 
 
-def _rwords_table(spark: SparkSession, base: str) -> str | None:
-    """The ``<base>_rwords`` companion's table name, registered in this
-    session if needed, or None for a pre-v5 store that has none (its
-    vocabulary passes fall back to positions)."""
-    table = f"{base}_rwords"
-    if not os.path.isdir(table_location(spark, table)):
-        return None
-    if not spark.catalog.tableExists(table):
-        _create_stored_table(
-            spark, table, _bucketed_specs(base)[table],
-            int(_read_meta(spark, base)["n_buckets"]),
-        )
-    return table
-
-
 def _stored_vocabulary(spark: SparkSession, base: str) -> DataFrame:
     """Single-column ``word`` frame of the store's distinct vocabulary:
     the rwords companion's word column (one row per word, plus
-    un-compacted extend duplicates the distinct drops), or the positions
-    table's word column for a pre-v5 store without rwords — one row per
-    (word, doc), so that fallback scans far more rows."""
-    table = _rwords_table(spark, base) or f"{base}_positions"
-    return spark.table(table).select("word").distinct()
+    un-compacted extend duplicates the distinct drops) — far fewer rows
+    than the positions table's one row per (word, doc)."""
+    return spark.table(f"{base}_rwords").select("word").distinct()
 
 
 def fuzzy_term_search_stored(
@@ -1069,18 +1067,8 @@ def attach_ann_index(spark: SparkSession, base: str) -> None:
         return
     for t in registered:  # repair a partial attach, never no-op on it
         spark.sql(f"DROP TABLE {t}")
-    meta_path = _meta_path(spark, base, kind="ann")
-    if not os.path.exists(meta_path):
-        # layouts stored before the kind-specific sidecar rename used
-        # the text sidecar's name; accept it ONLY when it is actually
-        # an ANN sidecar (carries n_list), never a text store's file
-        legacy = _meta_path(spark, base)
-        if os.path.exists(legacy):
-            with open(legacy) as fh:
-                if "n_list" in json.load(fh):
-                    meta_path = legacy
-    with open(meta_path) as fh:
-        meta = json.load(fh)  # a missing ANN sidecar is a loud error
+    # a missing ANN sidecar is a loud error; ensure_ann_index rebuilds
+    meta = _read_ann_meta(spark, base)
     for t in tables:
         if not os.path.isdir(table_location(spark, t)):
             raise FileNotFoundError(
@@ -1431,7 +1419,10 @@ def extend_search_index(
       on the fly until :func:`compact_search_index` rebuilds them.
 
     No step rewrites a store-sized table: the extend's cost is the
-    batch's.
+    batch's. Every append takes its bucket, sort and partition columns
+    from ``_TEXT_LAYOUT``, the spec the build wrote with. The store must
+    be attached (every table registered, so it has the current layout —
+    older stores are rebuilt, not extended).
 
     Doc ids must be NEW: a re-ingested id would corrupt the append-only
     positions contract, so overlap is a loud error (one semi-join
@@ -1471,75 +1462,23 @@ def extend_search_index(
     # ---- compute phase: store untouched until everything is pinned ----
     # ONE tokenization of the new batch (eagerly pinned positional
     # frame) feeds positions, doclen, docterms and rwords
-    new_pos = (
-        positional_postings(new_docs)
-        .withColumn("tf", F.size("positions").cast("long"))
-        .withColumn("letter", F.substring("word", 1, 1))
-        .localCheckpoint()
-    )
+    new_pos = _positions_frame(new_docs).localCheckpoint()
     batch_fp = corpus_fingerprint(new_docs)
 
     # ---- mutate phase: bracketed by the torn-extend marker ----
     _write_extend_marker(spark, base, {"n_new_docs": batch_fp["n_docs"]})
-    loc = table_location(spark, f"{base}_positions")
-    (
-        new_pos.write.format("parquet")
-        .mode("append")
-        .option("path", loc)
-        .partitionBy("letter")
-        .bucketBy(n_buckets, "word")
-        .sortBy("word")
-        .saveAsTable(f"{base}_positions")
-    )
-    new_doclen = new_pos.groupBy("doc_id").agg(
-        F.sum(F.size("positions")).cast("long").alias("dl")
-    )
-    loc = table_location(spark, f"{base}_doclen")
-    (
-        new_doclen.write.format("parquet")
-        .mode("append")
-        .option("path", loc)
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(f"{base}_doclen")
-    )
-    # doc-major transpose: tf only (no idf baked in), so the extend is a
-    # pure bucketed append here too
-    new_docterms = new_pos.select("doc_id", "word", "tf")
-    loc = table_location(spark, f"{base}_docterms")
-    (
-        new_docterms.write.format("parquet")
-        .mode("append")
-        .option("path", loc)
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(f"{base}_docterms")
-    )
-    # reversed-word companion (v5 stores): append the BATCH's distinct
-    # words only — a word already stored lands again as a duplicate row,
-    # which readers tolerate (distinct at read after partition+prefix
-    # pruning bounds the cost by the match set) and compaction dedupes;
-    # the alternative, an anti-join against the stored vocabulary,
-    # would put a store-proportional read in the ingest path
-    rwords_table = _rwords_table(spark, base)
-    if rwords_table is not None:
-        (
-            _rwords_frame(new_pos.select("word"))
-            .write.format("parquet")
-            .mode("append")
-            .option("path", table_location(spark, rwords_table))
-            .partitionBy("rletter")
-            .bucketBy(n_buckets, "rword")
-            .sortBy("rword")
-            .saveAsTable(rwords_table)
-        )
+    # rwords gets the BATCH's distinct words only — a word already
+    # stored lands again as a duplicate row, which readers tolerate
+    # (distinct at read after partition+prefix pruning bounds the cost
+    # by the match set) and compaction dedupes; the alternative, an
+    # anti-join against the stored vocabulary, would put a
+    # store-proportional read in the ingest path
+    for suffix, frame in _appendable_frames(new_pos).items():
+        _append_text_table(frame, base, suffix, n_buckets)
     old = spark.table(f"{base}_stats").first()
     n_docs = int(old["n_docs"]) + batch_fp["n_docs"]
-    stats = spark.table(f"{base}_doclen").agg(
-        F.lit(n_docs).cast("long").alias("n_docs"),
-        F.coalesce(F.avg("dl"), F.lit(1.0)).alias("avgdl"),
-    ).localCheckpoint()
-    write_table(stats, f"{base}_stats")
+    stats = _stats_frame(spark, base, n_docs).localCheckpoint()
+    _write_text_table(stats, base, "_stats", n_buckets)
     old_fp = meta.get("fingerprint")
     if old_fp is not None:
         meta["fingerprint"] = {
@@ -1561,59 +1500,38 @@ def compact_search_index(spark: SparkSession, base: str) -> bool:
     scheduled compaction that pairs with :func:`extend_search_index`:
     norms (idf moved) and the rwords companion (batch vocabularies
     appended without dedup). No-op when no extend ran since the last
-    build or compaction; a pre-v5 store additionally gains its rwords
-    companion here.
+    build or compaction. The store must be attached; older layouts are
+    rebuilt, not compacted.
 
     Each rebuild reads the stored docterms or positions through the
-    same derivations as a from-scratch build, and publishes via the
-    atomic __next-then-rename swap, so a crash at any point leaves a
-    complete table on disk. The sidecar flag flips only AFTER the
-    swaps: a crash between leaves fresh tables still flagged stale —
-    queries stay correct on the fallback path and the next compaction
-    clears it; never the reverse state, where a stale table would be
-    trusted. Returns whether anything was rebuilt."""
+    same derivations as a from-scratch build, writes with the
+    ``_TEXT_LAYOUT`` spec, and publishes via the atomic
+    __next-then-rename swap, so a crash at any point leaves a complete
+    table on disk. The sidecar flag flips only AFTER the swaps: a crash
+    between leaves fresh tables still flagged stale — queries stay
+    correct on the norms-recompute path and the next compaction clears
+    it; never the reverse state, where a stale table would be trusted.
+    Returns whether anything was rebuilt."""
     meta = _read_meta(spark, base)
-    n_buckets = int(meta["n_buckets"])
-    changed = False
     # stale norms is the reliable "an extend happened since the last
-    # compaction" signal, so it also schedules the rwords dedup below
-    had_extends = not meta.get("norms_current", True)
-    if had_extends:
-        norms = (
-            tfidf_norms(_stored_weighted_terms(spark, base))
-            .select("doc_id", F.col("n2").cast("decimal(38,12)").alias("n2"))
-            .localCheckpoint()
-        )
-        _replace_table_atomic(spark, base, "_norms", norms, n_buckets)
-        meta["norms_current"] = True
-        changed = True
-    rwords_table = f"{base}_rwords"
-    stored_words = spark.table(f"{base}_positions").select("word")
-    if not os.path.isdir(table_location(spark, rwords_table)):
-        # upgrade path: a pre-v5 store gains the suffix companion here
-        # (one distinct over positions' word column), so compaction is
-        # the scheduled job that both maintains AND retrofits it
-        write_bucketed(
-            _rwords_frame(stored_words),
-            rwords_table,
-            "rword",
-            n_buckets,
-            sort_col="rword",
-            partition_cols=("rletter",),
-        )
-        meta["version"] = max(int(meta.get("version", 1)), 5)
-        changed = True
-    elif had_extends:
-        # dedupe the appended vocabulary (atomic swap, same protocol)
-        _replace_table_atomic(
-            spark, base, "_rwords", _rwords_frame(stored_words)
-            .localCheckpoint(), n_buckets,
-        )
-        changed = True
-    if changed:
-        with open(_meta_path(spark, base), "w") as fh:
-            json.dump(meta, fh)
-    return changed
+    # compaction" signal, so it also schedules the rwords dedup
+    if meta.get("norms_current", True):
+        return False
+    n_buckets = int(meta["n_buckets"])
+    norms = (
+        tfidf_norms(_stored_weighted_terms(spark, base))
+        .select("doc_id", F.col("n2").cast("decimal(38,12)").alias("n2"))
+        .localCheckpoint()
+    )
+    _replace_table_atomic(spark, base, "_norms", norms, n_buckets)
+    rwords = _rwords_frame(spark.table(f"{base}_positions").select("word"))
+    _replace_table_atomic(
+        spark, base, "_rwords", rwords.localCheckpoint(), n_buckets
+    )
+    meta["norms_current"] = True
+    with open(_meta_path(spark, base), "w") as fh:
+        json.dump(meta, fh)
+    return True
 
 
 def _stored_weighted_terms(spark: SparkSession, base: str) -> DataFrame:
@@ -1639,8 +1557,7 @@ def serving_store_stats(spark: SparkSession, base: str) -> dict:
     an older store is counted but never read)."""
     meta = _read_meta(spark, base)
     tables = {}
-    for suffix in ("_chunks", "_positions", "_doclen", "_docterms",
-                   "_norms", "_rwords", "_stats"):
+    for suffix in ("_chunks", *_TEXT_TABLES):
         loc = table_location(spark, f"{base}{suffix}")
         n_files = n_bytes = 0
         if os.path.isdir(loc):
@@ -1671,23 +1588,17 @@ def suffix_matched_words(
     """Single-column ``word`` frame of stored vocabulary terms ending in
     ``sfx`` (already normalized) — the vocabulary pass of
     :func:`suffix_search_stored`, factored out so plan tests can assert
-    its pruning. Two shapes:
-
-    - v5 stores carry the ``_rwords`` reversed-vocabulary companion:
-      the suffix becomes a PREFIX predicate on ``rword``, so the scan
-      prunes to ONE ``rletter`` partition directory (PartitionFilters)
-      with the startswith pushed into it — prefix_search_stored's cost,
-      bounded by the match set, flat in corpus size. Duplicate rows
-      from un-compacted extends are dropped by the distinct.
-    - pre-v5 stores fall back to the column-pruned vocabulary scan
-      (:func:`_stored_vocabulary`, the fuzzy_term_search_stored
-      shape)."""
-    rwords_table = _rwords_table(spark, base)
-    if rwords_table is None:
-        return _stored_vocabulary(spark, base).where(F.col("word").endswith(sfx))
+    its pruning. The suffix becomes a PREFIX predicate on the
+    ``_rwords`` companion's ``rword``, so the scan prunes to ONE
+    ``rletter`` partition directory (PartitionFilters) with the
+    startswith pushed into it — prefix_search_stored's cost, bounded by
+    the match set, flat in corpus size. Duplicate rows from
+    un-compacted extends are dropped by the distinct. Stores without
+    the companion are older than the current layout and are rebuilt,
+    not served (see :func:`attach_search_index`)."""
     rsfx = sfx[::-1]
     return (
-        spark.table(rwords_table)
+        spark.table(f"{base}_rwords")
         .where(F.col("rletter") == rsfx[0])
         .where(F.col("rword").startswith(rsfx))
         .select("word")
@@ -1701,8 +1612,7 @@ def suffix_search_stored(
     """(letter, word, df, postings): index.py suffix_search served from
     the stored layout. The vocabulary pass goes through
     :func:`suffix_matched_words` (directory-pruned via the ``_rwords``
-    reversed-word companion on v5 stores; column-pruned scan fallback
-    on older layouts), then the postings fetch goes through
+    reversed-word companion), then the postings fetch goes through
     :func:`stored_postings_for_matched` (bucket-pruned IN list up to
     ``cap`` matches, collect-free semi-join above it — a short suffix
     over a huge vocabulary must never pull the match set to the

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,6 +136,25 @@ def test_stale_ann_store_detected_and_rebuilt(spark, emb):
     srv.ensure_ann_index(new, base, n_list=4, n_iters=1)
     assert srv.verify_ann_index(spark, base, new)
     assert spark.table(f"{base}_vectors").count() == new.count()
+
+
+def test_ann_store_without_sidecar_fails_attach_and_rebuilds(spark, emb):
+    """A store whose ANN sidecar is gone — even beside a text sidecar
+    under the same base — fails attach loudly; ensure_ann_index then
+    rebuilds it and serves."""
+    base = "annnometa"
+    sub = emb.where(F.col("vec_id") < 40)
+    srv.store_ann_index(sub, base, n_list=2, n_iters=1)
+    meta_path = srv._meta_path(spark, base, kind="ann")
+    os.rename(meta_path, srv._meta_path(spark, base))  # text-named copy
+    for sfx in ("_vectors", "_centroids"):
+        spark.sql(f"DROP TABLE IF EXISTS {base}{sfx}")
+    with pytest.raises(FileNotFoundError):
+        srv.attach_ann_index(spark, base)
+    srv.ensure_ann_index(sub, base, n_list=2, n_iters=1)
+    assert os.path.exists(meta_path)
+    assert srv.verify_ann_index(spark, base, sub)
+    assert spark.table(f"{base}_vectors").count() == sub.count()
 
 
 def test_extend_ann_index_appends_and_serves(spark, emb):

@@ -16,12 +16,9 @@ from parallel_inverted_index_map_reduce_spark.operators import serving as srv
 from parallel_inverted_index_map_reduce_spark.operators.index import (
     bm25_search,
     boolean_search,
-    build_index,
     build_index_chunked,
-    lookup_stored_terms,
     phrase_search,
     proximity_search,
-    store_chunked_index,
 )
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
@@ -48,51 +45,6 @@ def test_chunked_build_has_two_exchanges(spark):
     plan = _plan(build_index_chunked(docs, chunk_size=64))
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchanges == 2, plan
-
-
-def test_stored_chunked_lookup_prunes_and_matches(spark):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    store_chunked_index(
-        build_index_chunked(docs, chunk_size=16), "chunked_index", n_buckets=8
-    )
-
-    # two terms guaranteed present: take them from the built index
-    terms = [
-        r.word
-        for r in build_index(docs).orderBy(F.desc("df"), "word").limit(2).collect()
-    ]
-    got = lookup_stored_terms(spark, "chunked_index", terms)
-
-    plan = _plan(got)
-    # the terms' derived letters prune partition directories...
-    assert "PartitionFilters" in plan and "letter" in plan.split(
-        "PartitionFilters"
-    )[1][:120], plan
-    # ...the IN predicate reaches the parquet scan...
-    assert "PushedFilters" in plan and "In(word" in plan, plan
-    # ...and bucket pruning reads 1 of 8 buckets per term's bucket
-    assert "SelectedBucketsCount" in plan, plan
-    n_sel = int(plan.split("SelectedBucketsCount: ")[1].split(" out of")[0])
-    assert n_sel <= 2  # at most one bucket per looked-up term
-
-    # reassembled postings equal the plain build's for those words
-    want = {
-        r.word: (r.letter, r.df, tuple(r.postings))
-        for r in build_index(docs).where(F.col("word").isin(terms)).collect()
-    }
-    have = {
-        r.word: (r.letter, r.df, tuple(r.postings)) for r in got.collect()
-    }
-    assert have == want
-
-    # the second pruning level: a letter scan prunes to its partition
-    letter = next(iter(want.values()))[0]
-    scan = spark.table("chunked_index").where(F.col("letter") == letter)
-    lp = _plan(scan)
-    assert "PartitionFilters" in lp and "letter" in lp.split("PartitionFilters")[1][:120], lp
-    rows = scan.select("word").distinct().count()
-    full = build_index(docs).where(F.col("letter") == letter).count()
-    assert rows == full
 
 
 # ---------------------------------------------------------------------------

@@ -46,7 +46,7 @@ def _docs_v2(spark):
 
 def _drop_tables(spark, base):
     """Simulate a fresh session: catalog forgets, files stay."""
-    for sfx in ("_positions", "_doclen", "_norms", "_stats"):
+    for sfx in srv._TEXT_TABLES:
         spark.sql(f"DROP TABLE IF EXISTS {base}{sfx}")
 
 
@@ -112,6 +112,46 @@ def test_unfingerprinted_legacy_sidecar_rebuilds_on_attach(spark):
     _drop_tables(spark, base)
     srv.ensure_search_index(v1, base, n_buckets=4)
     assert srv.verify_search_index(spark, base, v1)
+
+
+@pytest.mark.parametrize(
+    "version, refusal",
+    [(4, "version 4, older than v5 .* rebuild"), (5, "no stored data .*_rwords")],
+    ids=["v4-sidecar", "v5-missing-rwords"],
+)
+def test_store_without_rwords_is_refused_and_rebuilt(spark, version, refusal):
+    """Every text table is required: a v4 store (no reversed-word
+    companion) and a v5 store whose _rwords directory is gone are both
+    refused by attach, and ensure_search_index rebuilds them to the
+    current layout, whose suffix and fuzzy answers equal the
+    corpus-scan forms."""
+    from parallel_inverted_index_map_reduce_spark.operators.index import (
+        fuzzy_term_search,
+        suffix_search,
+    )
+
+    base = f"lcnorwords{version}"
+    v1 = _docs_v1(spark)
+    srv.store_search_index(v1, base, n_buckets=4)
+    meta_path = srv._meta_path(spark, base)
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    meta["version"] = version
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    _drop_tables(spark, base)
+    shutil.rmtree(table_location(spark, f"{base}_rwords"))
+
+    with pytest.raises(FileNotFoundError, match=refusal):
+        srv.attach_search_index(spark, base)
+    srv.ensure_search_index(v1, base, n_buckets=4)
+    assert srv._read_meta(spark, base)["version"] == 5
+    assert os.path.isdir(table_location(spark, f"{base}_rwords"))
+    want = _rows(suffix_search(v1, "er"))
+    assert _rows(srv.suffix_search_stored(spark, base, "er")) == want and want
+    want = _rows(fuzzy_term_search(v1, "sparc"))
+    assert _rows(srv.fuzzy_term_search_stored(spark, base, "sparc")) == want
+    assert want
 
 
 def test_extend_updates_fingerprint_incrementally(spark):
@@ -219,9 +259,7 @@ def test_swap_crash_windows_never_lose_norms(spark):
     srv.recover_table_swaps(spark, base)
     assert os.path.isdir(loc) and not os.path.isdir(next_loc)
     assert not os.path.isdir(old_loc)
-    srv._create_stored_table(
-        spark, f"{base}_norms", srv._bucketed_specs(base)[f"{base}_norms"], n
-    )
+    srv._register_text_table(spark, base, "_norms", n)
     assert _rows(spark.table(f"{base}_norms")) == want
 
     # state C: crash after publish, before __old cleanup

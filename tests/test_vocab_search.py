@@ -12,7 +12,6 @@ scan forms (fresh store, extended store, and compacted store)."""
 
 from __future__ import annotations
 
-import os
 import random
 
 import pytest
@@ -488,38 +487,6 @@ def test_suffix_stored_prunes_rletter_partition(spark, vocab_store):
     ), formatted
     assert "StartsWith" in formatted, formatted
     assert "_rwords" in formatted, formatted
-
-
-def test_suffix_stored_falls_back_without_rwords(spark, vocab_store):
-    """A pre-v5 store has no _rwords table: the vocabulary pass must
-    fall back to the column-pruned scan and stay row-identical."""
-    import shutil
-
-    from parallel_inverted_index_map_reduce_spark.operators.bucketing import (
-        table_location,
-    )
-    from parallel_inverted_index_map_reduce_spark.operators.index import (
-        suffix_search,
-    )
-
-    base, docs = vocab_store
-    want = _rows(suffix_search(docs, "er"))
-    assert _rows(srv.suffix_search_stored(spark, base, "er")) == want
-    spark.sql(f"DROP TABLE IF EXISTS {base}_rwords")
-    shutil.rmtree(table_location(spark, f"{base}_rwords"))
-    try:
-        assert _rows(srv.suffix_search_stored(spark, base, "er")) == want
-        # ... and compaction is the retrofit job: it rebuilds the
-        # companion from positions and restores the pruned path
-        srv.compact_search_index(spark, base)
-        assert spark.catalog.tableExists(f"{base}_rwords") or os.path.isdir(
-            table_location(spark, f"{base}_rwords")
-        )
-        assert _rows(srv.suffix_search_stored(spark, base, "er")) == want
-    finally:
-        # vocab_store is session-scoped state on disk: leave it v5
-        if not os.path.isdir(table_location(spark, f"{base}_rwords")):
-            srv.compact_search_index(spark, base)
 
 
 def test_compact_dedupes_rwords_after_extends(spark):
