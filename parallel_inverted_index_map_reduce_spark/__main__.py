@@ -446,9 +446,17 @@ def _ann(args) -> int:
         if args.queries:
             q = spark.read.parquet(args.queries).select("vec_id", "embedding")
         elif args.ids:
+            vectors = spark.table(f"{args.stored}_vectors")
+            if "embedding" not in vectors.columns:
+                print(
+                    f"ANN store '{args.stored}' holds int8-quantized "
+                    "vectors, not the float embeddings --ids would query "
+                    "with — pass a queries .parquet instead",
+                    file=sys.stderr,
+                )
+                return 2
             q = (
-                spark.table(f"{args.stored}_vectors")
-                .where(F.col("vec_id").isin([int(i) for i in args.ids]))
+                vectors.where(F.col("vec_id").isin([int(i) for i in args.ids]))
                 .select("vec_id", "embedding")
             )
         else:
@@ -826,7 +834,9 @@ def main(argv: list[str] | None = None) -> int:
             help="ANN store written by ann-store",
         )
         parser.add_argument(
-            "--ids", nargs="+", help="query stored vectors by vec_id"
+            "--ids", nargs="+",
+            help="query stored vectors by vec_id (float stores only; an "
+            "int8-quantized store needs a queries .parquet)",
         )
         parser.add_argument("--k", type=int, default=3)
         parser.add_argument("--nprobe", type=int, default=4)

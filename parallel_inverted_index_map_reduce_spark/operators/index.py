@@ -83,9 +83,17 @@ def build_index(docs: DataFrame, one_based: bool = False) -> DataFrame:
     t = tokens_df(docs)
     if one_based:
         t = t.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    # collect_set dedups AND partially aggregates map-side, so the build
-    # is ONE shuffle (vs distinct() + groupBy = two).
-    idx = t.groupBy("word").agg(
+    return index_from_pairs(t)
+
+
+def index_from_pairs(pairs: DataFrame) -> DataFrame:
+    """(letter, word, df, postings, rank) from any (word, doc_id) frame,
+    duplicates allowed — :func:`build_index`'s postings aggregation and
+    rank window, shared with the streamed index lines, which aggregate
+    the serving stream's positions rows instead of fresh tokens.
+    collect_set dedups AND partially aggregates map-side, so this is ONE
+    shuffle (vs distinct() + groupBy = two)."""
+    idx = pairs.groupBy("word").agg(
         F.sort_array(F.collect_set("doc_id")).alias("postings")
     )
     return _attach_rank_window(_with_df_letter(idx))
@@ -249,50 +257,6 @@ def merge_index(
         )
     )
     return _attach_rank_window(_with_df_letter(merged))
-
-
-def merge_index_chunked(
-    stored_chunks: DataFrame,
-    new_docs: DataFrame,
-    chunk_size: int = 4096,
-    one_based: bool = False,
-    delta_only: bool = False,
-) -> DataFrame:
-    """Incremental maintenance of the CHUNKED layout: fold new documents
-    in while re-chunking ONLY the words they touch.
-
-    Untouched words' chunk rows pass through byte-identical (anti-join),
-    so the rewrite cost is proportional to the affected vocabulary —
-    not the index size — which is what makes daily ingests affordable
-    on a 100 TB index. Affected words re-derive from the union of their
-    exploded stored postings and the new documents' distinct pairs,
-    through the same spillable-ordinal window as
-    :func:`build_index_chunked`; proven row-identical to a from-scratch
-    chunked rebuild in tests/test_index_merge_upsert.py.
-
-    ``one_based`` must match the stored index's id space (applies to
-    the new side's tokens only).
-
-    ``delta_only`` returns ONLY the affected words' rebuilt rows and
-    skips the pass-through anti-join entirely — the streaming delta
-    protocol's write path (streaming/deltas.py): untouched words'
-    rows never move, so the per-batch write is O(affected vocabulary),
-    and last-writer-wins composition per word reconstructs exactly
-    ``untouched UNION rebuilt``.
-    """
-    new_pairs = postings_flat(new_docs, one_based=one_based)
-    affected = new_pairs.select("word").distinct()
-
-    old_pairs = (
-        stored_chunks.join(affected, "word", "left_semi")
-        .select("word", F.explode("postings").alias("doc_id"))
-    )
-    merged_pairs = old_pairs.unionByName(new_pairs).distinct()
-    rebuilt = chunk_pairs(merged_pairs, chunk_size)
-    if delta_only:
-        return rebuilt
-    untouched = stored_chunks.join(affected, "word", "left_anti")
-    return untouched.unionByName(rebuilt)
 
 
 def document_frequency(docs: DataFrame) -> DataFrame:

@@ -595,20 +595,14 @@ def bm25_from_frames(
 ) -> DataFrame:
     """The frame-parameterized BM25 body shared by the stored-table path
     and the streamed-snapshot path (streaming/serving_stream.py) — one
-    implementation, two storages."""
+    implementation, two storages of the same positions rows (``tf``
+    included)."""
     words = sorted(set(normalize_query_tokens(query)))
     if not words:
         raise ValueError(f"query normalizes to nothing: {query!r}")
-    pruned = pruned_positions(positions, set(words))
-    # v4 stores carry tf as a column — the pruned read then never
-    # materializes the positions arrays; older frames (streamed
-    # snapshots) derive it from the arrays as before
-    tf_col = (
-        F.col("tf").cast("long")
-        if "tf" in pruned.columns
-        else F.size("positions").cast("long")
-    )
-    tf = pruned.select("word", "doc_id", tf_col.alias("tf"))
+    # tf is a stored column, so the pruned read never materializes the
+    # positions arrays
+    tf = pruned_positions(positions, set(words)).select("word", "doc_id", "tf")
     return bm25_rank(tf, doclen, n_docs, avgdl, k1=k1, b=b, k=k)
 
 
@@ -882,8 +876,8 @@ def mlt_from_frames(
 ) -> DataFrame:
     """The frame-parameterized more-like-this body (see
     bm25_from_frames): ``docterms`` is any (doc_id, word, tf) frame,
-    ``positions`` any letter-partitioned positional frame (with or
-    without the v4 ``tf`` column), so the stored-table path and the
+    ``positions`` any letter-partitioned frame of the positions table's
+    rows (``tf`` included), so the stored-table path and the
     streamed-snapshot path share one implementation. ``norms`` is the
     precomputed (doc_id, n2) decimal frame when one exists and is
     current; None recomputes norms from ``docterms`` on the fly —
@@ -895,13 +889,9 @@ def mlt_from_frames(
         .select("word")
         .collect()
     )
-    pruned = pruned_positions(positions, set(qwords))
-    tf_col = (
-        F.col("tf").cast("long")
-        if "tf" in pruned.columns
-        else F.size("positions").cast("long")
+    cand = pruned_positions(positions, set(qwords)).select(
+        "word", "doc_id", "tf"
     )
-    cand = pruned.select("word", "doc_id", tf_col.alias("tf"))
     # pinned: the weighted frame feeds the query-vector branch AND the
     # dot branch inside mlt_rank (the scan path's discipline)
     weighted = tfidf_weighted(cand, n_docs).localCheckpoint(eager=False)
@@ -1398,8 +1388,9 @@ def extend_search_index(
     new_docs: DataFrame,
 ) -> None:
     """Fold NEW documents into a stored serving layout incrementally —
-    the daily-ingest path (same role as index.py merge_index_chunked,
-    extended to the whole layout).
+    the daily-ingest path (the batch twin of
+    streaming/serving_stream.py, which appends the same rows per
+    micro-batch).
 
     Incrementality per table, honestly stated:
 

@@ -99,7 +99,12 @@ def _streamed_serving_store(
     folds them through streaming/serving_stream.py's delta path (batch
     0 starts the version chain, batches 1-2 exercise the delta
     composition and the incremental stats fold), and the caller serves
-    from the latest committed snapshot."""
+    from the latest committed snapshot. It is the session's ONE
+    streamed text store: ranked_retrieval's 'bm25_streamed' part and
+    index_lines' 'streamed' part both answer from it, so a session
+    runs one streamed build however many entries read it. The
+    final composition is split-invariant, so the repartition(3) batch
+    membership needs no determinism."""
     from ..streaming import serving_stream as svs
     from .stores import drain, input_key, session_store, tuned_shuffle
 
@@ -119,45 +124,6 @@ def _streamed_serving_store(
         return store
 
     return session_store("serving_stream", input_key(sf_dir, docs), build)
-
-
-def _streamed_index_store(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
-    """Build (or reuse this session's — plans/stores.py) incremental
-    CHUNKED-index version store (streaming/index_stream.py) and return
-    its directory: the corpus lands as three parquet files and a
-    maxFilesPerTrigger=1 availableNow stream folds them through
-    start_incremental_index — batch 0 runs build_index_chunked, batches
-    1-2 exercise merge_index_chunked (affected-words-only recompute),
-    each committing a complete-or-invisible index version. chunk_size
-    is small enough that common words really span multiple chunks at
-    sf0.01, so the version the query answers from exercises chunk
-    reassembly, not just the trivial one-chunk case. The final merged
-    index is split-invariant, so the repartition(3) batch membership
-    needs no determinism (unlike the prep pipeline's cross-batch
-    suppression, which is order-sensitive and slices by doc_id)."""
-    from ..streaming import index_stream as sidx
-    from .stores import drain, input_key, session_store, tuned_shuffle
-
-    def build(tmp: str) -> str:
-        src = os.path.join(tmp, "docs_in")
-        out = os.path.join(tmp, "index_versions")
-        ckpt = os.path.join(tmp, "ckpt")
-        with tuned_shuffle(spark):
-            docs.repartition(3).write.parquet(src)
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            drain(
-                sidx.start_incremental_index(
-                    stream, out, ckpt, chunk_size=256
-                ),
-                "streamed index build",
-            )
-        return out
-
-    return session_store("index_stream", input_key(sf_dir, docs), build)
 
 
 @register(
@@ -773,33 +739,33 @@ SELECT 'streamed', letter, "rank", line FROM lines
     "by (letter, rank) for the per-letter sink (O16), in one labeled "
     "two-part result. 'batch' rows are the one-shot build_index "
     "formulation. 'streamed' rows driver-verify INCREMENTAL index "
-    "maintenance (streaming/index_stream.py): the corpus arrives as "
-    "three availableNow micro-batches, batch 0 builds the chunked "
-    "index and batches 1-2 fold new documents in via "
-    "merge_index_chunked (recomputing only the words each batch "
-    "touches), every batch committing a complete-or-invisible index "
-    "VERSION under the commit-marker protocol; the lines are answered "
-    "from the LATEST COMMITTED version (chunks reassembled in "
-    "chunk_id order, ids shifted to 1-based). The oracle is the batch "
-    "formulation VERBATIM for both labels, so the hash match proves "
-    "the stream-maintained versioned index converges to the one-shot "
-    "build under the driver's eyes — the reference can only rebuild "
-    "from scratch (src/main.cpp:49-320); this maintains the same "
-    "artifact incrementally.",
+    "maintenance: the corpus arrives as three availableNow "
+    "micro-batches folded into the session's streamed serving store "
+    "(streaming/serving_stream.py — the same store ranked_retrieval's "
+    "'bm25_streamed' part serves from), every batch appending its "
+    "positions rows and committing a complete-or-invisible VERSION "
+    "under the commit-marker protocol; the lines are derived from the "
+    "LATEST COMMITTED version's positions through build_index's "
+    "postings aggregation and rank window (ids shifted to 1-based). "
+    "The oracle is the batch formulation VERBATIM for both labels, so "
+    "the hash match proves the stream-maintained store converges to "
+    "the one-shot build — the reference can only rebuild from scratch "
+    "(src/main.cpp:49-320); this maintains the same artifact "
+    "incrementally.",
 )
 def q_index_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.index import format_index_lines
-    from ..streaming.index_stream import read_index_version
+    from ..streaming.serving_stream import read_serving_version
 
     docs = _docs(spark, sf_dir)
     batch_lines = format_index_lines(
         ix.build_index(docs, one_based=True)
     ).select(F.lit("batch").alias("src"), "letter", "rank", "line")
-    chunked = read_index_version(
-        spark, _streamed_index_store(spark, sf_dir, docs)
-    )
-    streamed_idx = ix.assemble_chunked_index(chunked).withColumn(
-        "postings", F.transform("postings", lambda x: x + 1)
+    positions = read_serving_version(
+        spark, _streamed_serving_store(spark, sf_dir, docs)
+    )["positions"]
+    streamed_idx = ix.index_from_pairs(
+        positions.select("word", (F.col("doc_id") + 1).alias("doc_id"))
     )
     streamed_lines = format_index_lines(streamed_idx).select(
         F.lit("streamed").alias("src"), "letter", "rank", "line"

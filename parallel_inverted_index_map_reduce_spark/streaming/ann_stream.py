@@ -142,14 +142,16 @@ def start_incremental_ann(
         ).parquet(os.path.join(out, "centroids"))
         dv.write_manifest(
             out,
-            batch_id,
             {
-                "vectors": dv.extend_deltas(
-                    prev_man, "vectors", f"{rel}/vectors", "append"
-                ),
-                "centroids": dv.extend_deltas(
-                    prev_man, "centroids", f"{rel}/centroids", "full"
-                ),
+                "version": batch_id,
+                "artifacts": {
+                    "vectors": dv.extend_deltas(
+                        prev_man, "vectors", f"{rel}/vectors", "append"
+                    ),
+                    "centroids": dv.extend_deltas(
+                        prev_man, "centroids", f"{rel}/centroids", "full"
+                    ),
+                },
             },
         )
         eo.commit(store_dir, batch_id)

@@ -1,7 +1,7 @@
 """Delta-versioned streaming store protocol (manifest + live deltas).
 
 Through round 10 every streamed maintenance path (serving_stream /
-index_stream / ann_stream) wrote a COMPLETE snapshot per micro-batch —
+ann_stream) wrote a COMPLETE snapshot per micro-batch —
 O(store) per increment, measured at 560 s of sf10 ann_topk for the
 streamed ANN build alone, where the BATCH extend paths
 (operators/serving.py extend_search_index / extend_ann_index) are
@@ -15,11 +15,6 @@ Composition modes:
 - ``append``: version = union of the listed deltas (positions, doclen,
   docterms, vectors — artifacts where every row belongs to exactly one
   batch forever).
-- ``lww``: per-KEY last-writer-wins over the listed deltas in LIST
-  ORDER (the chunked index: a batch re-chunks only the words it
-  touches — ``merge_index_chunked(..., delta_only=True)`` — and its
-  delta carries those words' complete new rows, superseding every
-  earlier row for the same key).
 - ``full``: tiny O(1) artifacts rewritten per version (stats,
   centroids); the list is always exactly the owning version's copy.
 
@@ -42,9 +37,9 @@ references.
 
 At 100 TB this is the directory-layout equivalent of what a table
 format's snapshot+manifest metadata does (log-structured appends,
-last-writer-wins file groups, background compaction); the protocol
-here is dependency-free but shape-identical, so per-increment cost is
-bounded by the batch, never the store.
+background compaction); the protocol here is dependency-free but
+shape-identical, so per-increment cost is bounded by the batch, never
+the store.
 """
 
 from __future__ import annotations
@@ -53,8 +48,7 @@ import glob
 import json
 import os
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from . import sinks as eo
 
@@ -65,14 +59,16 @@ def manifest_path(version_dir: str) -> str:
     return os.path.join(version_dir, MANIFEST)
 
 
-def write_manifest(version_dir: str, version: int, artifacts: dict) -> None:
-    """Atomically land ``{version, artifacts}`` as the dir's manifest.
-    ``artifacts``: {name: {"mode": ..., "deltas": [relpaths], "key"?}}.
-    os.replace keeps a crashed rewrite from leaving a torn manifest."""
+def write_manifest(version_dir: str, manifest: dict) -> None:
+    """Atomically land ``manifest`` as the dir's manifest:
+    ``{"version": N, "artifacts": {name: {"mode": ..., "deltas":
+    [relpaths]}}}`` plus any store-level fields (the serving stream's
+    ``layout``). os.replace keeps a crashed rewrite from leaving a torn
+    manifest."""
     os.makedirs(version_dir, exist_ok=True)
     tmp = manifest_path(version_dir) + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"version": version, "artifacts": artifacts}, f, indent=1)
+        json.dump(manifest, f, indent=1)
     os.replace(tmp, manifest_path(version_dir))
 
 
@@ -90,8 +86,7 @@ def latest_committed_dir(store_dir: str) -> str | None:
 
 
 def extend_deltas(
-    prev_manifest: dict | None, name: str, own_rel: str, mode: str,
-    key: str | None = None,
+    prev_manifest: dict | None, name: str, own_rel: str, mode: str
 ) -> dict:
     """The manifest entry for ``name`` at the NEW version: the previous
     version's live-delta list (compaction rewrites flow through here
@@ -104,39 +99,21 @@ def extend_deltas(
         if prev_manifest is not None
         else []
     )
-    ent: dict = {"mode": mode, "deltas": prev + [own_rel]}
-    if key is not None:
-        ent["key"] = key
-    return ent
+    return {"mode": mode, "deltas": prev + [own_rel]}
 
 
-def compose(frames: list[DataFrame], mode: str, key: str | None = None) -> DataFrame:
+def compose(frames: list[DataFrame], mode: str) -> DataFrame:
     """The artifact a manifest entry denotes, from its per-delta frames
-    (in manifest list order). ``append``/``full`` union; ``lww`` keeps,
-    per key, only rows from the LAST listed delta containing that key —
-    one word-partitioned window over the unioned deltas, so a key/letter
-    filter still pushes below it (partition-key predicates push through
-    windows) and the serving paths keep their pruning."""
+    (in manifest list order): both modes are the union of the listed
+    deltas (a ``full`` list holds exactly one)."""
     if not frames:
         raise ValueError("empty delta list")
-    if mode in ("append", "full"):
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-    if mode != "lww":
+    if mode not in ("append", "full"):
         raise ValueError(f"unknown compose mode {mode!r}")
-    if key is None:
-        raise ValueError("lww compose requires a key")
-    tagged = frames[0].withColumn("_seq", F.lit(0))
-    for i, f in enumerate(frames[1:], start=1):
-        tagged = tagged.unionByName(f.withColumn("_seq", F.lit(i)))
-    w = Window.partitionBy(key)
-    return (
-        tagged.withColumn("_mx", F.max("_seq").over(w))
-        .where(F.col("_seq") == F.col("_mx"))
-        .drop("_seq", "_mx")
-    )
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def read_artifact(
@@ -146,7 +123,7 @@ def read_artifact(
     loads one delta directory (owns schema/inference policy)."""
     ent = man["artifacts"][name]
     frames = [read_one(os.path.join(store_dir, rel)) for rel in ent["deltas"]]
-    return compose(frames, ent["mode"], ent.get("key"))
+    return compose(frames, ent["mode"])
 
 
 # ------------------------------------------------------------- compaction
@@ -171,12 +148,8 @@ def finish_compaction(store_dir: str, version: int, rewrites: dict) -> None:
     vdir = os.path.join(store_dir, f"batch_id={version}")
     man = read_manifest(vdir)
     for name, rel in rewrites.items():
-        ent = man["artifacts"][name]
-        new_ent = {"mode": ent["mode"], "deltas": [rel]}
-        if "key" in ent:
-            new_ent["key"] = ent["key"]
-        man["artifacts"][name] = new_ent
-    write_manifest(vdir, man["version"], man["artifacts"])
+        man["artifacts"][name]["deltas"] = [rel]
+    write_manifest(vdir, man)
 
 
 def prune_versions(store_dir: str, keep: int = 1) -> int:
@@ -184,8 +157,8 @@ def prune_versions(store_dir: str, keep: int = 1) -> int:
     version's manifest references (retained = newest ``keep`` committed
     versions, whose own directories always survive — they hold the
     manifest and any version-local full artifacts). Markers go first,
-    data second (the index_stream invariant: a crash between the two
-    leaves an invisible directory, never a lying marker). Uncommitted
+    data second (a crash between the two leaves an invisible
+    directory, never a lying marker). Uncommitted
     directories are left for their replaying batch."""
     import shutil
 

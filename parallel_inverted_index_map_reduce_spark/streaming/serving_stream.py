@@ -1,14 +1,18 @@
-"""Streamed maintenance of the full SERVING layout — delta versions.
+"""Streamed maintenance of the SERVING layout — delta versions.
 
-streaming/index_stream.py maintains the chunked index incrementally;
-this module maintains everything a QUERY needs — positional postings,
-doclen, docterms, and the BM25 stats row — so the streamed artifact
-can serve bm25/phrase/more-like-this directly, with no batch job in
-between. Posting lists are the positions artifact's (word, doc_id)
-rows, exactly as in the batch store (operators/serving.py).
+This module maintains everything a QUERY needs over a document stream —
+positional postings, doclen, docterms, and the BM25 stats row — so the
+streamed artifact serves bm25/phrase/more-like-this and the formatted
+index lines directly, with no batch job in between. It is the only
+streamed text store: posting lists are the positions artifact's
+(word, doc_id) rows, exactly as in the batch store
+(operators/serving.py), and every positions/doclen/docterms row is
+the batch store's row — built by the same ``serving._positions_frame``
+/ ``_appendable_frames`` and read under the same ``_TEXT_LAYOUT``
+column schemas, ``tf`` included.
 
-Since round 11 versions are LOGICAL (streaming/deltas.py): each
-micro-batch writes ONLY its own contribution —
+Versions are LOGICAL (streaming/deltas.py): each micro-batch writes
+ONLY its own contribution —
 
 - ``positions`` / ``doclen`` / ``docterms``: append-mode deltas (every
   row belongs to exactly one batch forever, so composition is a plain
@@ -20,22 +24,23 @@ micro-batch writes ONLY its own contribution —
   double far past any corpus size, so the division is the same IEEE
   operation either way)
 
-— and a ``_MANIFEST.json`` naming the live deltas per artifact. The
-per-batch write cost is O(batch), the same shape as
-operators/serving.py's batch extend path, where the pre-round-11
-protocol rewrote the complete layout every micro-batch (O(store) per
-increment). Commit-marker crash safety is unchanged: deltas + manifest
-land before the marker, a version is complete-or-invisible, and a
-replayed batch rebuilds from the latest COMMITTED manifest — proven by
-the crash-injection test. Doc ids must be unique across the stream
-(append-only corpus), the same contract as extend_search_index.
+— and a ``_MANIFEST.json`` naming the live deltas per artifact and the
+text layout version its rows follow. A store written under an older
+row format (positions without ``tf``) is refused, never read with a
+null column. The per-batch write cost is O(batch), the same shape as
+operators/serving.py's batch extend path. Commit-marker crash safety:
+deltas + manifest land before the marker, a version is
+complete-or-invisible, and a replayed batch rebuilds from the latest
+COMMITTED manifest — proven by the crash-injection test. Doc ids must
+be unique across the stream (append-only corpus), the same contract as
+extend_search_index.
 
 Every positions delta is letter-partitioned parquet, so the
 query-side pruning (PartitionFilters + pushed word IN) holds per delta
 scan, matching the stored-table path; queries run through the SAME
 frame-parameterized bodies (serving.bm25_from_frames /
-phrase_from_frames), so streamed answers are the stored path's answers
-by construction. :func:`compact_serving_store` +
+phrase_from_frames / mlt_from_frames), so streamed answers are the
+stored path's answers by construction. :func:`compact_serving_store` +
 ``deltas.prune_versions`` are the offline maintenance pair that bounds
 the live-delta count.
 """
@@ -43,32 +48,39 @@ the live-delta count.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.index import positional_postings
+from ..operators.serving import (
+    _LAYOUT_VERSION,
+    _TEXT_LAYOUT,
+    _appendable_frames,
+    _positions_frame,
+    bm25_from_frames,
+    mlt_from_frames,
+    phrase_from_frames,
+)
 from . import deltas as dv
 from . import sinks as eo
+
+# the text-store tables a stream appends (batch-layout ``_<name>``)
+_APPENDED = ("positions", "doclen", "docterms")
 
 # artifact -> explicit read schema: a committed delta of a zero-row
 # batch has a directory with no part files, where schema inference
 # raises — explicit schemas keep every committed version readable (the
-# same empty-directory lesson as sinks.py's reader)
+# same empty-directory lesson as sinks.py's reader). The appended
+# tables read under the batch store's own column DDL; only stats keeps
+# its own row, for the incremental (n_dl, sum_dl) fold.
 ARTIFACTS = {
-    "positions": "word string, doc_id bigint, positions array<int>, letter string",
-    "doclen": "doc_id long, dl bigint",
-    "docterms": "doc_id long, word string, tf bigint",
+    **{a: _TEXT_LAYOUT[f"_{a}"].cols for a in _APPENDED},
     "stats": "n_docs long, avgdl double, n_dl long, sum_dl long",
 }
 
 # which deltas compose by union; stats is the O(1) per-version row
-MODES = {
-    "positions": ("append", None),
-    "doclen": ("append", None),
-    "docterms": ("append", None),
-    "stats": ("full", None),
-}
+MODES = {**{a: "append" for a in _APPENDED}, "stats": "full"}
 
 
 def _read_one(spark: SparkSession, artifact: str):
@@ -80,6 +92,32 @@ def _read_one(spark: SparkSession, artifact: str):
     return read
 
 
+def _write_appended(df: DataFrame, artifact: str, out_dir: str) -> None:
+    """Overwrite ``out_dir/<artifact>`` with ``df``, partitioned as the
+    batch layout partitions that table (positions by letter)."""
+    writer = df.write.mode("overwrite")
+    part = _TEXT_LAYOUT[f"_{artifact}"].part
+    if part:
+        writer = writer.partitionBy(part)
+    writer.parquet(os.path.join(out_dir, artifact))
+
+
+def _layout_manifest(version_dir: str) -> dict:
+    """The version's manifest, refused unless its rows follow the
+    current text layout: a store written before positions carried
+    ``tf`` would read that column back null, and BM25/MLT would score
+    nothing without a word of warning."""
+    man = dv.read_manifest(version_dir)
+    if man.get("layout") != _LAYOUT_VERSION:
+        raise ValueError(
+            f"streamed serving store {os.path.dirname(version_dir)} "
+            f"records text layout {man.get('layout')!r}, not "
+            f"{_LAYOUT_VERSION}: its rows predate the batch store's row "
+            "format — replay the stream into a fresh store directory"
+        )
+    return man
+
+
 def read_serving_version(
     spark: SparkSession, store_dir: str
 ) -> dict[str, DataFrame] | None:
@@ -88,11 +126,22 @@ def read_serving_version(
     latest = dv.latest_committed_dir(store_dir)
     if latest is None:
         return None
-    man = dv.read_manifest(latest)
+    man = _layout_manifest(latest)
     return {
         a: dv.read_artifact(store_dir, man, a, _read_one(spark, a))
         for a in ARTIFACTS
     }
+
+
+def _committed_version(
+    spark: SparkSession, store_dir: str
+) -> dict[str, DataFrame]:
+    """:func:`read_serving_version` for a query: no committed version
+    is a loud FileNotFoundError."""
+    v = read_serving_version(spark, store_dir)
+    if v is None:
+        raise FileNotFoundError(f"no committed serving version in {store_dir}")
+    return v
 
 
 def start_incremental_serving(
@@ -107,30 +156,21 @@ def start_incremental_serving(
         if eo.is_committed(store_dir, batch_id):
             return  # replay of a committed batch: drop it
         spark = batch_docs.sparkSession
-        batch = batch_docs.localCheckpoint()
+        # a regenerated corpus can carry int32 doc ids (the schema-drift
+        # contract); normalize to the layout's bigint so every delta
+        # composes under the one schema
+        batch = batch_docs.withColumn(
+            "doc_id", F.col("doc_id").cast("long")
+        ).localCheckpoint()
         prev_dir = dv.latest_committed_dir(store_dir)
-        prev_man = dv.read_manifest(prev_dir) if prev_dir else None
+        prev_man = _layout_manifest(prev_dir) if prev_dir else None
 
-        # ONE tokenization of the batch: the pinned positional frame
-        # feeds positions, doclen and docterms.
+        # ONE tokenization of the batch: the pinned positions frame
+        # feeds positions, doclen and docterms — the batch store's rows.
         # EAGER: the three artifact writes below run concurrently, and
         # a lazy checkpoint materialized by racing jobs would tokenize
         # once per racer — materialize first, fan out after.
-        new_pos = (
-            positional_postings(batch)
-            # a regenerated corpus can carry int32 doc ids (the
-            # schema-drift contract); normalize to the delta's declared
-            # bigint so every delta composes under the one schema
-            .withColumn("doc_id", F.col("doc_id").cast("long"))
-            .withColumn("letter", F.substring("word", 1, 1))
-            .localCheckpoint()
-        )
-        new_dl = new_pos.groupBy("doc_id").agg(
-            F.sum(F.size("positions")).cast("long").alias("dl")
-        )
-        new_dt = new_pos.select(
-            "doc_id", "word", F.size("positions").cast("long").alias("tf")
-        )
+        frames = _appendable_frames(_positions_frame(batch).localCheckpoint())
         n_batch = batch.count()
         if prev_man is None:
             prev_stats = {"n_docs": 0, "n_dl": 0, "sum_dl": 0}
@@ -142,35 +182,20 @@ def start_incremental_serving(
         out = eo.batch_dir(store_dir, batch_id)
         rel = os.path.basename(out)
 
-        # The three artifact writes are independent once new_pos is
-        # materialized: submit them from a small thread pool so their
-        # jobs overlap instead of serializing (guide-style concurrent
-        # independent jobs — the per-batch fixed cost at small batch
-        # sizes is mostly these write jobs' scheduling + commit
-        # latency). Any failure propagates out of
+        # The three artifact writes are independent once the positions
+        # frame is materialized: submit them from a small thread pool so
+        # their jobs overlap instead of serializing (the per-batch fixed
+        # cost at small batch sizes is mostly these write jobs'
+        # scheduling + commit latency). Any failure propagates out of
         # result(), the batch aborts, and no commit marker lands —
         # partially written artifact dirs stay invisible, exactly the
-        # crash-injection contract.
-        def _w_positions() -> None:
-            new_pos.write.mode("overwrite").partitionBy("letter").parquet(
-                os.path.join(out, "positions")
-            )
-
-        def _w_doclen() -> None:
-            new_dl.write.mode("overwrite").parquet(os.path.join(out, "doclen"))
-
-        # doc-major transpose, an append delta like doclen — norms are
-        # NOT maintained: they bake idf, which every batch moves, so
-        # the streamed MLT recomputes them at query time (the same
-        # stale-norms fallback the batch store uses between compactions)
-        def _w_docterms() -> None:
-            new_dt.write.mode("overwrite").parquet(os.path.join(out, "docterms"))
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        # crash-injection contract. Norms are NOT maintained: they bake
+        # idf, which every batch moves, so the streamed MLT recomputes
+        # them at query time (the batch store's stale-norms path).
+        with ThreadPoolExecutor(max_workers=len(_APPENDED)) as pool:
             for fut in [
-                pool.submit(w) for w in (_w_positions, _w_doclen, _w_docterms)
+                pool.submit(_write_appended, frames[f"_{a}"], a, out)
+                for a in _APPENDED
             ]:
                 fut.result()
         # fold the WRITTEN doclen delta into the previous counters
@@ -179,8 +204,7 @@ def start_incremental_serving(
         # readable). Integer sums stay exact in double, so
         # sum_dl / n_dl IS AVG(dl) over the composed doclen.
         d = (
-            spark.read.schema(ARTIFACTS["doclen"])
-            .parquet(os.path.join(out, "doclen"))
+            _read_one(spark, "doclen")(os.path.join(out, "doclen"))
             .agg(
                 F.count("*").cast("long").alias("n"),
                 F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("s"),
@@ -197,12 +221,13 @@ def start_incremental_serving(
 
         dv.write_manifest(
             out,
-            batch_id,
             {
-                a: dv.extend_deltas(
-                    prev_man, a, f"{rel}/{a}", MODES[a][0], key=MODES[a][1]
-                )
-                for a in ARTIFACTS
+                "version": batch_id,
+                "layout": _LAYOUT_VERSION,
+                "artifacts": {
+                    a: dv.extend_deltas(prev_man, a, f"{rel}/{a}", MODES[a])
+                    for a in ARTIFACTS
+                },
             },
         )
         eo.commit(store_dir, batch_id)
@@ -226,15 +251,12 @@ def compact_serving_store(spark: SparkSession, store_dir: str) -> int:
     if latest is None:
         raise FileNotFoundError(f"no committed serving version in {store_dir}")
     version = int(latest.rsplit("=", 1)[1])
-    man = dv.read_manifest(latest)
+    man = _layout_manifest(latest)
     cdir = dv.compact_dir(store_dir, version)
     rewrites = {}
-    for a in ("positions", "doclen", "docterms"):
+    for a in _APPENDED:
         composed = dv.read_artifact(store_dir, man, a, _read_one(spark, a))
-        writer = composed.write.mode("overwrite")
-        if a == "positions":
-            writer = writer.partitionBy("letter")
-        writer.parquet(os.path.join(cdir, a))
+        _write_appended(composed, a, cdir)
         rewrites[a] = f"{os.path.basename(cdir)}/{a}"
     dv.finish_compaction(store_dir, version, rewrites)
     return version
@@ -250,11 +272,7 @@ def bm25_search_version(
 ) -> DataFrame:
     """BM25 top-k served from the latest committed streamed snapshot —
     the same frame-parameterized body as the stored-table path."""
-    from ..operators.serving import bm25_from_frames
-
-    v = read_serving_version(spark, store_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed serving version in {store_dir}")
+    v = _committed_version(spark, store_dir)
     st = v["stats"].first()
     return bm25_from_frames(
         v["positions"],
@@ -272,12 +290,9 @@ def phrase_search_version(
     spark: SparkSession, store_dir: str, phrase: str
 ) -> DataFrame:
     """Exact-phrase match served from the latest committed snapshot."""
-    from ..operators.serving import phrase_from_frames
-
-    v = read_serving_version(spark, store_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed serving version in {store_dir}")
-    return phrase_from_frames(v["positions"], phrase)
+    return phrase_from_frames(
+        _committed_version(spark, store_dir)["positions"], phrase
+    )
 
 
 def mlt_search_version(
@@ -288,11 +303,7 @@ def mlt_search_version(
     path (serving.mlt_from_frames); norms recompute from the docterms
     composition at query time (idf moves every batch, so a norms
     artifact would be stale the moment the next batch lands)."""
-    from ..operators.serving import mlt_from_frames
-
-    v = read_serving_version(spark, store_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed serving version in {store_dir}")
+    v = _committed_version(spark, store_dir)
     return mlt_from_frames(
         v["docterms"],
         v["positions"],

@@ -32,6 +32,7 @@ def spark():
 # invocation-dir independent.
 _SLOW_TESTS = {
     ("test_ann_serving.py", "test_stored_ann_matches_in_session_ivf"),
+    ("test_cli_and_formats.py", "test_cli_ann_ids_on_quantized_store_exits_2"),
     ("test_cli_and_formats.py", "test_cli_ann_store_then_ann_across_processes"),
     ("test_cli_and_formats.py", "test_cli_builds_reference_output"),
     ("test_cli_and_formats.py", "test_cli_compact_after_plain_extend_refreshes_norms"),
@@ -51,7 +52,7 @@ _SLOW_TESTS = {
     ("test_determinism.py", "test_result_invariant_to_shuffle_partitions[dedup_clusters]"),
     ("test_determinism.py", "test_result_invariant_to_shuffle_partitions[ranked_retrieval]"),
     ("test_dsum_properties.py", "test_dsum_exact_and_partition_independent"),
-    ("test_index_properties.py", "test_chunked_build_and_merge_equal_plain_on_random_corpora"),
+    ("test_index_properties.py", "test_chunked_build_equals_plain_on_random_corpora"),
     ("test_index_storage.py", "test_extend_rejects_duplicate_doc_ids"),
     ("test_index_storage.py", "test_extend_search_index_equals_full_rebuild"),
     ("test_more_like_this.py", "test_mlt_stored_lifecycle_matches_scan"),

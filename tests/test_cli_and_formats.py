@@ -386,6 +386,35 @@ def test_cli_ann_store_then_ann_across_processes(spark, tmp_path):
     assert res.returncode == 2 and "--ids" in res.stderr
 
 
+def test_cli_ann_ids_on_quantized_store_exits_2(spark, tmp_path):
+    """An int8-quantized ANN store keeps (q, q_scale), not the float
+    embeddings ``--ids`` would query with: the CLI exits 2 and says to
+    pass a queries parquet, instead of crashing on an unresolved
+    column."""
+    import os
+
+    emb = tmp_path / "emb.parquet"
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.7, 0.7])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1).write.mode("overwrite").parquet(str(emb))
+    env = dict(os.environ, SPARK_GRAFT_WAREHOUSE=str(tmp_path / "wh"))
+
+    def cli(*args):
+        return subprocess.run(
+            [sys.executable, "-m", "parallel_inverted_index_map_reduce_spark", *args],
+            cwd=REPO, capture_output=True, text=True, timeout=300, env=env,
+        )
+
+    res = cli("ann-store", str(emb), "--base", "qann", "--lists", "2",
+              "--quantize")
+    assert res.returncode == 0, res.stderr[-2000:]
+    res = cli("ann", "--stored", "qann", "--ids", "0")
+    assert res.returncode == 2, res.stderr[-2000:]
+    assert "queries .parquet" in res.stderr
+    assert "UNRESOLVED_COLUMN" not in res.stderr
+
+
 def test_cli_search_without_manifest_or_store_errors(tmp_path):
     res = subprocess.run(
         [

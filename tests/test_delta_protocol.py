@@ -1,5 +1,5 @@
 """The delta-versioned streaming store protocol (streaming/deltas.py):
-composition modes, compaction's content-equal atomic repoint, pruning's
+per-batch deltas, compaction's content-equal atomic repoint, pruning's
 reference rule, and — the property the round-11 rewrite exists for —
 that a stream CONTINUED after compaction inherits the compacted
 composition instead of the superseded per-batch deltas."""
@@ -22,19 +22,6 @@ from .conftest import SF_ORACLE
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def test_compose_lww_last_listed_delta_wins(spark):
-    a = spark.createDataFrame(
-        [("w1", 1, [1]), ("w2", 0, [2])], "word string, c int, p array<int>"
-    )
-    b = spark.createDataFrame(
-        [("w2", 0, [2, 3]), ("w3", 0, [4])], "word string, c int, p array<int>"
-    )
-    got = _rows(dv.compose([a, b], "lww", "word"))
-    assert got == [("w1", 1, [1]), ("w2", 0, [2, 3]), ("w3", 0, [4])]
-    # and list order is the tie-break: reversed lists resolve to a
-    assert ("w2", 0, [2]) in _rows(dv.compose([b, a], "lww", "word"))
 
 
 def test_ann_delta_writes_are_per_batch_and_compaction_is_content_equal(
@@ -149,16 +136,28 @@ def test_serving_compaction_preserves_queries_and_stats(spark, tmp_path):
     docs.repartition(3).write.parquet(src)
     store = str(tmp_path / "serv")
     ckpt = str(tmp_path / "ckpt")
-    q = svs.start_incremental_serving(
-        (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        ),
-        store,
-        ckpt,
-    )
-    assert q.awaitTermination(420)
+
+    def _run():
+        q = svs.start_incremental_serving(
+            (
+                spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            ),
+            store,
+            ckpt,
+        )
+        assert q.awaitTermination(420)
+
+    _run()
+    assert len(svs.eo.committed_batch_dirs(store)) == 3
+    # restart with the same checkpoint: no new files -> no new version
+    _run()
+    assert len(svs.eo.committed_batch_dirs(store)) == 3
+    # every delta the latest manifest lists is LIVE: pruning before
+    # compaction must remove nothing
+    assert dv.prune_versions(store, keep=1) == 0
+    assert len(svs.eo.committed_batch_dirs(store)) == 3
 
     v = svs.read_serving_version(spark, store)
     st = v["stats"].first()
@@ -181,6 +180,18 @@ def test_serving_compaction_preserves_queries_and_stats(spark, tmp_path):
         f"batch_id={version}/stats"
     ]
     assert dv.prune_versions(store, keep=1) == version
+    # no marker without its data directory after pruning (a marker-only
+    # state would make is_committed lie to the replay guard and
+    # silently drop a redelivered batch)
+    markers = {
+        m.rsplit("_", 1)[1]
+        for m in glob.glob(os.path.join(store, "_committed_*"))
+    }
+    data = {
+        d.rsplit("=", 1)[1]
+        for d in glob.glob(os.path.join(store, "batch_id=*"))
+    }
+    assert markers and markers <= data, (markers, data)
     assert _rows(
         svs.bm25_search_version(spark, store, "the world")
     ) == bm25_before
@@ -193,12 +204,16 @@ def test_manifest_is_json_and_invisible_to_parquet_reads(spark, tmp_path):
     """The manifest lands atomically as an underscore file, so Spark's
     parquet listing ignores it inside a delta directory."""
     d = str(tmp_path / "v")
-    dv.write_manifest(d, 7, {"x": {"mode": "append", "deltas": ["a"]}})
+    dv.write_manifest(
+        d, {"version": 7, "artifacts": {"x": {"mode": "append", "deltas": ["a"]}}}
+    )
     with open(os.path.join(d, "_MANIFEST.json")) as f:
         man = json.load(f)
     assert man["version"] == 7 and man["artifacts"]["x"]["deltas"] == ["a"]
     spark.createDataFrame([(1,)], "i int").write.mode("overwrite").parquet(d)
     # overwrite dropped the manifest with the dir (the replay contract);
     # rewrite and confirm the parquet read still sees only data rows
-    dv.write_manifest(d, 7, {"x": {"mode": "append", "deltas": ["a"]}})
+    dv.write_manifest(
+        d, {"version": 7, "artifacts": {"x": {"mode": "append", "deltas": ["a"]}}}
+    )
     assert spark.read.parquet(d).count() == 1

@@ -13,7 +13,6 @@ from parallel_inverted_index_map_reduce_spark.operators.index import (
     build_index_chunked,
     build_index_scalable,
     merge_index,
-    merge_index_chunked,
 )
 from parallel_inverted_index_map_reduce_spark.operators.maintenance import (
     merge_upsert,
@@ -104,32 +103,6 @@ def test_chunked_index_reassembles_to_plain_build(spark, chunk_size):
         for r in build_index(docs).collect()
     )
     assert a == b
-
-
-def test_merge_index_chunked_reingest_is_idempotent(spark):
-    """Re-merging documents that are already in the chunked index must
-    change nothing: per-word postings are distinct-merged, so a replayed
-    or duplicated ingest cannot corrupt chunk boundaries or df."""
-    docs = load_table(spark, SF_ORACLE, "documents")
-    once = build_index_chunked(docs, chunk_size=16)
-    again = merge_index_chunked(once, docs.limit(50), chunk_size=16)
-    key = lambda r: (r.letter, r.word, r.chunk_id, r.df, tuple(r.postings))
-    assert sorted(map(key, again.collect())) == sorted(map(key, once.collect()))
-
-
-def test_merge_index_chunked_equals_full_rebuild(spark):
-    """Incremental chunked maintenance == from-scratch chunked rebuild,
-    at a chunk size small enough to force re-chunking across chunk
-    boundaries; words untouched by the new docs pass through."""
-    docs = load_table(spark, SF_ORACLE, "documents")
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-    merged = merge_index_chunked(
-        build_index_chunked(old, chunk_size=16), new, chunk_size=16
-    )
-    full = build_index_chunked(docs, chunk_size=16)
-    key = lambda r: (r.letter, r.word, r.chunk_id, r.df, tuple(r.postings))
-    assert sorted(map(key, merged.collect())) == sorted(map(key, full.collect()))
 
 
 def test_merge_upsert_snapshot_semantics(spark):
