@@ -530,6 +530,62 @@ def decimal_dot_expr(a: Column, b: Column) -> Column:
     )
 
 
+def _build_decimal_rounding():
+    """Scalar and vectorized twins of the expression's per-component
+    rounding, built as CLOSURES for the same reason as
+    :func:`_build_decimal_cosine_batches` (cloudpickle ships them by
+    value). Returns ``(java_round_half_up, exact_units9, units9)``:
+
+    - ``java_round_half_up(d, scale)``: Java's
+      ``BigDecimal.valueOf(d).setScale(scale, HALF_UP)`` as a Decimal;
+    - ``exact_units9(p)``: one product through the expression chain
+      round(p, 7) -> double -> decimal(28,9), as integer 1e-9 units;
+    - ``units9(P)``: the same for an array of finite products — a
+      scaled-binary half-up floor(|p|*1e7 + 0.5), with every component
+      the binary arithmetic cannot decide recomputed by
+      ``exact_units9``."""
+
+    def java_round_half_up(d, scale):
+        import decimal
+
+        with decimal.localcontext() as ctx:
+            ctx.prec = 60
+            return decimal.Decimal(repr(d)).quantize(
+                decimal.Decimal(1).scaleb(-scale),
+                rounding=decimal.ROUND_HALF_UP,
+            )
+
+    def exact_units9(p):
+        # the expression chain for one component, in exact decimals:
+        # round(p, 7) -> double -> cast decimal(28,9)
+        r_prime = float(java_round_half_up(p, 7))
+        return int(java_round_half_up(r_prime, 9).scaleb(9))
+
+    def units9(P):
+        import numpy as np
+
+        U = np.abs(P) * 1e7
+        M = np.floor(U + 0.5)
+        np.copysign(M, P, out=M)
+        units = (M * 100.0).astype(np.int64)  # 1e-7 -> 1e-9 scale units
+        frac = U - np.floor(U)
+        # U is off the scaled decimal repr(p)*1e7 by up to ~1.1 ulp(U)
+        # (half an ulp from the multiply, up to 0.6 from repr's own
+        # half-ulp gap scaled by 1e7), which outgrows a fixed 1e-6 once
+        # |p| passes ~400
+        band = np.maximum(1e-6, 4.0 * np.spacing(U))
+        suspect = (np.abs(frac - 0.5) < band) | (np.abs(P) >= 1e4)
+        if suspect.any():
+            rows, cols = np.nonzero(suspect)
+            for r, c in zip(rows.tolist(), cols.tolist()):
+                p = float(P[r, c])
+                if np.isfinite(p):
+                    units[r, c] = exact_units9(p)
+        return units
+
+    return java_round_half_up, exact_units9, units9
+
+
 def _build_decimal_cosine_batches():
     """Self-contained mapInPandas worker for
     :func:`decimal_cosine_pairs_vectorized`, built as a CLOSURE so
@@ -565,11 +621,13 @@ def _build_decimal_cosine_batches():
 
     - products vectorized over rows per component (same IEEE op);
     - round-7 via scaled-binary half-up floor(|p|*1e7 + 0.5) with an
-      EXACT fallback: any component whose |p|*1e7 lies within 1e-6 of
-      a half-integer (covers the multiply's ulp error plus the
-      repr-vs-binary gap), or with |p| >= 1e4, is recomputed through
-      the scalar decimal twin (round 7, then the double round-trip
-      and the scale-9 cast, exactly as the expression chain does). For
+      EXACT fallback (``units9`` of :func:`_build_decimal_rounding`):
+      any component whose |p|*1e7 lies within max(1e-6, 4 ulp) of a
+      half-integer (covers the multiply's half-ulp error plus the
+      repr-vs-binary gap, ~1.1 ulp together), or with |p| >= 1e4, is
+      recomputed through the scalar decimal twin (round 7, then the
+      double round-trip and the scale-9 cast, exactly as the
+      expression chain does). For
       |p| < 1e4 the fast integer path IS the expression value: the
       rounded double r' round-trips to the scale-7 decimal r, and any
       shorter decimal in r's ulp interval differs by < 5e-10, so the
@@ -585,28 +643,15 @@ def _build_decimal_cosine_batches():
       expression does (NaN product -> decimal cast NULL -> NULL dot ->
       NULL cosine); a ZERO denominator nulls the row (Spark's legacy
       Divide semantics — under ANSI the expression form raises there
-      instead, but zero-norm vectors never reach real query paths);
+      instead; the pair call sites drop zero-norm vectors first, see
+      :func:`_nonzero_norm`);
       a NaN dot over a nonzero denominator passes through round
       unchanged.
 
     Results are per-row and batch-size independent, so partitioning
     and Arrow framing cannot change them."""
 
-    def java_round_half_up(d, scale):
-        import decimal
-
-        with decimal.localcontext() as ctx:
-            ctx.prec = 60
-            return decimal.Decimal(repr(d)).quantize(
-                decimal.Decimal(1).scaleb(-scale),
-                rounding=decimal.ROUND_HALF_UP,
-            )
-
-    def exact_units9(p):
-        # the expression chain for one component, in exact decimals:
-        # round(p, 7) -> double -> cast decimal(28,9)
-        r_prime = float(java_round_half_up(p, 7))
-        return int(java_round_half_up(r_prime, 9).scaleb(9))
+    java_round_half_up, _, units9 = _build_decimal_rounding()
 
     def run(batches):
         import numpy as np
@@ -632,24 +677,11 @@ def _build_decimal_cosine_batches():
             finite = np.isfinite(P).all(axis=1)
             if not finite.all():
                 P = np.where(np.isfinite(P), P, 0.0)  # rows masked out below
-            U = np.abs(P) * 1e7
-            M = np.floor(U + 0.5)
-            np.copysign(M, P, out=M)
-            units = (M * 100.0).astype(np.int64)  # 1e-7 -> 1e-9 scale units
-            frac = U - np.floor(U)
-            suspect = (np.abs(frac - 0.5) < 1e-6) | (np.abs(P) >= 1e4)
-            if suspect.any():
-                rows, cols = np.nonzero(suspect)
-                for r, c in zip(rows.tolist(), cols.tolist()):
-                    p = float(P[r, c])
-                    if np.isfinite(p):
-                        units[r, c] = exact_units9(p)
-            S = units.sum(axis=1)
+            S = units9(P).sum(axis=1)
             dot = S.astype(np.float64) / 1e9  # exact: |S| << 2^53, 1e9 exact
             denom = np.sqrt(pdf["na"].to_numpy()) * np.sqrt(pdf["nb"].to_numpy())
             # Spark's Divide nulls out on a zero divisor (legacy mode;
-            # ANSI raises, but zero-norm vectors never reach real query
-            # paths)
+            # ANSI raises)
             nullrow = (~finite) | (denom == 0.0)
             with np.errstate(divide="ignore", invalid="ignore"):
                 q = dot / np.where(denom == 0.0, np.nan, denom)
@@ -660,7 +692,8 @@ def _build_decimal_cosine_batches():
                 cos = np.where(qfinite, m6, 0.0) / 1e6 + 0.0  # -0.0 -> 0.0
                 cos = np.where(qfinite, cos, q)  # NaN/Inf pass through round
                 f6 = u6 - np.floor(u6)
-            s6 = qfinite & ((np.abs(f6 - 0.5) < 1e-6) | (np.abs(q) >= 1e9))
+                b6 = np.maximum(1e-6, 4.0 * np.spacing(u6))  # as in units9
+            s6 = qfinite & ((np.abs(f6 - 0.5) < b6) | (np.abs(q) >= 1e9))
             for i in np.nonzero(s6)[0].tolist():
                 cos[i] = float(java_round_half_up(float(q[i]), 6)) + 0.0
             out = pdf[["vec_a", "vec_b"]].copy()
@@ -918,9 +951,21 @@ def bucketed_near_dups(
         from .dedup import _cap_buckets  # one cap implementation, one contract
 
         enriched = _cap_buckets(enriched, ["bucket"], max_bucket)
-    return _grouped_pairs_cosine(enriched, "bucket").where(
+    return _grouped_pairs_cosine(_nonzero_norm(enriched), "bucket").where(
         F.col("cosine") >= threshold
     )
+
+
+def _nonzero_norm(enriched: DataFrame) -> DataFrame:
+    """Drop vectors whose decimal ``norm_sq`` is 0 before pair scoring:
+    all-zero vectors, and nonzero ones whose squared components all
+    round to 0 at 7 decimals. Every pair with such a vector divides by
+    zero — the expression form raises under ANSI, the vectorized scorer
+    nulls the row — so no threshold can keep it, and dropping the
+    vector gives both forms the same answer. Applied after any size
+    cap, so the cap still counts every nonempty member, as
+    :func:`bucketed_overflow` does."""
+    return enriched.where(F.col("norm_sq") > 0)
 
 
 def _grouped_pairs_cosine(
@@ -1045,7 +1090,7 @@ def semantic_dedup(
         from .dedup import _cap_buckets
 
         enriched = _cap_buckets(enriched, ["list_id"], max_cluster)
-    near = _grouped_pairs_cosine(enriched, "list_id").where(
+    near = _grouped_pairs_cosine(_nonzero_norm(enriched), "list_id").where(
         F.col("cosine") >= threshold
     )
     # vec_a < vec_b by construction: every vec_b of a qualifying pair

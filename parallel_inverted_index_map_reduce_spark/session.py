@@ -4,7 +4,10 @@ Local testing runs on ``local[N]`` but every setting is chosen to also
 make sense on a 1000-executor cluster: AQE on (runtime skew/coalesce),
 Arrow on (Pandas-UDF fast path), UTC session timezone (deterministic
 timestamp semantics vs the DuckDB oracle), broadcast threshold left at
-default so small dims broadcast automatically.
+default so small dims broadcast automatically. File listing stays on the
+driver for path lists of manifest size (up to 1024 root paths) and
+becomes a distributed listing job only above that, so reading a
+manifest's files launches no job before the scan.
 """
 
 from __future__ import annotations
@@ -53,6 +56,19 @@ def get_spark(
         # packing sane at 100 TB while letting modest scans fan out to
         # full parallelism. Measured: lineitem sf0.1 scan 3 -> 32 tasks.
         .config("spark.sql.files.openCostInBytes", "262144")
+        # A read of more root paths than this threshold lists them in a
+        # Spark job with one task per path; at or below it the driver
+        # lists them serially. Measured warm on local[4] over local
+        # files: serial listing costs ~0.2 ms per path (1,000 paths in
+        # 0.31 s, 4,000 in 0.73 s), while the job costs 0.33 s more
+        # than serial at 33 paths and 1.2 s more at 200, and its tasks
+        # queue behind every other query's. Spark's default of 32 sends
+        # a 200-file manifest to that job. At 1024 a serial listing
+        # (~0.3 s) stays under the job's fixed cost; larger manifests,
+        # up to millions of files, still list in parallel. Spark reads
+        # this only from the session conf; stores whose status calls
+        # take milliseconds each break even lower and can set it there.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

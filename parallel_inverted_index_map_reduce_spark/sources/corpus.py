@@ -7,12 +7,21 @@ FIFO queue + guarded counter (/root/reference/src/main.cpp:96-105) and
 prints ids 1-based (/root/reference/src/main.cpp:312).
 
 Spark re-expression: ids derive from the manifest itself (driver-side
-enumerate → small DataFrame), NOT ``monotonically_increasing_id()`` —
-that function is not stable across partitionings, which is exactly the
-trap SURVEY.md §7 calls out. The manifest is tiny metadata (one row per
-file); at 100 TB the file *contents* are the big side and are read by
-executors via ``spark.read.text``, while the manifest stays a broadcast
-dimension.
+enumerate), NOT ``monotonically_increasing_id()`` — that function is not
+stable across partitionings, which is exactly the trap SURVEY.md §7
+calls out. The manifest is tiny metadata (one row per file); at 100 TB
+the file *contents* are the big side and are read by executors via
+``spark.read.text``, while the manifest stays a broadcast dimension.
+
+Nothing before the scan runs a Spark job:
+- the path list handed to ``spark.read.text`` is the parse's own list,
+  never a round trip through a DataFrame;
+- the manifest table is a local relation (``LocalTableScan``) built
+  from a pandas frame over Arrow, so broadcasting it needs no Python
+  workers;
+- Spark lists the files on the driver for path lists up to the
+  session's ``parallelPartitionDiscovery.threshold`` (see session.py)
+  and with a distributed listing job above it.
 """
 
 from __future__ import annotations
@@ -31,23 +40,41 @@ MANIFEST_SCHEMA = StructType(
 )
 
 
+def _manifest_paths(manifest_path: str, base_dir: str | None) -> list[str]:
+    """The manifest's file paths in manifest order, resolved against
+    ``base_dir`` (defaults to the manifest's directory, mirroring the
+    reference's ``../checker/`` convention without hardcoding it)."""
+    if base_dir is None:
+        base_dir = os.path.dirname(os.path.abspath(manifest_path))
+    with open(manifest_path, encoding="utf-8", errors="replace") as fh:
+        tokens = fh.read().split()
+    count = int(tokens[0])
+    return [os.path.join(base_dir, p) for p in tokens[1 : 1 + count]]
+
+
+def _manifest_table(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """(doc_id, path) as a local relation. A pandas frame converts over
+    Arrow (on in ``get_spark`` sessions) into a ``LocalTableScan``; a
+    list of tuples, or a pandas frame with Arrow off, plans ``Scan
+    ExistingRDD`` over a Python RDD, and every broadcast of that runs a
+    job through Python workers."""
+    import pandas as pd
+
+    ids = range(1, len(paths) + 1)  # 1-based, manifest order
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "path": paths}), MANIFEST_SCHEMA
+    )
+
+
 def read_manifest(spark: SparkSession, manifest_path: str, base_dir: str | None = None) -> DataFrame:
     """Parse the reference manifest format: ``<count>\n<path>\n...``.
 
     Returns (doc_id, path) with doc_id 1-based in manifest order — the
     id the reference prints (main.cpp:312 does ``file_id + 1``).
     Paths resolve relative to ``base_dir`` (defaults to the manifest's
-    directory, mirroring the reference's ``../checker/`` convention
-    without hardcoding it).
+    directory).
     """
-    if base_dir is None:
-        base_dir = os.path.dirname(os.path.abspath(manifest_path))
-    with open(manifest_path, encoding="utf-8", errors="replace") as fh:
-        tokens = fh.read().split()
-    count = int(tokens[0])
-    paths = tokens[1 : 1 + count]
-    rows = [(i + 1, os.path.join(base_dir, p)) for i, p in enumerate(paths)]
-    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    return _manifest_table(spark, _manifest_paths(manifest_path, base_dir))
 
 
 def read_manifest_corpus(
@@ -56,20 +83,20 @@ def read_manifest_corpus(
     """Load a manifest's files as a ``(doc_id, text)`` documents DataFrame.
 
     Executors read the text files in parallel (``spark.read.text`` with
-    the full path list); the doc_id comes from joining ``input_file_name``
-    back to the tiny manifest dimension, which Spark auto-broadcasts.
+    the path list straight from the parse); the doc_id comes from
+    joining ``input_file_name`` back to the manifest, a local relation
+    that is broadcast. Construction runs no Spark job: up to the
+    session's listing threshold the files are listed on the driver.
     One row per line is fine — tokenization explodes on whitespace anyway,
     and keeping lines (not whole files) as rows bounds row size at scale.
     """
-    manifest = read_manifest(spark, manifest_path, base_dir)
-    lines = spark.read.text(_paths(manifest)).select(
+    paths = _manifest_paths(manifest_path, base_dir)
+    lines = spark.read.text(paths).select(
         F.input_file_name().alias("file_uri"), F.col("value").alias("text")
     )
-    return _join_manifest(lines, manifest).select("doc_id", "text")
-
-
-def _paths(manifest: DataFrame) -> list[str]:
-    return [r.path for r in manifest.collect()]  # tiny: one entry per file
+    return _join_manifest(lines, _manifest_table(spark, paths)).select(
+        "doc_id", "text"
+    )
 
 
 def _join_manifest(files: DataFrame, manifest: DataFrame) -> DataFrame:
@@ -101,11 +128,11 @@ def manifest_documents(spark: SparkSession, manifest_path: str, base_dir: str | 
     groupBy shuffle entirely; newlines normalize to single spaces so the
     result matches the line-join form on single-line corpora.
     """
-    manifest = read_manifest(spark, manifest_path, base_dir)
-    files = spark.read.text(_paths(manifest), wholetext=True).select(
+    paths = _manifest_paths(manifest_path, base_dir)
+    files = spark.read.text(paths, wholetext=True).select(
         F.input_file_name().alias("file_uri"), F.col("value").alias("raw")
     )
-    return _join_manifest(files, manifest).select(
+    return _join_manifest(files, _manifest_table(spark, paths)).select(
         "doc_id",
         F.trim(F.regexp_replace("raw", r"(\r?\n)+", " ")).alias("text"),
     )

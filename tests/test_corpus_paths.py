@@ -48,3 +48,50 @@ def test_manifest_documents_preserves_line_order(spark, tmp_path):
     docs = {r.doc_id: r.text for r in manifest_documents(spark, m).collect()}
     assert docs[1] == "first line second line third line"
     assert docs[2] == "only one"
+
+
+def _forty_file_corpus(tmp_path) -> tuple[str, dict[int, str]]:
+    """40 files — past Spark's 32-path parallel-listing default — with
+    the two percent-encoding cases among them."""
+    names = [f"doc{i:02d}.txt" for i in range(1, 41)]
+    names[6] = "plus+file.txt"
+    names[29] = "pct%file.txt"
+    files = {name: f"text of document {i}" for i, name in enumerate(names, 1)}
+    return _mk_corpus(tmp_path, files), {
+        i: f"text of document {i}" for i in range(1, 41)
+    }
+
+
+def test_forty_file_manifest_keeps_every_id(spark, tmp_path):
+    m, expected = _forty_file_corpus(tmp_path)
+    lines = {r.doc_id: r.text for r in read_manifest_corpus(spark, m).collect()}
+    docs = {r.doc_id: r.text for r in manifest_documents(spark, m).collect()}
+    assert lines == expected
+    assert docs == expected
+
+
+def test_constructing_the_corpus_runs_no_spark_job(spark, tmp_path):
+    """The manifest is parsed in Python, its table is a local relation
+    and manifest-sized path lists are listed on the driver, so building
+    the documents frame launches nothing until the scan."""
+    m, _ = _forty_file_corpus(tmp_path)
+    sc = spark.sparkContext
+    group = "test-corpus-construct"
+    sc.setJobGroup(group, "construct read_manifest_corpus")
+    try:
+        read_manifest_corpus(spark, m)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_manifest_table_is_broadcast_from_a_local_relation(spark, tmp_path):
+    m, expected = _forty_file_corpus(tmp_path)
+    docs = read_manifest_corpus(spark, m)
+    assert len(docs.collect()) == len(expected)
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan

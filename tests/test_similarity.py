@@ -2,6 +2,13 @@
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+from decimal import Decimal
+
+import numpy as np
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from parallel_inverted_index_map_reduce_spark.operators import similarity as sim
@@ -513,3 +520,93 @@ def test_ann_topk_fast_string_form_same_semantics(spark):
     )
     old = _topk_by_cosine(cos, k)
     assert ann_topk_fast(emb, k=k, n_queries=n_queries).sameSemantics(old)
+
+
+@settings(max_examples=60, deadline=None, derandomize=True)
+@given(
+    # first of 256 consecutive scale-7 half-boundaries k + 0.5, k drawn
+    # log-uniformly so p = (k + 0.5) / 1e7 spans [1e2, 8.9e9]; above
+    # ~9.2e9 the scale-9 units no longer fit in int64
+    start=st.floats(9.0, 16.95).map(lambda e: int(10**e)),
+)
+@example(start=66821274425 - 128)  # covers p = 6682.12744255
+def test_round7_units_match_exact_twin_at_half_boundaries(start):
+    """The vectorized round-7 -> scale-9 units equal the scalar decimal
+    twin on products at a scale-7 half-boundary, one ulp either side
+    and negated. Past |p| ~ 400 the binary product's error exceeds a
+    fixed 1e-6 band (0.7 % of the half-boundaries in [1e3, 1e4] used
+    to round the wrong way); the band must scale with ulp(|p| * 1e7)."""
+    _, exact_units9, units9 = sim._build_decimal_rounding()
+    rows = []
+    for k in range(start, start + 256):
+        h = float((Decimal(k) + Decimal("0.5")).scaleb(-7))
+        rows.append([h, math.nextafter(h, 0.0), math.nextafter(h, math.inf), -h])
+    got = units9(np.array(rows))
+    bad = [
+        (p, int(u), exact_units9(p))
+        for row, urow in zip(rows, got)
+        for p, u in zip(row, urow)
+        if int(u) != exact_units9(p)
+    ]
+    assert not bad, bad[:5]
+
+
+def test_zero_norm_vectors_are_dropped_before_pairing(spark):
+    """Sign-LSH near-dups and SemDedup drop vectors whose decimal
+    norm_sq is 0 — all-zero, or every squared component rounding to 0
+    at 7 decimals — before pairing. Every pair with one divides by
+    zero, where the ANSI expression form raises and the vectorized
+    scorer nulls the row; neither output ever names such a vector. The
+    drop comes after the bucket cap, so the cap still counts them, as
+    bucketed_overflow does."""
+    rows = [
+        (0, [1.0, 0.2, 0.0]),
+        (1, [0.9, 0.1, 0.1]),
+        (2, [0.0, 0.0, 0.0]),  # all zero
+        (3, [1e-5, -1e-5, 0.0]),  # squares round to 0 at 7 decimals
+        (4, [1.0, 0.3, 0.1]),
+        (5, [0.8, 0.0, 0.3]),
+        (6, [-1.0, -0.2, 0.0]),  # 6 and 7 mirror 0 and 1, so both sign
+        (7, [-0.9, -0.1, -0.1]),  # buckets hold nonzero-norm vectors
+    ]
+    zero = {2, 3}
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    norms = {
+        r.vec_id: r.n
+        for r in emb.select(
+            "vec_id", sim.norm_sq_expr(F.col("embedding")).alias("n")
+        ).collect()
+    }
+    assert {v for v, n in norms.items() if n == 0} == zero
+
+    buckets = {
+        r.vec_id: r.bucket for r in sim.hyperplane_buckets(emb, 1).collect()
+    }
+    near = sim.bucketed_near_dups(emb, n_planes=1, threshold=-1.0).collect()
+    assert {(r.vec_a, r.vec_b) for r in near} == {
+        (a, b)
+        for a in buckets
+        for b in buckets
+        if a < b and buckets[a] == buckets[b] and not {a, b} & zero
+    }
+    assert near and all(r.cosine is not None for r in near)
+
+    # one cluster, every pair qualifies: each nonzero-norm vector but the
+    # first drops, witnessed by the first
+    sd = sim.semantic_dedup(emb, n_list=1, threshold=-1.0, n_iters=0)
+    nonzero = sorted(set(buckets) - zero)
+    assert {r.vec_id: r.kept_by for r in sd.collect()} == {
+        v: nonzero[0] for v in nonzero[1:]
+    }
+
+    # a cap one below the zero vector's bucket size removes that bucket
+    zb = buckets[2]
+    size = Counter(buckets.values())[zb]
+    assert size - len(zero & {v for v in buckets if buckets[v] == zb}) >= 2
+    capped = sim.bucketed_near_dups(
+        emb, n_planes=1, threshold=-1.0, max_bucket=size - 1
+    ).collect()
+    assert all(buckets[r.vec_a] != zb for r in capped)
+    assert zb in {
+        r.bucket for r in sim.bucketed_overflow(emb, 1, size - 1).collect()
+    }
