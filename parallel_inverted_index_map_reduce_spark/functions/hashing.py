@@ -62,11 +62,3 @@ def stable_hash48(col: Column) -> Column:
 
 def sql_stable_hash48(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 12) AS BIGINT)"
-
-
-def minhash_expr(hash_col: str, a: int, b: int) -> Column:
-    return (F.lit(a) * F.col(hash_col) + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def sql_minhash_expr(hash_expr: str, a: int, b: int) -> str:
-    return f"(({a} * {hash_expr} + {b}) % {MINHASH_P})"

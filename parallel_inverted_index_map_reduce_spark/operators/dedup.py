@@ -127,24 +127,6 @@ def minhash_table(docs: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, perm_id, minhash): the long-form signature view,
-    unpivoted from :func:`minhash_table` (kept for API symmetry with
-    the reference literature; the engine's own pipeline stays wide)."""
-    mh = minhash_table(docs)
-    kv = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("perm_id"), F.col(f"mh{i}").alias("minhash")
-                )
-                for i in range(NUM_PERM)
-            ]
-        )
-    ).alias("kv")
-    return mh.select("doc_id", kv).select("doc_id", "kv.perm_id", "kv.minhash")
-
-
 _BAND_SIG_COLS = ["band_id", *[f"sig_{r}" for r in range(LSH_ROWS)]]
 
 

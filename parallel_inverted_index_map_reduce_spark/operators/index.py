@@ -150,115 +150,6 @@ def build_index_scalable(docs: DataFrame, one_based: bool = False) -> DataFrame:
     )
 
 
-def build_index_chunked(
-    docs: DataFrame, chunk_size: int = 4096, one_based: bool = False
-) -> DataFrame:
-    """Posting lists in bounded chunks: (word, chunk_id, postings, df,
-    letter), each chunk holding at most ``chunk_size`` doc_ids.
-
-    The array-form build (:func:`build_index`) materializes each word's
-    FULL posting array in one aggregation buffer; a stop word's array is
-    ~every doc_id in the corpus on one task (evidence:
-    /root/reference/checker/test_out/t.txt:1 — ``the`` posts in all 355
-    docs; at 100 TB that's billions of ids in one buffer that cannot
-    spill). Chunking bounds every buffer:
-
-    - per-word ordinals come from a ``row_number`` window over the
-      distinct pairs (window rows spill to disk; aggregation arrays
-      can't),
-    - ``chunk_id = ordinal div chunk_size``, and the (word, chunk_id)
-      groupBy reuses the window's hash(word) partitioning — clustering
-      by a prefix of the grouping key — so chunking adds NO exchange
-      beyond the window's own,
-    - ``df`` spans the whole word (a sum window over its chunk sizes,
-      again on the same partitioning).
-
-    Two shuffles total (pair-distinct, then word window) vs the plain
-    build's one; the distinct keeps map-side partial dedup, so the
-    second exchange moves distinct pairs, not token occurrences.
-    """
-    return chunk_pairs(postings_flat(docs, one_based=one_based), chunk_size)
-
-
-def chunk_pairs(pairs: DataFrame, chunk_size: int = 4096) -> DataFrame:
-    """The chunking tail of :func:`build_index_chunked` over an
-    already-built DISTINCT (word, doc_id) frame."""
-    w = Window.partitionBy("word").orderBy("doc_id")
-    chunks = (
-        pairs.withColumn("ord", F.row_number().over(w) - 1)
-        .withColumn("chunk_id", F.floor(F.col("ord") / chunk_size))
-        .groupBy("word", "chunk_id")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("postings"))
-    )
-    w_df = Window.partitionBy("word")
-    return (
-        chunks.withColumn(
-            "df", F.sum(F.size("postings")).over(w_df).cast("long")
-        )
-        .withColumn("letter", F.substring("word", 1, 1))
-        .select("letter", "word", "chunk_id", "df", "postings")
-    )
-
-
-def assemble_chunked_index(chunked: DataFrame) -> DataFrame:
-    """Reassembly view: concatenate each word's chunks in chunk_id order
-    back into (letter, word, df, postings, rank) — proven row-identical
-    to :func:`build_index` in tests/test_index_merge_upsert.py and
-    byte-identical through the text sink on the reference's own corpus.
-
-    This view rebuilds full arrays, so it is for parity proofs and
-    small slices (term lookups after a word-filter pushdown), NOT the
-    100 TB path — scale consumers stream the chunks directly.
-    """
-    merged = chunked.groupBy("word").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("chunk_id", "postings"))),
-                lambda s: s["postings"],
-            )
-        ).alias("postings")
-    )
-    return _attach_rank_window(_with_df_letter(merged))
-
-
-def merge_index(
-    old_index: DataFrame, new_docs: DataFrame, one_based: bool = False
-) -> DataFrame:
-    """Incremental index maintenance: fold new documents into an
-    existing index without re-reading the old corpus.
-
-    The reference can only rebuild from scratch; at 100 TB that means
-    re-tokenizing the whole corpus to add a day's documents. This merges
-    at the POSTINGS level instead: the old side ships one compact
-    (word, postings) row per term — no tokens — and only the new
-    documents are tokenized. One aggregation merges both sides
-    (collect_list of posting arrays -> flatten -> dedup), then df/letter/
-    rank derive exactly as in :func:`build_index`, so
-    ``merge_index(build_index(a), b) == build_index(a | b)`` row-for-row
-    (asserted in tests/test_index_merge_upsert.py). Caller guarantees
-    doc_id spaces are consistent (the manifest's deterministic ids);
-    ``one_based`` must match the flag the old index was built with, so
-    the new side's tokens land in the same id space.
-    """
-    new_pairs = tokens_df(new_docs)
-    if one_based:
-        new_pairs = new_pairs.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    new_side = new_pairs.groupBy("word").agg(
-        F.collect_set("doc_id").alias("postings")
-    )
-    old_side = old_index.select("word", "postings")
-    merged = (
-        old_side.unionByName(new_side)
-        .groupBy("word")
-        .agg(
-            F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("postings")))
-            ).alias("postings")
-        )
-    )
-    return _attach_rank_window(_with_df_letter(merged))
-
-
 def document_frequency(docs: DataFrame) -> DataFrame:
     """(word, df) without materializing postings arrays — the scalable
     path when only df is needed (countDistinct folds map-side)."""

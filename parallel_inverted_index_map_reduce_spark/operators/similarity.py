@@ -543,13 +543,14 @@ def _build_decimal_rounding():
     - ``units9(P)``: the same for an array of finite products — a
       scaled-binary half-up floor(|p|*1e7 + 0.5), with every component
       the binary arithmetic cannot decide recomputed by
-      ``exact_units9``."""
+      ``exact_units9``. Once any |p| reaches 1e4 the array holds Python
+      ints (object dtype): the units pass int64 above |p| ~ 9.2e9."""
 
     def java_round_half_up(d, scale):
         import decimal
 
         with decimal.localcontext() as ctx:
-            ctx.prec = 60
+            ctx.prec = 400  # any finite double at scale 9, exactly
             return decimal.Decimal(repr(d)).quantize(
                 decimal.Decimal(1).scaleb(-scale),
                 rounding=decimal.ROUND_HALF_UP,
@@ -567,14 +568,18 @@ def _build_decimal_rounding():
         U = np.abs(P) * 1e7
         M = np.floor(U + 0.5)
         np.copysign(M, P, out=M)
-        units = (M * 100.0).astype(np.int64)  # 1e-7 -> 1e-9 scale units
+        big = np.abs(P) >= 1e4
+        # 1e-7 -> 1e-9 scale units; big components are recomputed below
+        units = (np.where(big, 0.0, M) * 100.0).astype(np.int64)
+        if big.any():
+            units = units.astype(object)
         frac = U - np.floor(U)
         # U is off the scaled decimal repr(p)*1e7 by up to ~1.1 ulp(U)
         # (half an ulp from the multiply, up to 0.6 from repr's own
         # half-ulp gap scaled by 1e7), which outgrows a fixed 1e-6 once
         # |p| passes ~400
         band = np.maximum(1e-6, 4.0 * np.spacing(U))
-        suspect = (np.abs(frac - 0.5) < band) | (np.abs(P) >= 1e4)
+        suspect = (np.abs(frac - 0.5) < band) | big
         if suspect.any():
             rows, cols = np.nonzero(suspect)
             for r, c in zip(rows.tolist(), cols.tolist()):
@@ -632,9 +637,13 @@ def _build_decimal_cosine_batches():
       rounded double r' round-trips to the scale-7 decimal r, and any
       shorter decimal in r's ulp interval differs by < 5e-10, so the
       scale-9 cast lands on r exactly;
-    - the decimal sum is an int64 sum of 1e-9-scale units (|sum| <
-      2^53 by the |p| bound, so float(sum)/1e9 is the correctly
-      rounded decimal->double cast);
+    - the decimal sum is an int64 sum of 1e-9-scale units for rows
+      with sum |p| < 1e4 (|sum| < 2^53, so float(sum)/1e9 is the
+      correctly rounded decimal->double cast); any other row is folded
+      in Python ints in component order, as the expression folds it,
+      and divided exactly. A component or running sum that leaves
+      decimal(28,9) (|units| >= 1e28) nulls the row, the expression's
+      overflow semantics with ANSI off (under ANSI it raises);
     - round-6 repeats the fast/fallback split on the quotient, and
       ``+ 0.0`` folds Java's BigDecimal ZERO back to +0.0 (numpy's
       sign-propagating floor would otherwise emit -0.0 for tiny
@@ -677,12 +686,22 @@ def _build_decimal_cosine_batches():
             finite = np.isfinite(P).all(axis=1)
             if not finite.all():
                 P = np.where(np.isfinite(P), P, 0.0)  # rows masked out below
-            S = units9(P).sum(axis=1)
-            dot = S.astype(np.float64) / 1e9  # exact: |S| << 2^53, 1e9 exact
+            units = units9(P)
+            # exact for rows with sum |p| < 1e4: |S| << 2^53, 1e9 exact
+            dot = units.sum(axis=1).astype(np.float64) / 1e9
+            overflow = np.zeros(n, dtype=bool)
+            for i in np.nonzero(np.abs(P).sum(axis=1) >= 1e4)[0].tolist():
+                acc = 0
+                for u in units[i].tolist():
+                    acc += u
+                    if abs(u) >= 10**28 or abs(acc) >= 10**28:
+                        overflow[i] = True
+                        break
+                dot[i] = acc / 10**9  # int / int: correctly rounded
             denom = np.sqrt(pdf["na"].to_numpy()) * np.sqrt(pdf["nb"].to_numpy())
             # Spark's Divide nulls out on a zero divisor (legacy mode;
             # ANSI raises)
-            nullrow = (~finite) | (denom == 0.0)
+            nullrow = (~finite) | overflow | (denom == 0.0)
             with np.errstate(divide="ignore", invalid="ignore"):
                 q = dot / np.where(denom == 0.0, np.nan, denom)
                 u6 = np.abs(q) * 1e6

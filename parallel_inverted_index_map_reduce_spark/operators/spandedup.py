@@ -92,14 +92,6 @@ def _gram_hash(tks, i, n: int):
     )
 
 
-def span_grams(docs: DataFrame, n: int = 20) -> DataFrame:
-    """(doc_id, pos, gram_hash): the 16-byte md5 of each n-token span at
-    each start position — narrow array pipeline, fused into the scan."""
-    if n < 2:
-        raise ValueError(f"span width must be >= 2, got {n}")
-    return _span_grams_from(_tokenized(docs), n)
-
-
 def _span_grams_from(toks: DataFrame, n: int) -> DataFrame:
     grams = F.when(
         F.size("tks") >= n,
@@ -127,14 +119,6 @@ def _cut_list(toks: DataFrame, n: int) -> DataFrame:
         .where(F.col("doc_id") != F.col("canon_doc"))
         .select("doc_id", "pos")
     )
-
-
-def duplicate_span_occurrences(docs: DataFrame, n: int = 20) -> DataFrame:
-    """(doc_id, pos): every occurrence of a cross-document duplicated
-    span OUTSIDE its canonical document — the cut list."""
-    if n < 2:
-        raise ValueError(f"span width must be >= 2, got {n}")
-    return _cut_list(_tokenized(docs), n)
 
 
 def remove_duplicate_spans(docs: DataFrame, n: int = 20) -> DataFrame:

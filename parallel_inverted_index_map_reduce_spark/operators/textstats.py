@@ -38,15 +38,6 @@ def bpeish_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPEISH_PATTERN), 0)).cast("long")
 
 
-def token_counts(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, n_distinct_tokens)."""
-    toks = token_positions(docs)
-    return toks.groupBy("doc_id").agg(
-        F.count("*").alias("n_tokens"),
-        F.countDistinct("tok").alias("n_distinct_tokens"),
-    )
-
-
 def quality_scores(docs: DataFrame) -> DataFrame:
     """Length/stopword/diversity-based quality score in [0, 1].
 

@@ -51,7 +51,7 @@ from parallel_inverted_index_map_reduce_spark.operators.dedup import (  # noqa: 
     near_dup_keep_list,
 )
 from parallel_inverted_index_map_reduce_spark.operators.index import (  # noqa: E402
-    build_index_chunked,
+    build_index,
 )
 from parallel_inverted_index_map_reduce_spark.operators.spandedup import (  # noqa: E402
     remove_duplicate_spans,
@@ -159,7 +159,7 @@ def _stage_fns():
     )
 
     return {
-        "index_build_chunked": lambda docs, n: build_index_chunked(docs),
+        "index_build": lambda docs, n: build_index(docs),
         "near_dup_keep_list": lambda docs, n: near_dup_keep_list(docs),
         "span_dedup_n20": lambda docs, n: remove_duplicate_spans(docs, n=20),
         "cdc_chunks": lambda docs, n: cdc_chunks(docs, window=3, divisor=8),
@@ -179,7 +179,7 @@ def main() -> None:
     labels = (
         [s.strip() for s in picked.split(",") if s.strip()]
         if picked
-        else ["index_build_chunked", "near_dup_keep_list", "span_dedup_n20"]
+        else ["index_build", "near_dup_keep_list", "span_dedup_n20"]
     )
     unknown = [s for s in labels if s not in fns]
     if unknown:

@@ -8,9 +8,8 @@ emitted per-letter files against the shipped goldens
 
 This is the strongest correctness signal available: 33,262 golden lines
 produced by the reference binary itself. EVERY index-build variant the
-engine ships (plain window build, decomposed-rank scalable build,
-incremental merge of a 300+55 corpus split, chunked posting lists
-reassembled) must reproduce them byte-for-byte.
+engine ships (plain window build, decomposed-rank scalable build) must
+reproduce them byte-for-byte.
 """
 
 from __future__ import annotations
@@ -20,14 +19,9 @@ import string
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from parallel_inverted_index_map_reduce_spark.operators.index import (
-    assemble_chunked_index,
     build_index,
-    build_index_chunked,
     build_index_scalable,
-    merge_index,
 )
 from parallel_inverted_index_map_reduce_spark.sinks.text_index import (
     index_lines_per_letter,
@@ -36,38 +30,7 @@ from parallel_inverted_index_map_reduce_spark.sinks.text_index import (
 from parallel_inverted_index_map_reduce_spark.sources.corpus import read_manifest_corpus
 
 CHECKER = "/root/reference/checker"
-
-
-def _build_plain(docs):
-    return build_index(docs)
-
-
-def _build_scalable(docs):
-    return build_index_scalable(docs)
-
-
-def _build_merged(docs):
-    # split the manifest-ordered corpus and fold the tail in
-    # incrementally; ids are already 1-based from the manifest, so both
-    # sides share one id space without the one_based shift
-    split = 300
-    old = docs.where(F.col("doc_id") <= split)
-    new = docs.where(F.col("doc_id") > split)
-    return merge_index(build_index(old), new)
-
-
-def _build_chunked(docs):
-    # chunk_size 64 forces multi-chunk stop words ('the' posts in all
-    # 355 docs -> 6 chunks) before reassembly
-    return assemble_chunked_index(build_index_chunked(docs, chunk_size=64))
-
-
-BUILDERS = {
-    "plain": _build_plain,
-    "scalable": _build_scalable,
-    "merged": _build_merged,
-    "chunked": _build_chunked,
-}
+BUILDERS = {"plain": build_index, "scalable": build_index_scalable}
 
 
 def _golden_lines(golden_dir: str, letter: str) -> list[str]:

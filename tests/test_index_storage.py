@@ -16,7 +16,6 @@ from parallel_inverted_index_map_reduce_spark.operators import serving as srv
 from parallel_inverted_index_map_reduce_spark.operators.index import (
     bm25_search,
     boolean_search,
-    build_index_chunked,
     phrase_search,
     proximity_search,
 )
@@ -30,21 +29,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def test_chunked_build_has_two_exchanges(spark):
-    """The chunked build's claimed shuffle budget, locked as a plan
-    regression guard: ONE input-spread exchange plus ONE hash(word)
-    exchange. The pair-distinct rides the spread's doc_id partitioning
-    (same-doc pairs are co-located), and the (word, chunk_id) groupBy
-    and whole-word df window both reuse the word exchange — chunking
-    must never introduce a third shuffle."""
-    import re
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    plan = _plan(build_index_chunked(docs, chunk_size=64))
-    n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    assert n_exchanges == 2, plan
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import math
 from collections import Counter
 from decimal import Decimal
@@ -393,6 +394,19 @@ def test_vectorized_pair_cosine_equals_expression(spark):
     assert repart == expr
 
 
+@contextlib.contextmanager
+def _ansi_off(spark):
+    prev = spark.conf.get("spark.sql.ansi.enabled", None)
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.ansi.enabled")
+        else:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_vectorized_pair_cosine_edge_cases(spark):
     """Degenerate inputs must match the expression form exactly:
     ragged lengths (index-intersection semantics), empty arrays and
@@ -434,20 +448,55 @@ def test_vectorized_pair_cosine_edge_cases(spark):
             out[(r.vec_a, r.vec_b)] = c
         return out
 
-    prev = spark.conf.get("spark.sql.ansi.enabled", None)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
+    with _ansi_off(spark):
         expr = canon(sim._grouped_pairs_cosine(enr, "g", vectorized=False))
         fast = canon(sim._grouped_pairs_cosine(enr, "g", vectorized=True))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.ansi.enabled")
-        else:
-            spark.conf.set("spark.sql.ansi.enabled", prev)
     assert len(expr) == len(rows) * (len(rows) - 1) // 2
     assert fast == expr
     # the tiny-negative pair must have collapsed to positive 0.0
     assert expr[(0, 1)] == "0.0"
+
+
+def test_vectorized_pair_cosine_past_int64_units(spark):
+    """Dots whose scale-9 units leave int64 match the expression form.
+    Unit norms make each cosine its rounded dot: 5e9 + 4.5e9 sums past
+    2^63 units, and one product of 1e10 is 1e19 units on its own. With
+    ANSI off, a product or a running sum that leaves decimal(28,9)
+    nulls the expression's dot, even when the full sum would fit, and
+    a NULL norm nulls its quotient; the twin must null the same rows."""
+    pairs = spark.createDataFrame(
+        [
+            (0, 1, [50000.0, 45000.0], [100000.0, 100000.0], 1.0, 1.0),
+            (0, 2, [100000.0], [100000.0], 1.0, 1.0),
+            (0, 3, [1e10], [1e10], 1.0, 1.0),
+            (0, 4, [6e9, 6e9, -6e9], [1e9] * 3, 1.0, 1.0),
+            (0, 5, [3e9, 3e9, -3e9], [1e9] * 3, 1.0, 1.0),
+            (0, 6, [1.0], [1.0], None, 1.0),
+        ],
+        "vec_a long, vec_b long, ea array<float>, eb array<float>, "
+        "na double, nb double",
+    )
+    score = F.round(
+        sim.decimal_dot_expr(F.col("ea"), F.col("eb")).cast("double")
+        / (F.sqrt("na") * F.sqrt("nb")),
+        6,
+    )
+    with _ansi_off(spark):
+        expr = sorted(
+            map(tuple, pairs.select("vec_a", "vec_b", score.alias("cosine")).collect())
+        )
+        fast = sorted(
+            map(tuple, sim.decimal_cosine_pairs_vectorized(pairs).collect())
+        )
+    assert expr == [
+        (0, 1, 9.5e9),
+        (0, 2, 1e10),
+        (0, 3, None),
+        (0, 4, None),
+        (0, 5, 3e18),
+        (0, 6, None),
+    ]
+    assert fast == expr
 
 
 def test_vectorized_assignment_equals_expression_fold(spark):
@@ -525,11 +574,12 @@ def test_ann_topk_fast_string_form_same_semantics(spark):
 @settings(max_examples=60, deadline=None, derandomize=True)
 @given(
     # first of 256 consecutive scale-7 half-boundaries k + 0.5, k drawn
-    # log-uniformly so p = (k + 0.5) / 1e7 spans [1e2, 8.9e9]; above
+    # log-uniformly so p = (k + 0.5) / 1e7 spans [1e2, 1e11]; above
     # ~9.2e9 the scale-9 units no longer fit in int64
-    start=st.floats(9.0, 16.95).map(lambda e: int(10**e)),
+    start=st.floats(9.0, 18.0).map(lambda e: int(10**e)),
 )
 @example(start=66821274425 - 128)  # covers p = 6682.12744255
+@example(start=95_000_000_000_000_000)  # p = 9.5e9: 9.5e18 units > 2^63
 def test_round7_units_match_exact_twin_at_half_boundaries(start):
     """The vectorized round-7 -> scale-9 units equal the scalar decimal
     twin on products at a scale-7 half-boundary, one ulp either side
