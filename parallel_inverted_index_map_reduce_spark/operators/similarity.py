@@ -642,8 +642,9 @@ def _build_decimal_cosine_batches():
       correctly rounded decimal->double cast); any other row is folded
       in Python ints in component order, as the expression folds it,
       and divided exactly. A component or running sum that leaves
-      decimal(28,9) (|units| >= 1e28) nulls the row, the expression's
-      overflow semantics with ANSI off (under ANSI it raises);
+      decimal(28,9) (|units| >= 1e28) raises ``ArithmeticError``, as
+      the expression does under ANSI, the session default (with ANSI
+      off the expression nulls the dot instead);
     - round-6 repeats the fast/fallback split on the quotient, and
       ``+ 0.0`` folds Java's BigDecimal ZERO back to +0.0 (numpy's
       sign-propagating floor would otherwise emit -0.0 for tiny
@@ -689,19 +690,20 @@ def _build_decimal_cosine_batches():
             units = units9(P)
             # exact for rows with sum |p| < 1e4: |S| << 2^53, 1e9 exact
             dot = units.sum(axis=1).astype(np.float64) / 1e9
-            overflow = np.zeros(n, dtype=bool)
             for i in np.nonzero(np.abs(P).sum(axis=1) >= 1e4)[0].tolist():
                 acc = 0
                 for u in units[i].tolist():
                     acc += u
                     if abs(u) >= 10**28 or abs(acc) >= 10**28:
-                        overflow[i] = True
-                        break
+                        raise ArithmeticError(
+                            "decimal dot of pair (%s, %s) overflows decimal(28,9)"
+                            % (pdf["vec_a"].iat[i], pdf["vec_b"].iat[i])
+                        )
                 dot[i] = acc / 10**9  # int / int: correctly rounded
             denom = np.sqrt(pdf["na"].to_numpy()) * np.sqrt(pdf["nb"].to_numpy())
             # Spark's Divide nulls out on a zero divisor (legacy mode;
             # ANSI raises)
-            nullrow = (~finite) | overflow | (denom == 0.0)
+            nullrow = (~finite) | (denom == 0.0)
             with np.errstate(divide="ignore", invalid="ignore"):
                 q = dot / np.where(denom == 0.0, np.nan, denom)
                 u6 = np.abs(q) * 1e6

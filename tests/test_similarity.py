@@ -8,6 +8,7 @@ from collections import Counter
 from decimal import Decimal
 
 import numpy as np
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -395,9 +396,9 @@ def test_vectorized_pair_cosine_equals_expression(spark):
 
 
 @contextlib.contextmanager
-def _ansi_off(spark):
+def _ansi(spark, enabled):
     prev = spark.conf.get("spark.sql.ansi.enabled", None)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.ansi.enabled", str(enabled).lower())
     try:
         yield
     finally:
@@ -448,7 +449,7 @@ def test_vectorized_pair_cosine_edge_cases(spark):
             out[(r.vec_a, r.vec_b)] = c
         return out
 
-    with _ansi_off(spark):
+    with _ansi(spark, False):
         expr = canon(sim._grouped_pairs_cosine(enr, "g", vectorized=False))
         fast = canon(sim._grouped_pairs_cosine(enr, "g", vectorized=True))
     assert len(expr) == len(rows) * (len(rows) - 1) // 2
@@ -460,43 +461,49 @@ def test_vectorized_pair_cosine_edge_cases(spark):
 def test_vectorized_pair_cosine_past_int64_units(spark):
     """Dots whose scale-9 units leave int64 match the expression form.
     Unit norms make each cosine its rounded dot: 5e9 + 4.5e9 sums past
-    2^63 units, and one product of 1e10 is 1e19 units on its own. With
-    ANSI off, a product or a running sum that leaves decimal(28,9)
-    nulls the expression's dot, even when the full sum would fit, and
-    a NULL norm nulls its quotient; the twin must null the same rows."""
-    pairs = spark.createDataFrame(
-        [
-            (0, 1, [50000.0, 45000.0], [100000.0, 100000.0], 1.0, 1.0),
-            (0, 2, [100000.0], [100000.0], 1.0, 1.0),
-            (0, 3, [1e10], [1e10], 1.0, 1.0),
-            (0, 4, [6e9, 6e9, -6e9], [1e9] * 3, 1.0, 1.0),
-            (0, 5, [3e9, 3e9, -3e9], [1e9] * 3, 1.0, 1.0),
-            (0, 6, [1.0], [1.0], None, 1.0),
-        ],
+    2^63 units, one product of 1e10 is 1e19 units on its own, and a
+    NULL norm nulls its quotient. A product or a running sum that
+    leaves decimal(28,9) raises in both forms under ANSI, the session
+    default, even when the full sum would fit."""
+    schema = (
         "vec_a long, vec_b long, ea array<float>, eb array<float>, "
-        "na double, nb double",
+        "na double, nb double"
     )
     score = F.round(
         sim.decimal_dot_expr(F.col("ea"), F.col("eb")).cast("double")
         / (F.sqrt("na") * F.sqrt("nb")),
         6,
     )
-    with _ansi_off(spark):
+    fitting = spark.createDataFrame(
+        [
+            (0, 1, [50000.0, 45000.0], [100000.0, 100000.0], 1.0, 1.0),
+            (0, 2, [100000.0], [100000.0], 1.0, 1.0),
+            (0, 5, [3e9, 3e9, -3e9], [1e9] * 3, 1.0, 1.0),
+            (0, 6, [1.0], [1.0], None, 1.0),
+        ],
+        schema,
+    )
+    with _ansi(spark, True):
         expr = sorted(
-            map(tuple, pairs.select("vec_a", "vec_b", score.alias("cosine")).collect())
+            map(
+                tuple,
+                fitting.select("vec_a", "vec_b", score.alias("cosine")).collect(),
+            )
         )
         fast = sorted(
-            map(tuple, sim.decimal_cosine_pairs_vectorized(pairs).collect())
+            map(tuple, sim.decimal_cosine_pairs_vectorized(fitting).collect())
         )
-    assert expr == [
-        (0, 1, 9.5e9),
-        (0, 2, 1e10),
-        (0, 3, None),
-        (0, 4, None),
-        (0, 5, 3e18),
-        (0, 6, None),
-    ]
-    assert fast == expr
+        assert expr == [(0, 1, 9.5e9), (0, 2, 1e10), (0, 5, 3e18), (0, 6, None)]
+        assert fast == expr
+        for row in [
+            (0, 3, [1e10], [1e10], 1.0, 1.0),  # one product past 1e19
+            (0, 4, [6e9, 6e9, -6e9], [1e9] * 3, 1.0, 1.0),  # running sum
+        ]:
+            pairs = spark.createDataFrame([row], schema)
+            with pytest.raises(Exception, match="OVERFLOW|OUT_OF_RANGE"):
+                pairs.select(score).collect()
+            with pytest.raises(Exception, match="ArithmeticError"):
+                sim.decimal_cosine_pairs_vectorized(pairs).collect()
 
 
 def test_vectorized_assignment_equals_expression_fold(spark):
