@@ -82,15 +82,7 @@ def _search(args) -> int:
         if stored:
             from .operators import serving as srv
 
-            srv.attach_search_index(spark, stored)
-            if srv.extend_in_progress(spark, stored):
-                print(
-                    f"store '{stored}' has a torn extend (crashed "
-                    "mid-ingest): answers could be inconsistent across "
-                    "query types. Rebuild with index-store (or re-run "
-                    "extend after a rebuild from the pre-extend corpus).",
-                    file=sys.stderr,
-                )
+            if _torn_store(spark, stored):
                 return 3
         else:
             from .sources.corpus import read_manifest_corpus
@@ -257,12 +249,7 @@ def _index_store(args) -> int:
     spark = get_spark(app_name="index-store")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        if args.input.endswith(".parquet"):
-            docs = spark.read.parquet(args.input)
-        else:
-            from .sources.corpus import read_manifest_corpus
-
-            docs = read_manifest_corpus(spark, args.input)
+        docs = _read_docs(spark, args.input)
         store_search_index(docs, args.base, n_buckets=args.buckets)
         print(
             f"stored serving index '{args.base}' "
@@ -283,6 +270,28 @@ def _read_docs(spark, path: str):
     return read_manifest_corpus(spark, path)
 
 
+def _torn_store(spark, base: str, kind: str = "text") -> bool:
+    """Attach the ``kind`` store under ``base``; when a crashed extend
+    left it torn, say so on stderr and return True (callers exit 3)."""
+    from .operators import serving as srv
+
+    if kind == "text":
+        srv.attach_search_index(spark, base)
+        torn = srv.extend_in_progress(spark, base)
+        label, rebuild = "store", "index-store"
+    else:
+        srv.attach_ann_index(spark, base)
+        torn = srv.ann_extend_in_progress(spark, base)
+        label, rebuild = "ANN store", "ann-store"
+    if torn:
+        print(
+            f"{label} '{base}' has a torn extend (crashed mid-ingest), "
+            f"so its tables may disagree: rebuild it with {rebuild}",
+            file=sys.stderr,
+        )
+    return torn
+
+
 def _extend(args) -> int:
     from .operators import serving as srv
     from .session import get_spark
@@ -290,13 +299,7 @@ def _extend(args) -> int:
     spark = get_spark(app_name="index-extend")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        srv.attach_search_index(spark, args.base)
-        if srv.extend_in_progress(spark, args.base):
-            print(
-                f"store '{args.base}' already has a torn extend — "
-                "rebuild with index-store before ingesting more",
-                file=sys.stderr,
-            )
+        if _torn_store(spark, args.base):
             return 3
         batch = _read_docs(spark, args.input)
         srv.extend_search_index(spark, args.base, batch)
@@ -314,13 +317,7 @@ def _compact(args) -> int:
     spark = get_spark(app_name="index-compact")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        srv.attach_search_index(spark, args.base)
-        if srv.extend_in_progress(spark, args.base):
-            print(
-                f"store '{args.base}' has a torn extend — rebuild with "
-                "index-store before compacting",
-                file=sys.stderr,
-            )
+        if _torn_store(spark, args.base):
             return 3
         if srv.compact_search_index(spark, args.base):
             print(
@@ -414,13 +411,7 @@ def _ann_extend(args) -> int:
     spark = get_spark(app_name="ann-extend")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        srv.attach_ann_index(spark, args.base)
-        if srv.ann_extend_in_progress(spark, args.base):
-            print(
-                f"ANN store '{args.base}' has a torn extend — rebuild "
-                "with ann-store before ingesting more",
-                file=sys.stderr,
-            )
+        if _torn_store(spark, args.base, "ann"):
             return 3
         batch = spark.read.parquet(args.input)
         srv.extend_ann_index(spark, args.base, batch)

@@ -251,51 +251,18 @@ def boolean_search(
         F.max(F.col("word") == t1).alias("has1"),
         F.max(F.col("word") == t2).alias("has2"),
     )
-    both = F.col("has1") & F.col("has2")
-    entries = [
+    lookup = [
         F.struct(
-            F.lit("and").alias("op"),
-            F.lit(t1).alias("term1"),
-            F.lit(t2).alias("term2"),
-            F.sort_array(F.array_intersect("p1", "p2")).alias("doc_ids"),
-            both.alias("emit"),
-        ),
-        F.struct(
-            F.lit("or").alias("op"),
-            F.lit(t1).alias("term1"),
-            F.lit(t2).alias("term2"),
-            F.sort_array(F.array_union("p1", "p2")).alias("doc_ids"),
-            both.alias("emit"),
-        ),
-        F.struct(
-            F.lit("not").alias("op"),
-            F.lit(t1).alias("term1"),
-            F.lit(t2).alias("term2"),
-            F.sort_array(F.array_except("p1", "p2")).alias("doc_ids"),
-            both.alias("emit"),
-        ),
-    ]
-    if with_lookup:
-        entries = [
-            F.struct(
-                F.lit("lookup").alias("op"),
-                F.lit(term).alias("term1"),
-                F.size(plist).cast("string").alias("term2"),
-                F.col(plist).alias("doc_ids"),
-                F.col(has).alias("emit"),
-            )
-            for term, plist, has in ((t1, "p1", "has1"), (t2, "p2", "has2"))
-        ] + entries
-    return (
-        two.select(F.explode(F.array(*entries)).alias("kv"))
-        .where(F.col("kv.emit"))
-        .select(
-            F.col("kv.op").alias("op"),
-            F.col("kv.term1").alias("term1"),
-            F.col("kv.term2").alias("term2"),
-            F.col("kv.doc_ids").alias("doc_ids"),
+            F.lit("lookup").alias("op"),
+            F.lit(term).alias("term1"),
+            F.size(plist).cast("string").alias("term2"),
+            F.col(plist).alias("doc_ids"),
+            F.col(has).alias("emit"),
         )
-    )
+        for term, plist, has in ((t1, "p1", "has1"), (t2, "p2", "has2"))
+        if with_lookup
+    ]
+    return _boolean_op_rows(two, t1, t2, lookup)
 
 
 def positional_tokens(docs: DataFrame) -> DataFrame:
@@ -361,6 +328,41 @@ def phrase_search(docs: DataFrame, phrase: str) -> DataFrame:
         ]
     )
     return phrase_adjacency_filter(per_doc, len(words))
+
+
+def _boolean_op_rows(
+    two: DataFrame, t1: str, t2: str, extra: list | tuple = ()
+) -> DataFrame:
+    """(op, term1, term2, doc_ids): the AND/OR/NOT tail of
+    :func:`boolean_search` and serving.boolean_search_stored, projected
+    from the ONE row of ``two`` (p1, p2 posting arrays; has1, has2) and
+    emitted only when both terms are present. ``extra`` structs of the
+    same (op, term1, term2, doc_ids, emit) shape come first."""
+    both = F.col("has1") & F.col("has2")
+    entries = [
+        F.struct(
+            F.lit(op).alias("op"),
+            F.lit(t1).alias("term1"),
+            F.lit(t2).alias("term2"),
+            F.sort_array(arr).alias("doc_ids"),
+            both.alias("emit"),
+        )
+        for op, arr in (
+            ("and", F.array_intersect("p1", "p2")),
+            ("or", F.array_union("p1", "p2")),
+            ("not", F.array_except("p1", "p2")),
+        )
+    ]
+    return (
+        two.select(F.explode(F.array(*extra, *entries)).alias("kv"))
+        .where(F.col("kv.emit"))
+        .select(
+            F.col("kv.op").alias("op"),
+            F.col("kv.term1").alias("term1"),
+            F.col("kv.term2").alias("term2"),
+            F.col("kv.doc_ids").alias("doc_ids"),
+        )
+    )
 
 
 def phrase_adjacency_filter(per_doc: DataFrame, n_words: int) -> DataFrame:

@@ -43,6 +43,12 @@ older than the current layout (sidecar version < 5) or missing a table
 is refused by :func:`attach_search_index` and rebuilt by
 :func:`ensure_search_index` — there is no fallback read path.
 
+Both stores — text and ANN (``_ANN_LAYOUT``: IVF lists partitioned by
+list_id, plus centroids) — run ONE lifecycle, selected by store kind:
+sidecar I/O, extend marker, fingerprint, attach, verify, ensure and
+the extend bracket. The sidecar is written atomically (temp file, then
+``os.replace``), so a crash mid-write leaves the previous one whole.
+
 Every query operator here is proven ROW-IDENTICAL to its corpus-scan
 twin (tests/test_index_storage.py) because both share the same scoring
 or matching tail (index.py bm25_rank / phrase_adjacency_filter /
@@ -69,6 +75,7 @@ from .bucketing import (
     write_table,
 )
 from .index import (
+    _boolean_op_rows,
     _normalize_single_term,
     _py_deletion_variants,
     _with_df_letter,
@@ -93,6 +100,7 @@ class _TableSpec(NamedTuple):
     key: str | None  # bucket AND sort column; None = unbucketed
     part: str | None  # partition column; None = unpartitioned
     swapped: bool = False  # compaction rebuilds it via the atomic swap
+    qcols: str | None = None  # column DDL of a quantize=True store
 
 
 # The text store's layout, keyed by table suffix — the ONE place that
@@ -134,21 +142,61 @@ _TEXT_TABLES = tuple(_TEXT_LAYOUT)
 # table is append-only or a one-row rewrite and never swaps)
 _SWAPPED_SUFFIXES = tuple(s for s, t in _TEXT_LAYOUT.items() if t.swapped)
 
+# The ANN store's layout: each IVF inverted list is its own list_id
+# directory, so a query's probes prune at the directory level; a
+# quantize=True store holds int8 rows instead of the float embedding.
+# Centroids are n_list rows and stay full-precision either way.
+_ANN_LAYOUT = {
+    "_vectors": _TableSpec(
+        "vec_id bigint, embedding array<float>, list_id int",
+        None,
+        "list_id",
+        qcols="vec_id bigint, q array<tinyint>, q_scale double, list_id int",
+    ),
+    "_centroids": _TableSpec("list_id int, centroid array<double>", None, None),
+}
+_LAYOUTS = {**_TEXT_LAYOUT, **_ANN_LAYOUT}
 
-def _write_text_table(
+
+class _StoreKind(NamedTuple):
+    layout: dict[str, _TableSpec]
+    version: int  # sidecar version written; attach refuses older
+    id_col: str  # row id: extends must bring new ones
+    content_col: str  # hashed with the id into the fingerprint
+    count_key: str  # the fingerprint's row-count key in the sidecar
+    id_table: str  # the table extend's overlap check reads
+    build_fn: str  # named in its refusals: what rebuilds it
+    extend_fn: str  # ... and what appends to it
+
+
+_KINDS = {
+    "text": _StoreKind(
+        _TEXT_LAYOUT, _LAYOUT_VERSION, "doc_id", "text", "n_docs",
+        "_doclen", "store_search_index", "extend_search_index",
+    ),
+    "ann": _StoreKind(
+        _ANN_LAYOUT, 2, "vec_id", "embedding", "n_vecs",
+        "_vectors", "store_ann_index", "extend_ann_index",
+    ),
+}
+
+
+def _write_store_table(
     df: DataFrame, base: str, suffix: str, n_buckets: int, table: str = ""
 ) -> None:
     """Overwrite ``<base><suffix>`` (or ``table``, e.g. a swap's
     ``__next`` scratch name) with that suffix's layout."""
-    spec = _TEXT_LAYOUT[suffix]
+    spec = _LAYOUTS[suffix]
     table = table or f"{base}{suffix}"
-    if spec.key is None:
-        write_table(df, table)
-    else:
+    if spec.key is not None:
         write_bucketed(
             df, table, spec.key, n_buckets, sort_col=spec.key,
             partition_cols=(spec.part,) if spec.part else (),
         )
+    elif spec.part is not None:
+        write_partitioned_table(df, table, (spec.part,))
+    else:
+        write_table(df, table)
 
 
 def _append_text_table(
@@ -162,18 +210,20 @@ def _append_text_table(
     )
 
 
-def _register_text_table(
-    spark: SparkSession, base: str, suffix: str, n_buckets: int
+def _register_store_table(
+    spark: SparkSession, base: str, suffix: str, n_buckets: int,
+    quantized: bool = False,
 ) -> None:
     """CREATE TABLE ... LOCATION DDL over existing external files,
     carrying the layout's bucket/sort/partition spec so every pruning
     property (PartitionFilters, SelectedBucketsCount, sorted files)
     survives. A missing directory is a loud FileNotFoundError."""
-    spec = _TEXT_LAYOUT[suffix]
+    spec = _LAYOUTS[suffix]
     table = f"{base}{suffix}"
     loc = table_location(spark, table)
     if not os.path.isdir(loc):
         raise FileNotFoundError(f"no stored data for {table} at {loc}")
+    cols = spec.qcols if quantized and spec.qcols else spec.cols
     part = f"PARTITIONED BY ({spec.part})" if spec.part else ""
     buckets = (
         f"CLUSTERED BY ({spec.key}) SORTED BY ({spec.key}) "
@@ -183,30 +233,45 @@ def _register_text_table(
     )
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
-        f"CREATE TABLE {table} ({spec.cols}) USING parquet {part} {buckets} "
+        f"CREATE TABLE {table} ({cols}) USING parquet {part} {buckets} "
         f"LOCATION '{loc}'"
     )
     if spec.part:
         spark.catalog.recoverPartitions(table)
 
 
-def corpus_fingerprint(docs: DataFrame) -> dict:
-    """Cheap order-independent corpus identity: document count plus the
-    xor of per-document ``xxhash64(doc_id, text)``. One aggregation, no
-    shuffle beyond the partial-merge; xor is associative/commutative so
-    partitioning cannot change it, and the SAME formula applied to a
-    batch composes with a stored fingerprint under xor — which is what
-    lets :func:`extend_search_index` maintain the fingerprint
-    incrementally instead of re-scanning the whole corpus. This is a
-    STALENESS check (did the corpus at this path change since the store
-    was built), not a cryptographic commitment — xxhash64 is fine."""
-    row = docs.agg(
+def _count_xor64(df: DataFrame, cols) -> tuple[int, int]:
+    """(row count, xor of per-row ``xxhash64(cols)``): the one content
+    fingerprint formula. One aggregation, no shuffle beyond the
+    partial-merge; xor is associative/commutative so partitioning
+    cannot change it, and a batch's value composes with a stored one
+    under xor."""
+    row = df.agg(
         F.count("*").alias("n"),
         F.coalesce(
-            F.bit_xor(F.xxhash64(F.col("doc_id"), F.col("text"))), F.lit(0)
+            F.bit_xor(F.xxhash64(*[F.col(c) for c in cols])), F.lit(0)
         ).alias("x"),
     ).first()
-    return {"n_docs": int(row["n"]), "xor64": int(row["x"])}
+    return int(row["n"]), int(row["x"])
+
+
+def _store_fingerprint(df: DataFrame, kind: str) -> dict:
+    """The sidecar fingerprint of a store kind's input rows."""
+    k = _KINDS[kind]
+    n, x = _count_xor64(df, (k.id_col, k.content_col))
+    return {k.count_key: n, "xor64": x}
+
+
+def corpus_fingerprint(docs: DataFrame) -> dict:
+    """Cheap order-independent corpus identity: document count plus the
+    xor of per-document ``xxhash64(doc_id, text)``. The SAME formula
+    applied to a batch composes with a stored fingerprint under xor —
+    which is what lets :func:`extend_search_index` maintain the
+    fingerprint incrementally instead of re-scanning the whole corpus.
+    This is a STALENESS check (did the corpus at this path change since
+    the store was built), not a cryptographic commitment — xxhash64 is
+    fine."""
+    return _store_fingerprint(docs, "text")
 
 
 def _rwords_frame(words: DataFrame) -> DataFrame:
@@ -278,14 +343,11 @@ def store_search_index(
     sidecar whose fingerprint still matches beside half-written tables
     (the one state fingerprint verification alone cannot catch)."""
     spark = docs.sparkSession
-    try:
-        os.remove(_meta_path(spark, base))
-    except FileNotFoundError:
-        pass
+    _discard(_meta_path(spark, base))
     pos = _positions_frame(docs).localCheckpoint(eager=False)
     frames = _appendable_frames(pos)
     for suffix, frame in frames.items():
-        _write_text_table(frame, base, suffix, n_buckets)
+        _write_store_table(frame, base, suffix, n_buckets)
     # n_docs counts ALL documents (token-less ones contribute to BM25's
     # N exactly as in the corpus-scan form); avgdl averages over
     # tokenized docs, matching bm25_search's doclen aggregate. The same
@@ -296,68 +358,90 @@ def store_search_index(
     norms = tfidf_norms(tfidf_weighted(frames["_docterms"], n_docs)).select(
         "doc_id", F.col("n2").cast("decimal(38,12)").alias("n2")
     )
-    _write_text_table(norms, base, "_norms", n_buckets)
+    _write_store_table(norms, base, "_norms", n_buckets)
     stats = _stats_frame(spark, base, n_docs)
-    _write_text_table(stats, base, "_stats", n_buckets)
+    _write_store_table(stats, base, "_stats", n_buckets)
     # sidecar: the layout facts a FRESH session needs to re-register the
     # external tables (the in-memory catalog forgets them; the files do
     # not) — see attach_search_index — plus the corpus fingerprint that
     # makes "is this store current for THESE docs" an invariant-by-check
     # (verify_search_index), not an assumption about the path's contents.
-    with open(_meta_path(spark, base), "w") as fh:
-        json.dump(
-            {
-                "version": _LAYOUT_VERSION,
-                "n_buckets": n_buckets,
-                "fingerprint": fp,
-                # norms bake idf in, so ANY extend flips this (df moved)
-                # and compaction rebuilds; stale norms are recomputed
-                # on the fly by mlt_search_stored — slower, never wrong
-                "norms_current": True,
-            },
-            fh,
-        )
-    # a completed rebuild supersedes any torn extend and swap leftovers
-    _clear_extend_marker(spark, base)
+    _publish_build(
+        spark,
+        base,
+        "text",
+        {
+            "version": _LAYOUT_VERSION,
+            "n_buckets": n_buckets,
+            "fingerprint": fp,
+            # norms bake idf in, so ANY extend flips this (df moved)
+            # and compaction rebuilds; stale norms are recomputed
+            # on the fly by mlt_search_stored — slower, never wrong
+            "norms_current": True,
+        },
+    )
     _cleanup_swap_leftovers(spark, base)
 
 
+# ---------------------------------------------------------------------------
+# The store lifecycle, shared by the text and ANN stores: sidecar I/O,
+# extend marker, attach, verify, ensure, and (beside
+# extend_search_index) the extend bracket. Together with the atomic
+# table swap these close the round-4 durability defects: a torn
+# multi-table extend is DETECTABLE (marker), a crash mid-rewrite of a
+# derived table or of the sidecar never destroys the only copy (__next
+# write + rename swap; temp file + os.replace), and a store serving a
+# regenerated corpus is CAUGHT, not silently served (sidecar fingerprint
+# checked by ensure).
+# ---------------------------------------------------------------------------
+
+
 def _meta_path(spark: SparkSession, base: str, kind: str = "text") -> str:
-    """Sidecar path per layout KIND — the text and ANN stores under one
+    """Sidecar path per store KIND — the text and ANN stores under one
     base name must not clobber each other's metadata."""
-    suffix = "serving_meta" if kind == "text" else f"{kind}_serving_meta"
-    return table_location(spark, f"{base}_{suffix}.json")
+    prefix = "" if kind == "text" else f"{kind}_"
+    return table_location(spark, f"{base}_{prefix}serving_meta.json")
 
 
-def _read_meta(spark: SparkSession, base: str) -> dict:
-    with open(_meta_path(spark, base)) as fh:
+def _marker_path(spark: SparkSession, base: str, kind: str = "text") -> str:
+    prefix = "" if kind == "text" else f"{kind}_"
+    return table_location(spark, f"{base}_{prefix}extend_inprogress.marker")
+
+
+def _in_progress(spark: SparkSession, base: str, kind: str) -> bool:
+    return os.path.exists(_marker_path(spark, base, kind))
+
+
+def _read_meta(spark: SparkSession, base: str, kind: str = "text") -> dict:
+    with open(_meta_path(spark, base, kind)) as fh:
         return json.load(fh)
 
 
-# ---------------------------------------------------------------------------
-# Lifecycle protection: extend marker + atomic table swap + fingerprint
-# verify. Together these close the two round-4 durability defects: a
-# torn multi-table extend is DETECTABLE (marker), a crash mid-rewrite
-# of a derived table can never destroy the only copy (__next write +
-# rename swap), and a store serving a regenerated corpus is CAUGHT, not
-# silently served (sidecar fingerprint checked by ensure_search_index).
-# ---------------------------------------------------------------------------
+def _write_json(path: str, obj: dict) -> None:
+    """The one sidecar and marker writer: a temp file beside ``path``,
+    then os.replace — a crash mid-write leaves the previous file whole,
+    never a truncated one (streaming/deltas.write_manifest's rule)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
-def _extend_marker_path(spark: SparkSession, base: str) -> str:
-    return table_location(spark, f"{base}_extend_inprogress.marker")
-
-
-def _write_extend_marker(spark: SparkSession, base: str, info: dict) -> None:
-    with open(_extend_marker_path(spark, base), "w") as fh:
-        json.dump(info, fh)
-
-
-def _clear_extend_marker(spark: SparkSession, base: str) -> None:
+def _discard(path: str) -> None:
     try:
-        os.remove(_extend_marker_path(spark, base))
+        os.remove(path)
     except FileNotFoundError:
         pass
+
+
+def _publish_build(
+    spark: SparkSession, base: str, kind: str, meta: dict
+) -> None:
+    """Close a full build: the sidecar goes down LAST (the build
+    deleted it first), and a completed build supersedes any torn
+    extend."""
+    _write_json(_meta_path(spark, base, kind), meta)
+    _discard(_marker_path(spark, base, kind))
 
 
 def extend_in_progress(spark: SparkSession, base: str) -> bool:
@@ -366,7 +450,7 @@ def extend_in_progress(spark: SparkSession, base: str) -> bool:
     positions include the new docs while stats exclude them) and
     must be rebuilt (or rolled forward by re-running the same extend
     after a rebuild from the pre-extend corpus)."""
-    return os.path.exists(_extend_marker_path(spark, base))
+    return _in_progress(spark, base, "text")
 
 
 def _swap_paths(
@@ -422,7 +506,7 @@ def _replace_table_atomic(
     keeps every pruning property."""
     table = f"{base}{suffix}"
     next_table = f"{table}__next"
-    _write_text_table(merged, base, suffix, n_buckets, table=next_table)
+    _write_store_table(merged, base, suffix, n_buckets, table=next_table)
     # keep the files, drop the scratch catalog entry (external table)
     spark.sql(f"DROP TABLE IF EXISTS {next_table}")
     loc, next_loc, old_loc = _swap_paths(spark, base, suffix)
@@ -434,7 +518,72 @@ def _replace_table_atomic(
     os.rename(next_loc, loc)  # the publish point
     if os.path.isdir(old_loc):
         shutil.rmtree(old_loc)
-    _register_text_table(spark, base, suffix, n_buckets)
+    _register_store_table(spark, base, suffix, n_buckets)
+
+
+def _attach_store(spark: SparkSession, base: str, kind: str) -> None:
+    """The one attach (see :func:`attach_search_index`)."""
+    k = _KINDS[kind]
+    if kind == "text":
+        recover_table_swaps(spark, base)
+    tables = [f"{base}{sfx}" for sfx in k.layout]
+    registered = [t for t in tables if spark.catalog.tableExists(t)]
+    if len(registered) == len(tables):
+        return
+    # partial registration (a previous attach failed mid-way): drop the
+    # registered external entries (metadata only — data files stay) and
+    # re-create everything, so a retry repairs instead of silently
+    # no-opping on the first table's existence
+    for t in registered:
+        spark.sql(f"DROP TABLE {t}")
+    meta = _read_meta(spark, base, kind)
+    version = int(meta.get("version", 1))
+    if version < k.version:
+        # an older layout lacks tables or columns this one reads;
+        # attaching it through the current DDL would read nulls
+        raise FileNotFoundError(
+            f"store '{base}' is layout version {version}, older than "
+            f"v{k.version} — rebuild with {k.build_fn}"
+        )
+    n, quantized = int(meta.get("n_buckets", 0)), bool(meta.get("quantized"))
+    for suffix in k.layout:
+        _register_store_table(spark, base, suffix, n, quantized)
+
+
+def _verify_store(
+    spark: SparkSession, base: str, kind: str, rows: DataFrame
+) -> bool:
+    """The one verify (see :func:`verify_search_index`)."""
+    if _in_progress(spark, base, kind):
+        return False
+    try:
+        meta = _read_meta(spark, base, kind)
+    except FileNotFoundError:
+        return False
+    fp = meta.get("fingerprint")
+    return fp is not None and fp == _store_fingerprint(rows, kind)
+
+
+def _ensure_store(
+    rows: DataFrame, base: str, kind: str, build, expect: dict | None = None
+) -> None:
+    """The one attach-or-build (see :func:`ensure_search_index`); a
+    sidecar value differing from ``expect`` also runs ``build()``."""
+    spark = rows.sparkSession
+    tables = [f"{base}{sfx}" for sfx in _KINDS[kind].layout]
+    if all(spark.catalog.tableExists(t) for t in tables) and not (
+        _in_progress(spark, base, kind)
+    ):
+        return
+    try:
+        _attach_store(spark, base, kind)
+        if _verify_store(spark, base, kind, rows):
+            meta = _read_meta(spark, base, kind)
+            if all(meta.get(key) == v for key, v in (expect or {}).items()):
+                return
+    except FileNotFoundError:
+        pass
+    build()
 
 
 def attach_search_index(spark: SparkSession, base: str) -> None:
@@ -454,29 +603,7 @@ def attach_search_index(spark: SparkSession, base: str) -> None:
     predates the current layout version, or that lacks any table, is
     refused with FileNotFoundError — older stores are rebuilt (by
     :func:`ensure_search_index`), never served through a fallback."""
-    recover_table_swaps(spark, base)
-    tables = [f"{base}{sfx}" for sfx in _TEXT_TABLES]
-    registered = [t for t in tables if spark.catalog.tableExists(t)]
-    if len(registered) == len(tables):
-        return
-    # partial registration (a previous attach failed mid-way): drop the
-    # registered external entries (metadata only — data files stay) and
-    # re-create everything, so a retry repairs instead of silently
-    # no-opping on the first table's existence
-    for t in registered:
-        spark.sql(f"DROP TABLE {t}")
-    meta = _read_meta(spark, base)
-    version = int(meta.get("version", 1))
-    if version < _LAYOUT_VERSION:
-        # an older layout lacks tables or columns this one reads;
-        # attaching it through the current DDL would read nulls
-        raise FileNotFoundError(
-            f"store '{base}' is layout version {version}, older than "
-            f"v{_LAYOUT_VERSION} — rebuild with store_search_index"
-        )
-    n = int(meta["n_buckets"])
-    for suffix in _TEXT_TABLES:
-        _register_text_table(spark, base, suffix, n)
+    _attach_store(spark, base, "text")
 
 
 def verify_search_index(spark: SparkSession, base: str, docs: DataFrame) -> bool:
@@ -486,14 +613,7 @@ def verify_search_index(spark: SparkSession, base: str, docs: DataFrame) -> bool
     corpus aggregation). A sidecar without a fingerprint (pre-v2 store)
     is UNVERIFIABLE and reports False — callers rebuild, converting an
     invariant-by-convention into an invariant-by-check."""
-    if extend_in_progress(spark, base):
-        return False
-    try:
-        meta = _read_meta(spark, base)
-    except FileNotFoundError:
-        return False
-    fp = meta.get("fingerprint")
-    return fp is not None and fp == corpus_fingerprint(docs)
+    return _verify_store(spark, base, "text", docs)
 
 
 def ensure_search_index(
@@ -514,19 +634,9 @@ def ensure_search_index(
       rebuilt, never silently served stale.
     - nothing on disk / verification fails: full rebuild.
     """
-    spark = docs.sparkSession
-    tables = [f"{base}{sfx}" for sfx in _TEXT_TABLES]
-    if all(spark.catalog.tableExists(t) for t in tables) and not (
-        extend_in_progress(spark, base)
-    ):
-        return
-    try:
-        attach_search_index(spark, base)
-        if verify_search_index(spark, base, docs):
-            return
-    except FileNotFoundError:
-        pass
-    store_search_index(docs, base, n_buckets=n_buckets)
+    _ensure_store(
+        docs, base, "text", lambda: store_search_index(docs, base, n_buckets)
+    )
 
 
 def pruned_positions(positions: DataFrame, words: set[str]) -> DataFrame:
@@ -906,8 +1016,9 @@ def boolean_search_stored(
     """(op, term1, term2, doc_ids): AND/OR/NOT posting ops served from
     the stored positions table — the lookup reads one bucket per term
     (stored_term_postings), the three ops project from ONE collected
-    pair of posting arrays. Emits 0 rows when either term is absent,
-    matching index.py boolean_search's both-present semantics."""
+    pair of posting arrays through the same ``_boolean_op_rows`` tail
+    as index.py boolean_search, so it emits 0 rows when either term is
+    absent, as the corpus-scan form does."""
     merged = stored_term_postings(spark, base, [t1, t2])
     empty = F.array().cast("array<long>")
     two = merged.groupBy().agg(
@@ -920,31 +1031,7 @@ def boolean_search_stored(
         F.coalesce(F.max(F.col("word") == t1), F.lit(False)).alias("has1"),
         F.coalesce(F.max(F.col("word") == t2), F.lit(False)).alias("has2"),
     )
-    both = F.col("has1") & F.col("has2")
-    entries = [
-        F.struct(
-            F.lit(op).alias("op"),
-            F.lit(t1).alias("term1"),
-            F.lit(t2).alias("term2"),
-            F.sort_array(arr).alias("doc_ids"),
-            both.alias("emit"),
-        )
-        for op, arr in (
-            ("and", F.array_intersect("p1", "p2")),
-            ("or", F.array_union("p1", "p2")),
-            ("not", F.array_except("p1", "p2")),
-        )
-    ]
-    return (
-        two.select(F.explode(F.array(*entries)).alias("kv"))
-        .where(F.col("kv.emit"))
-        .select(
-            F.col("kv.op").alias("op"),
-            F.col("kv.term1").alias("term1"),
-            F.col("kv.term2").alias("term2"),
-            F.col("kv.doc_ids").alias("doc_ids"),
-        )
-    )
+    return _boolean_op_rows(two, t1, t2)
 
 
 # ---------------------------------------------------------------------------
@@ -954,18 +1041,11 @@ def boolean_search_stored(
 
 
 def embeddings_fingerprint(emb: DataFrame) -> dict:
-    """The ANN store's analogue of :func:`corpus_fingerprint`: vector
-    count plus the xor of per-row ``xxhash64(vec_id, embedding)``
-    (xxhash64 hashes array columns natively). Order-independent, one
-    aggregation — a staleness check for "do the stored inverted lists
-    still describe THESE embeddings"."""
-    row = emb.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64(F.col("vec_id"), F.col("embedding"))), F.lit(0)
-        ).alias("x"),
-    ).first()
-    return {"n_vecs": int(row["n"]), "xor64": int(row["x"])}
+    """The ANN store's :func:`corpus_fingerprint`: vector count plus
+    the xor of per-row ``xxhash64(vec_id, embedding)`` (xxhash64 hashes
+    array columns natively) — a staleness check for "do the stored
+    inverted lists still describe THESE embeddings"."""
+    return _store_fingerprint(emb, "ann")
 
 
 def _quantized_assignment(assigned: DataFrame) -> DataFrame:
@@ -986,7 +1066,7 @@ def store_ann_index(
     quantize: bool = False,
 ) -> None:
     """Fit the IVF coarse quantizer once and persist the similarity
-    serving layout under ``base``:
+    serving layout under ``base`` (``_ANN_LAYOUT``):
 
     - ``<base>_vectors``   — (vec_id, embedding, list_id), external
       parquet PARTITIONED BY list_id: each inverted list is its own
@@ -1005,18 +1085,14 @@ def store_ann_index(
       they are n_list rows, and probe selection quality should not pay
       for list compression.
 
-    A JSON sidecar + :func:`attach_ann_index` give the same fresh-
-    session re-attachment story as the text index — and the same
-    invalidate-first/write-last sidecar hygiene as
-    :func:`store_search_index`, so a crashed rebuild cannot leave an
-    attachable sidecar beside partial tables."""
+    The sidecar, attach, verify and ensure are the text store's
+    lifecycle (one implementation, selected by store kind), including
+    its invalidate-first/write-last sidecar hygiene: a crashed rebuild
+    cannot leave an attachable sidecar beside partial tables."""
     from .similarity import ivf_assign, ivf_fit
 
     spark = emb.sparkSession
-    try:
-        os.remove(_meta_path(spark, base, kind="ann"))
-    except FileNotFoundError:
-        pass
+    _discard(_meta_path(spark, base, "ann"))
     centroids = ivf_fit(emb, n_list=n_list, n_iters=n_iters)
     # store builds take the Arrow-batched assignment: the layout's
     # correctness anchor (full probe) is assignment-invariant, and the
@@ -1024,72 +1100,28 @@ def store_ann_index(
     assigned = ivf_assign(emb, centroids, vectorized=True)
     if quantize:
         assigned = _quantized_assignment(assigned)
-    write_partitioned_table(assigned, f"{base}_vectors", ("list_id",))
+    _write_store_table(assigned, base, "_vectors", 0)
     rows = [(j, [float(x) for x in c]) for j, c in enumerate(centroids)]
-    write_table(
-        spark.createDataFrame(rows, "list_id int, centroid array<double>"),
-        f"{base}_centroids",
+    centroids_df = spark.createDataFrame(rows, _ANN_LAYOUT["_centroids"].cols)
+    _write_store_table(centroids_df, base, "_centroids", 0)
+    _publish_build(
+        spark,
+        base,
+        "ann",
+        {
+            "version": _KINDS["ann"].version,
+            "n_list": len(centroids),
+            "quantized": bool(quantize),
+            "fingerprint": embeddings_fingerprint(emb),
+        },
     )
-    with open(_meta_path(spark, base, kind="ann"), "w") as fh:
-        json.dump(
-            {
-                "version": 2,
-                "n_list": len(centroids),
-                "quantized": bool(quantize),
-                "fingerprint": embeddings_fingerprint(emb),
-            },
-            fh,
-        )
-    # a completed rebuild supersedes any torn extend
-    try:
-        os.remove(_ann_extend_marker_path(spark, base))
-    except FileNotFoundError:
-        pass
 
 
 def attach_ann_index(spark: SparkSession, base: str) -> None:
     """Re-register a stored ANN layout in a fresh session (no-op when
-    already attached) — CREATE TABLE ... LOCATION DDL over the external
-    files, partition spec intact."""
-    tables = [f"{base}_vectors", f"{base}_centroids"]
-    registered = [t for t in tables if spark.catalog.tableExists(t)]
-    if len(registered) == len(tables):
-        return
-    for t in registered:  # repair a partial attach, never no-op on it
-        spark.sql(f"DROP TABLE {t}")
-    # a missing ANN sidecar is a loud error; ensure_ann_index rebuilds
-    meta = _read_ann_meta(spark, base)
-    for t in tables:
-        if not os.path.isdir(table_location(spark, t)):
-            raise FileNotFoundError(
-                f"no stored data for {t} at {table_location(spark, t)}"
-            )
-    loc = table_location(spark, f"{base}_vectors")
-    vec_cols = (
-        "vec_id bigint, q array<tinyint>, q_scale double, list_id int"
-        if meta.get("quantized")
-        else "vec_id bigint, embedding array<float>, list_id int"
-    )
-    spark.sql(
-        f"CREATE TABLE {base}_vectors ({vec_cols}) "
-        f"USING parquet PARTITIONED BY (list_id) LOCATION '{loc}'"
-    )
-    spark.catalog.recoverPartitions(f"{base}_vectors")
-    loc = table_location(spark, f"{base}_centroids")
-    spark.sql(
-        f"CREATE TABLE {base}_centroids "
-        "(list_id int, centroid array<double>) "
-        f"USING parquet LOCATION '{loc}'"
-    )
-
-
-def _read_ann_meta(spark: SparkSession, base: str) -> dict:
-    with open(_meta_path(spark, base, kind="ann")) as fh:
-        return json.load(fh)
-
-
-def _ann_extend_marker_path(spark: SparkSession, base: str) -> str:
-    return table_location(spark, f"{base}_ann_extend_inprogress.marker")
+    already attached) — the text store's attach over ``_ANN_LAYOUT``,
+    partition spec and (quantized) columns intact."""
+    _attach_store(spark, base, "ann")
 
 
 def ann_extend_in_progress(spark: SparkSession, base: str) -> bool:
@@ -1097,23 +1129,13 @@ def ann_extend_in_progress(spark: SparkSession, base: str) -> bool:
     and never finished — the vectors table may hold a partial batch the
     sidecar fingerprint does not cover; rebuild (or re-run the extend
     after a rebuild from the pre-extend embeddings)."""
-    return os.path.exists(_ann_extend_marker_path(spark, base))
+    return _in_progress(spark, base, "ann")
 
 
 def verify_ann_index(spark: SparkSession, base: str, emb: DataFrame) -> bool:
-    """True iff the stored ANN layout provably describes ``emb``: no
-    torn extend in progress, AND the sidecar's embeddings fingerprint
-    matches the one recomputed from ``emb``. A pre-v2 sidecar (no
-    fingerprint) is unverifiable and reports False — the same
-    rebuild-on-unverifiable contract as :func:`verify_search_index`."""
-    if ann_extend_in_progress(spark, base):
-        return False
-    try:
-        meta = _read_ann_meta(spark, base)
-    except FileNotFoundError:
-        return False
-    fp = meta.get("fingerprint")
-    return fp is not None and fp == embeddings_fingerprint(emb)
+    """:func:`verify_search_index` for the ANN store, against the
+    embeddings fingerprint."""
+    return _verify_store(spark, base, "ann", emb)
 
 
 def ensure_ann_index(
@@ -1123,37 +1145,29 @@ def ensure_ann_index(
     n_iters: int = 2,
     quantize: bool = False,
 ) -> None:
-    """Attach-or-build entry point for the stored ANN layout — the
-    similarity surface's :func:`ensure_search_index`. After this
+    """:func:`ensure_search_index` for the ANN store: after this
     returns, ``<base>_vectors``/``<base>_centroids`` are registered and
-    provably current for ``emb``: tables registered this session are
-    trusted (built or verified by the registering call), a fresh-session
-    attach verifies the sidecar fingerprint, and anything else —
-    missing store, regenerated embeddings at the same path, a storage
-    format not matching ``quantize``, pre-v2 sidecar — triggers a full
-    rebuild."""
-    spark = emb.sparkSession
-    tables = [f"{base}_vectors", f"{base}_centroids"]
-    if all(spark.catalog.tableExists(t) for t in tables) and not (
-        ann_extend_in_progress(spark, base)
-    ):
-        return
-    try:
-        attach_ann_index(spark, base)
-        if verify_ann_index(spark, base, emb) and bool(
-            _read_ann_meta(spark, base).get("quantized")
-        ) == bool(quantize):
-            return
-    except FileNotFoundError:
-        pass
-    store_ann_index(emb, base, n_list=n_list, n_iters=n_iters, quantize=quantize)
+    provably current for ``emb``. Besides a missing store, regenerated
+    embeddings or a pre-v2 sidecar, a storage format not matching
+    ``quantize`` also triggers a full rebuild."""
+    _ensure_store(
+        emb,
+        base,
+        "ann",
+        lambda: store_ann_index(
+            emb, base, n_list=n_list, n_iters=n_iters, quantize=quantize
+        ),
+        expect={"quantized": bool(quantize)},
+    )
 
 
 def extend_ann_index(
     spark: SparkSession, base: str, new_emb: DataFrame
 ) -> None:
     """Append-only ingest of NEW vectors into a stored ANN layout — the
-    similarity surface's :func:`extend_search_index`.
+    similarity surface's :func:`extend_search_index`, through the same
+    extend bracket (:func:`_extend_store`: new-id check, marker,
+    xor-composed fingerprint, atomic sidecar write).
 
     Each new vector is assigned to its nearest EXISTING centroid: the
     coarse quantizer is fixed at build time (the standard IVF ingest
@@ -1162,59 +1176,28 @@ def extend_ann_index(
     the write is a pure partition-directory append of the batch's rows;
     cost grows with the BATCH, never the store. Re-fitting centroids
     when drift accumulates is a rebuild decision
-    (:func:`store_ann_index`), not an append.
-
-    Vec ids must be NEW (one semi-join against the stored vec_id
-    column, bounded by the broadcast batch ids). Durability mirrors the
-    text extend: assignment is computed and pinned before the store is
-    touched; an ``ann_extend_inprogress`` marker brackets the append +
-    sidecar update, so a crash mid-append is detectable
-    (verify/ensure_ann_index refuse and rebuild); the sidecar
-    fingerprint xor-composes with the batch's, so a later ensure over
-    (old vectors + batch) verifies clean without a rebuild."""
-    new_ids = new_emb.select("vec_id").distinct()
-    n_overlap = (
-        spark.table(f"{base}_vectors")
-        .join(F.broadcast(new_ids), "vec_id", "left_semi")
-        .count()
-    )
-    if n_overlap:
-        raise ValueError(
-            f"{n_overlap} vec_ids already exist in '{base}' — "
-            "extend_ann_index is append-only (re-ingest requires a "
-            "rebuild)"
-        )
+    (:func:`store_ann_index`), not an append."""
     from .similarity import ivf_assign
 
-    meta = _read_ann_meta(spark, base)
-    assigned = ivf_assign(
-        new_emb, load_stored_centroids(spark, base), vectorized=True
-    )
-    if meta.get("quantized"):
-        assigned = _quantized_assignment(assigned)
-    assigned = assigned.localCheckpoint()
-    batch_fp = embeddings_fingerprint(new_emb)
+    def assign(meta: dict) -> DataFrame:
+        assigned = ivf_assign(
+            new_emb, load_stored_centroids(spark, base), vectorized=True
+        )
+        if meta.get("quantized"):
+            assigned = _quantized_assignment(assigned)
+        return assigned.localCheckpoint()
 
-    with open(_ann_extend_marker_path(spark, base), "w") as fh:
-        json.dump({"n_new_vecs": batch_fp["n_vecs"]}, fh)
-    loc = table_location(spark, f"{base}_vectors")
-    (
-        assigned.write.format("parquet")
-        .mode("append")
-        .option("path", loc)
-        .partitionBy("list_id")
-        .saveAsTable(f"{base}_vectors")
-    )
-    spark.catalog.recoverPartitions(f"{base}_vectors")
-    old_fp = meta.get("fingerprint")
-    if old_fp is not None:
-        meta["fingerprint"] = {
-            "n_vecs": int(old_fp["n_vecs"]) + batch_fp["n_vecs"],
-            "xor64": int(old_fp["xor64"]) ^ batch_fp["xor64"],
-        }
-    with open(_meta_path(spark, base, kind="ann"), "w") as fh:
-        json.dump(meta, fh)
-    os.remove(_ann_extend_marker_path(spark, base))
+    def append(assigned: DataFrame, meta: dict, n_new: int) -> None:
+        (
+            assigned.write.format("parquet")
+            .mode("append")
+            .option("path", table_location(spark, f"{base}_vectors"))
+            .partitionBy("list_id")
+            .saveAsTable(f"{base}_vectors")
+        )
+        spark.catalog.recoverPartitions(f"{base}_vectors")
+
+    _extend_store(spark, base, "ann", new_emb, assign, append)
 
 
 def load_stored_centroids(spark: SparkSession, base: str) -> list[list[float]]:
@@ -1262,7 +1245,7 @@ def ann_search_stored(
         k=k,
         nprobe=nprobe,
         decimal_scores=decimal_scores,
-        quantized=bool(_read_ann_meta(spark, base).get("quantized")),
+        quantized=bool(_read_meta(spark, base, "ann").get("quantized")),
     )
 
 
@@ -1419,71 +1402,90 @@ def extend_search_index(
     positions contract, so overlap is a loud error (one semi-join
     against the stored doclen, bounded by the new batch's ids).
 
-    Durability protocol (crash-injected in
-    tests/test_serving_lifecycle.py):
-
-    - the batch's positional postings are computed and pinned BEFORE
-      the first byte of the store is touched — a failure in the compute
-      phase leaves the store byte-identical.
-    - an ``extend_inprogress`` marker brackets the multi-table mutation:
-      the tables cannot be updated in one atomic step on plain parquet,
-      so a crash mid-extend leaves a TORN store (e.g. positions include
-      the new docs while stats exclude them) — the marker makes that
-      state detectable; verify_search_index / ensure_search_index
-      refuse it and rebuild.
-    - the sidecar fingerprint is updated by xor-composition with the
-      batch's fingerprint, so a later ensure over (old corpus + batch)
-      verifies clean without a rebuild.
+    Durability is the extend bracket both stores share
+    (:func:`_extend_store`, crash-injected in
+    tests/test_serving_lifecycle.py): the batch's positional postings
+    are pinned before the store is touched, and an
+    ``extend_inprogress`` marker brackets the multi-table mutation —
+    the tables cannot be updated in one atomic step on plain parquet,
+    so a crash mid-extend leaves a TORN store (e.g. positions include
+    the new docs while stats exclude them) that verify_search_index /
+    ensure_search_index detect and rebuild.
     """
-    new_ids = new_docs.select("doc_id").distinct()
+
+    def tokenize(meta: dict) -> DataFrame:
+        # ONE tokenization of the new batch (eagerly pinned positional
+        # frame) feeds positions, doclen, docterms and rwords
+        return _positions_frame(new_docs).localCheckpoint()
+
+    def append(new_pos: DataFrame, meta: dict, n_new: int) -> None:
+        n_buckets = int(meta["n_buckets"])
+        # rwords gets the BATCH's distinct words only — a word already
+        # stored lands again as a duplicate row, which readers tolerate
+        # (distinct at read after partition+prefix pruning bounds the
+        # cost by the match set) and compaction dedupes; the
+        # alternative, an anti-join against the stored vocabulary,
+        # would put a store-proportional read in the ingest path
+        for suffix, frame in _appendable_frames(new_pos).items():
+            _append_text_table(frame, base, suffix, n_buckets)
+        old = spark.table(f"{base}_stats").first()
+        n_docs = int(old["n_docs"]) + n_new
+        stats = _stats_frame(spark, base, n_docs).localCheckpoint()
+        _write_store_table(stats, base, "_stats", n_buckets)
+        # norms bake idf in and EVERY extend moves df, so norms always
+        # go stale here — recomputing them is a corpus-scale
+        # aggregation, a cost class the ingest path must not pay;
+        # mlt_search_stored recomputes on the fly until compaction
+        meta["norms_current"] = False
+
+    _extend_store(spark, base, "text", new_docs, tokenize, append)
+
+
+def _extend_store(
+    spark: SparkSession,
+    base: str,
+    kind: str,
+    new_rows: DataFrame,
+    compute,
+    append,
+) -> None:
+    """The one extend bracket, around each kind's own
+    ``compute(meta) -> pinned batch`` and ``append(batch, meta, n_new)``
+    (which may update ``meta``). The batch's ids must be NEW (one
+    semi-join, bounded by the broadcast batch ids); ``compute`` pins
+    the batch before the store is touched; the marker brackets the
+    append, so a crash there is detectable (verify refuses, ensure
+    rebuilds); the sidecar fingerprint xor-composes with the batch's,
+    so a later ensure over (old rows + batch) verifies without a
+    rebuild; the sidecar is written atomically, then the marker
+    cleared."""
+    k = _KINDS[kind]
+    new_ids = new_rows.select(k.id_col).distinct()
     n_overlap = (
-        spark.table(f"{base}_doclen")
-        .join(F.broadcast(new_ids), "doc_id", "left_semi")
+        spark.table(f"{base}{k.id_table}")
+        .join(F.broadcast(new_ids), k.id_col, "left_semi")
         .count()
     )
     if n_overlap:
         raise ValueError(
-            f"{n_overlap} doc_ids already exist in '{base}' — "
-            "extend_search_index is append-only (re-ingest requires a "
-            "rebuild or a versioned swap)"
+            f"{n_overlap} {k.id_col}s already exist in '{base}' — "
+            f"{k.extend_fn} is append-only (re-ingest requires a rebuild)"
         )
-    meta = _read_meta(spark, base)
-    n_buckets = int(meta["n_buckets"])
-
-    # ---- compute phase: store untouched until everything is pinned ----
-    # ONE tokenization of the new batch (eagerly pinned positional
-    # frame) feeds positions, doclen, docterms and rwords
-    new_pos = _positions_frame(new_docs).localCheckpoint()
-    batch_fp = corpus_fingerprint(new_docs)
-
-    # ---- mutate phase: bracketed by the torn-extend marker ----
-    _write_extend_marker(spark, base, {"n_new_docs": batch_fp["n_docs"]})
-    # rwords gets the BATCH's distinct words only — a word already
-    # stored lands again as a duplicate row, which readers tolerate
-    # (distinct at read after partition+prefix pruning bounds the cost
-    # by the match set) and compaction dedupes; the alternative, an
-    # anti-join against the stored vocabulary, would put a
-    # store-proportional read in the ingest path
-    for suffix, frame in _appendable_frames(new_pos).items():
-        _append_text_table(frame, base, suffix, n_buckets)
-    old = spark.table(f"{base}_stats").first()
-    n_docs = int(old["n_docs"]) + batch_fp["n_docs"]
-    stats = _stats_frame(spark, base, n_docs).localCheckpoint()
-    _write_text_table(stats, base, "_stats", n_buckets)
+    meta = _read_meta(spark, base, kind)
+    batch = compute(meta)
+    batch_fp = _store_fingerprint(new_rows, kind)
+    n_new = batch_fp[k.count_key]
+    marker = _marker_path(spark, base, kind)
+    _write_json(marker, {"n_new": n_new})
+    append(batch, meta, n_new)
     old_fp = meta.get("fingerprint")
     if old_fp is not None:
         meta["fingerprint"] = {
-            "n_docs": int(old_fp["n_docs"]) + batch_fp["n_docs"],
+            k.count_key: int(old_fp[k.count_key]) + n_new,
             "xor64": int(old_fp["xor64"]) ^ batch_fp["xor64"],
         }
-    # norms bake idf in and EVERY extend moves df, so norms always go
-    # stale here — recomputing them is a corpus-scale aggregation, a
-    # cost class the ingest path must not pay; mlt_search_stored
-    # recomputes on the fly until compaction
-    meta["norms_current"] = False
-    with open(_meta_path(spark, base), "w") as fh:
-        json.dump(meta, fh)
-    _clear_extend_marker(spark, base)
+    _write_json(_meta_path(spark, base, kind), meta)
+    _discard(marker)
 
 
 def compact_search_index(spark: SparkSession, base: str) -> bool:
@@ -1520,8 +1522,7 @@ def compact_search_index(spark: SparkSession, base: str) -> bool:
         spark, base, "_rwords", rwords.localCheckpoint(), n_buckets
     )
     meta["norms_current"] = True
-    with open(_meta_path(spark, base), "w") as fh:
-        json.dump(meta, fh)
+    _write_json(_meta_path(spark, base), meta)
     return True
 
 

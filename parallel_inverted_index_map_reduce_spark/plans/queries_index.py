@@ -358,9 +358,8 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bs = ix.boolean_search(docs, "spark", "query", with_lookup=True).select(
         "op", "term1", "term2", F.array_join("doc_ids", " ").alias("doc_ids")
     )
-    phrase = "stream table hash"
 
-    def phrase_rows(matches: DataFrame, label: str) -> DataFrame:
+    def phrase_rows(matches: DataFrame, label: str, phrase: str) -> DataFrame:
         return (
             matches.groupBy()
             .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
@@ -373,27 +372,17 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    ph = phrase_rows(ix.phrase_search(docs, phrase), "phrase")
+    phrase = "stream table hash"
+    ph = phrase_rows(ix.phrase_search(docs, phrase), "phrase", phrase)
     base = _serving_base(spark, sf_dir, docs)
     slop_phrase = "stream hash"
-
-    def slop_rows(matches: DataFrame, label: str) -> DataFrame:
-        return (
-            matches.groupBy()
-            .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
-            .where(F.size("ids") > 0)
-            .select(
-                F.lit(label).alias("op"),
-                F.lit(slop_phrase).alias("term1"),
-                F.lit("").alias("term2"),
-                F.array_join("ids", " ").alias("doc_ids"),
-            )
-        )
-
-    sl = slop_rows(ix.phrase_search_slop(docs, slop_phrase, slop=1), "slop")
-    sl_stored = slop_rows(
+    sl = phrase_rows(
+        ix.phrase_search_slop(docs, slop_phrase, slop=1), "slop", slop_phrase
+    )
+    sl_stored = phrase_rows(
         srv.phrase_slop_search_stored(spark, base, slop_phrase, slop=1),
         "slop_stored",
+        slop_phrase,
     )
     bs_stored = srv.boolean_search_stored(spark, base, "spark", "query").select(
         F.concat(F.col("op"), F.lit("_stored")).alias("op"),
@@ -402,7 +391,7 @@ def q_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join("doc_ids", " ").alias("doc_ids"),
     )
     ph_stored = phrase_rows(
-        srv.phrase_search_stored(spark, base, phrase), "phrase_stored"
+        srv.phrase_search_stored(spark, base, phrase), "phrase_stored", phrase
     )
 
     def vocab_rows(df: DataFrame, op: str, q: str) -> DataFrame:

@@ -34,21 +34,16 @@ def input_key(sf_dir: str, df) -> str:
     """Memoization key for a store built FROM ``df`` at ``sf_dir``:
     the path plus an order-independent content fingerprint (row count +
     xor of per-row xxhash64 over every column — the serving sidecars'
-    corpus_fingerprint discipline, generalized to any input frame).
+    fingerprint formula, serving._count_xor64, over all columns).
     Keying on the path alone would serve a STALE snapshot if the table
     at that path were regenerated within one session; folding content
     in makes the memo self-invalidating. One narrow scan per
     construction — trivial next to the stream build it guards, and xor
     is associative/commutative so partitioning cannot change the key."""
-    from pyspark.sql import functions as F
+    from ..operators.serving import _count_xor64
 
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])), F.lit(0)
-        ).alias("x"),
-    ).first()
-    return f"{sf_dir}|n{int(row['n'])}x{int(row['x']) & 0xFFFFFFFFFFFFFFFF:016x}"
+    n, x = _count_xor64(df, df.columns)
+    return f"{sf_dir}|n{n}x{x & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
 def fresh_tmpdir(prefix: str = "sparkgraft_store_") -> str:

@@ -20,6 +20,21 @@ def spark():
     s.stop()
 
 
+def crash_in_sidecar_write(monkeypatch, sidecar: str) -> None:
+    """Make json.dump raise while it writes a file whose name contains
+    ``sidecar`` — a crash inside a store's sidecar write itself."""
+    import json
+
+    real_dump = json.dump
+
+    def crashing_dump(obj, fh, *a, **kw):
+        if sidecar in getattr(fh, "name", ""):
+            raise OSError("injected crash inside the sidecar write")
+        return real_dump(obj, fh, *a, **kw)
+
+    monkeypatch.setattr(json, "dump", crashing_dump)
+
+
 # ---------------------------------------------------------------------------
 # Slow tier (round 12): the full suite runs ~38 min on this box, which
 # overruns the grading driver's test window (VERIFY_r11 tests_ok:false

@@ -15,7 +15,7 @@ from parallel_inverted_index_map_reduce_spark.operators import serving as srv
 from parallel_inverted_index_map_reduce_spark.operators.similarity import ivf_topk
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, crash_in_sidecar_write
 
 BASE = "annidx"
 N_LIST, NPROBE, K, NQ = 8, 3, 3, 5
@@ -193,13 +193,40 @@ def test_torn_ann_extend_detected_and_rebuilt(spark, emb):
     sub = emb.where(F.col("vec_id") < 40)
     srv.store_ann_index(sub, base, n_list=2, n_iters=1)
     assert srv.verify_ann_index(spark, base, sub)
-    with open(srv._ann_extend_marker_path(spark, base), "w") as fh:
+    with open(srv._marker_path(spark, base, "ann"), "w") as fh:
         fh.write("{}")
     assert srv.ann_extend_in_progress(spark, base)
     assert not srv.verify_ann_index(spark, base, sub)
     srv.ensure_ann_index(sub, base, n_list=2, n_iters=1)
     assert not srv.ann_extend_in_progress(spark, base)
     assert srv.verify_ann_index(spark, base, sub)
+
+
+def test_ann_extend_crash_in_sidecar_write_rebuilds(spark, emb, monkeypatch):
+    """Crash inside extend_ann_index's sidecar write, after the append:
+    the previous sidecar survives whole and the extend marker stays.
+    With the catalog entries dropped (a fresh session), ensure_ann_index
+    attaches, finds the torn extend, rebuilds, and verify then passes.
+    A sidecar rewritten in place would be left empty here, and the
+    attach would fail to parse it."""
+    base = "annsidecarcrash"
+    old = emb.where(F.col("vec_id") < 60)
+    batch = emb.where((F.col("vec_id") >= 60) & (F.col("vec_id") < 80))
+    both = emb.where(F.col("vec_id") < 80)
+    srv.store_ann_index(old, base, n_list=2, n_iters=1)
+
+    crash_in_sidecar_write(monkeypatch, "_ann_serving_meta.json")
+    with pytest.raises(OSError, match="injected crash"):
+        srv.extend_ann_index(spark, base, batch)
+    monkeypatch.undo()
+    assert srv.ann_extend_in_progress(spark, base)
+
+    for sfx in ("_vectors", "_centroids"):
+        spark.sql(f"DROP TABLE IF EXISTS {base}{sfx}")
+    srv.ensure_ann_index(both, base, n_list=2, n_iters=1)
+    assert not srv.ann_extend_in_progress(spark, base)
+    assert srv.verify_ann_index(spark, base, both)
+    assert spark.table(f"{base}_vectors").count() == both.count()
 
 
 def test_quantized_stored_ann_lifecycle(spark, emb):

@@ -25,7 +25,7 @@ from parallel_inverted_index_map_reduce_spark.operators.index import (
 )
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, crash_in_sidecar_write
 
 
 def _docs_v1(spark):
@@ -176,7 +176,7 @@ def test_torn_extend_is_detected_and_rebuilt(spark):
     base = "lctorn"
     v1 = _docs_v1(spark)
     srv.store_search_index(v1, base, n_buckets=4)
-    srv._write_extend_marker(spark, base, {"n_new_docs": 99})
+    srv._write_json(srv._marker_path(spark, base), {"n_new_docs": 99})
     assert srv.extend_in_progress(spark, base)
     assert not srv.verify_search_index(spark, base, v1)
     srv.ensure_search_index(v1, base, n_buckets=4)
@@ -259,7 +259,7 @@ def test_swap_crash_windows_never_lose_norms(spark):
     srv.recover_table_swaps(spark, base)
     assert os.path.isdir(loc) and not os.path.isdir(next_loc)
     assert not os.path.isdir(old_loc)
-    srv._register_text_table(spark, base, "_norms", n)
+    srv._register_store_table(spark, base, "_norms", n)
     assert _rows(spark.table(f"{base}_norms")) == want
 
     # state C: crash after publish, before __old cleanup
@@ -435,6 +435,31 @@ def test_compact_crash_after_norms_swap_keeps_fallback_path(spark):
 
     srv.compact_search_index(spark, base)  # heals
     assert srv.norms_current(spark, base)
+    assert _rows(srv.mlt_search_stored(spark, base, 7, k=5)) == want
+
+
+def test_compact_crash_in_sidecar_write_keeps_old_sidecar(spark, monkeypatch):
+    """Crash inside compaction's sidecar write, after both swaps: the
+    previous sidecar must survive whole, so a fresh-session ensure
+    attaches and verifies it without a rebuild. Norms stay flagged
+    stale and more-like-this stays correct on the recompute path. A
+    sidecar rewritten in place would be left empty here, and the
+    attach would fail to parse it."""
+    base = "lcsidecarcrash"
+    first, batch, both = _split(spark)
+    srv.store_search_index(first, base, n_buckets=4)
+    srv.extend_search_index(spark, base, batch)
+
+    crash_in_sidecar_write(monkeypatch, "_serving_meta.json")
+    with pytest.raises(OSError, match="injected crash"):
+        srv.compact_search_index(spark, base)
+    monkeypatch.undo()
+
+    _drop_tables(spark, base)  # fresh session after the crash
+    srv.ensure_search_index(both, base, n_buckets=4)
+    assert srv.verify_search_index(spark, base, both)
+    assert not srv.norms_current(spark, base)  # old sidecar, no rebuild
+    want = _rows(more_like_this(both, 7, k=5))
     assert _rows(srv.mlt_search_stored(spark, base, 7, k=5)) == want
 
 

@@ -411,20 +411,21 @@ def _ansi(spark, enabled):
 def test_vectorized_pair_cosine_edge_cases(spark):
     """Degenerate inputs must match the expression form exactly:
     ragged lengths (index-intersection semantics), empty arrays and
-    zero vectors (NaN cosine via 0/0 passes round unchanged), tiny
-    negative cosines (round6 -> Java's positive 0.0, never -0.0), and
-    half-boundary-shaped components (the exact-fallback band). ANSI is
-    disabled for the comparison: under ANSI (the session default) the
-    EXPRESSION path raises DIVIDE_BY_ZERO on a zero-norm pair, so the
-    0/0 semantics are only comparable with ANSI off — real corpora
-    never contain zero-norm vectors either way."""
-    import math
-
+    zero vectors (a NULL cosine in both forms), tiny negative cosines
+    (round6 -> Java's positive 0.0, never -0.0), and half-boundary-
+    shaped components (the exact-fallback band). ANSI is disabled for
+    the comparison: under ANSI (the session default) the EXPRESSION
+    path raises DIVIDE_BY_ZERO on a zero-norm pair. With ANSI off the
+    expression's Divide returns NULL for a zero divisor, and the
+    vectorized form's mapInPandas output turns a NaN cosine into NULL
+    (Arrow masks NaN as null), so every pair with row 2 or 3 is None in
+    both forms — real corpora never contain zero-norm vectors either
+    way."""
     rows = [
         (0, [1.0, 0.0, 0.0]),
         (1, [-1e-7, 1.0, 0.0]),          # cosine ~ -1e-7 -> rounds to 0.0
-        (2, [0.0, 0.0, 0.0]),            # zero norm -> NaN cosine
-        (3, []),                          # empty -> zero norm -> NaN
+        (2, [0.0, 0.0, 0.0]),            # zero norm -> NULL cosine
+        (3, []),                          # empty -> zero norm -> NULL
         (4, [0.5, 0.5]),                  # ragged vs dim-3 rows
         (5, [5e-8, 2.5e-7, -5e-8]),      # half-boundary products vs row 0
         (6, [0.25, -0.75, 1.5]),         # exact dyadics
@@ -442,11 +443,8 @@ def test_vectorized_pair_cosine_edge_cases(spark):
         out = {}
         for r in df.collect():
             c = r.cosine
-            if c is not None and math.isnan(c):
-                c = "nan"
-            elif c is not None:
-                c = repr(c)  # repr distinguishes -0.0 from 0.0
-            out[(r.vec_a, r.vec_b)] = c
+            # repr distinguishes -0.0 from 0.0
+            out[(r.vec_a, r.vec_b)] = None if c is None else repr(c)
         return out
 
     with _ansi(spark, False):
@@ -456,6 +454,10 @@ def test_vectorized_pair_cosine_edge_cases(spark):
     assert fast == expr
     # the tiny-negative pair must have collapsed to positive 0.0
     assert expr[(0, 1)] == "0.0"
+    zero_norm = [p for p in expr if {2, 3} & set(p)]
+    assert len(zero_norm) == 2 * (len(rows) - 2) + 1
+    for pair in zero_norm:
+        assert expr[pair] is None and fast[pair] is None, pair
 
 
 def test_vectorized_pair_cosine_past_int64_units(spark):
