@@ -1,10 +1,10 @@
 """Bucketed-table helpers: the shuffle-elimination story at 100 TB.
 
-A fact-fact join (orders-lineitem) shuffles both sides on the join key
-every query. Writing both tables bucketed by that key co-locates rows
-once at write time; subsequent joins read bucket-aligned scans with NO
-exchange — the plan shows SortMergeJoin over two FileScans and zero
-Exchange nodes (asserted in tests/test_bucketing.py).
+Writing a table bucketed by its lookup key co-locates rows once at
+write time: an equality filter on that key reads one bucket file, and
+a join or groupBy on it reads bucket-aligned scans with no exchange.
+The serving stores (operators/serving.py) are written through these
+helpers.
 
 At cluster scale the same calls target a metastore-backed table format;
 bucket counts should be sized so bucket × file-size ≈ 128-256 MB.
@@ -148,13 +148,3 @@ def write_table(df: DataFrame, table: str) -> None:
     df.write.format("parquet").mode("overwrite").option("path", loc).saveAsTable(
         table
     )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key_left: str, key_right: str
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket keys — Catalyst
-    plans this without any Exchange when bucket specs line up."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, left[key_left] == right[key_right])

@@ -654,66 +654,3 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
         for j in range(SIMHASH_BITS)
     )
     return per_doc.select("doc_id", F.expr(fingerprint).alias("simhash"))
-
-
-def lsh_collision_probability(s: float, bands: int, rows: int) -> float:
-    """P(candidate | Jaccard similarity s) under (bands x rows) banded
-    MinHash LSH: 1 - (1 - s^rows)^bands — the S-curve of the banding
-    scheme (Mining of Massive Datasets, ch. 3). Exact for idealized
-    MinHash; the engine's 16-permutation signatures track it closely
-    enough for parameter CHOICE, with the exact-Jaccard verify stage
-    downstream removing any false positives the curve admits."""
-    if not 0.0 <= s <= 1.0:
-        raise ValueError(f"similarity must be in [0, 1], got {s}")
-    return 1.0 - (1.0 - s**rows) ** bands
-
-
-def lsh_banding(
-    n_perm: int, threshold: float, beta: float = 1.0
-) -> tuple[int, int]:
-    """(bands, rows): the banding of ``n_perm`` MinHash permutations
-    that best approximates an ideal step filter at ``threshold``.
-
-    Scores every exact factorization b*r == n_perm by the integrated
-    deviation from the step — false-positive mass below the threshold
-    plus ``beta`` x false-negative mass above it:
-
-        FP = integral_0^t  P(s) ds      (pairs caught that shouldn't be)
-        FN = integral_t^1  1 - P(s) ds  (pairs missed that should be)
-
-    ``beta`` > 1 penalizes misses harder — the right bias for a
-    prune-then-VERIFY pipeline, where a false positive costs one
-    Jaccard check but a false negative is an undetected duplicate.
-    Deterministic closed-form integration (the integrand is polynomial)
-    via fixed Simpson sampling; ties break toward more rows (sharper
-    curve). The engine's default (16 permutations, 8 bands x 2 rows,
-    functions/hashing.py) is lsh_banding(16, 0.5, beta=4) — biased to
-    catch near-dups well below the 0.8 keep-list threshold because the
-    verify stage is cheap and misses are silent."""
-    if n_perm < 1:
-        raise ValueError(f"n_perm must be >= 1, got {n_perm}")
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best = None
-    for rows in range(1, n_perm + 1):
-        if n_perm % rows:
-            continue
-        bands = n_perm // rows
-        n = 200  # even Simpson panel count over each side
-        def integral(lo: float, hi: float, miss: bool) -> float:
-            h = (hi - lo) / n
-            total = 0.0
-            for i in range(n + 1):
-                s = lo + i * h
-                p = lsh_collision_probability(s, bands, rows)
-                v = (1.0 - p) if miss else p
-                w = 1 if i in (0, n) else (4 if i % 2 else 2)
-                total += w * v
-            return total * h / 3.0
-        cost = integral(0.0, threshold, False) + beta * integral(
-            threshold, 1.0, True
-        )
-        key = (cost, -rows)
-        if best is None or key < best[0]:
-            best = (key, (bands, rows))
-    return best[1]

@@ -61,9 +61,11 @@ def _with_df_letter(idx: DataFrame) -> DataFrame:
 
 def _attach_rank_window(idx: DataFrame) -> DataFrame:
     """Final projection with the per-letter (df desc, word asc) rank as
-    a 26-partition window — the reference-shaped form. The decomposed
-    alternative in :func:`build_index_scalable` lifts the 26-task
-    ceiling; both orderings are proven identical."""
+    a 26-partition window — the reference-shaped form. Past ~10^8
+    distinct words the rank would decompose as offset(letter, df), a
+    window over the per-(letter, df) counts, plus row_number within
+    (letter, df) by word — a window as wide as the distinct (letter,
+    df) pairs, lifting the 26-task ceiling."""
     w = Window.partitionBy("letter").orderBy(F.desc("df"), F.asc("word"))
     return idx.select(
         "letter",
@@ -97,57 +99,6 @@ def index_from_pairs(pairs: DataFrame) -> DataFrame:
         F.sort_array(F.collect_set("doc_id")).alias("postings")
     )
     return _attach_rank_window(_with_df_letter(idx))
-
-
-def build_index_scalable(docs: DataFrame, one_based: bool = False) -> DataFrame:
-    """:func:`build_index` with the per-letter rank DECOMPOSED — the
-    beyond-10^8-words variant the module docstring promises.
-
-    The plain build windows over 26 letter partitions, so 26 tasks sort
-    everything (the reference's own ceiling, inherited from its 26
-    buckets). Here rank(letter, df desc, word) splits into
-
-        offset(letter, df)  — how many words of this letter have higher
-                              df: a window over the per-(letter, df)
-                              COUNTS, thousands of rows total, and
-        row_number within (letter, df) ordered by word — a window whose
-        partition count is the number of DISTINCT (letter, df) pairs,
-        spreading the sort across the cluster instead of 26 tasks.
-
-    rank = offset + within. Asserted row-identical to build_index in
-    tests/test_index_merge_upsert.py.
-    """
-    t = tokens_df(docs)
-    if one_based:
-        t = t.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    idx = _with_df_letter(
-        t.groupBy("word").agg(
-            F.sort_array(F.collect_set("doc_id")).alias("postings")
-        )
-    )
-    counts = idx.groupBy("letter", "df").agg(F.count("*").alias("n_words"))
-    w_off = (
-        Window.partitionBy("letter")
-        .orderBy(F.desc("df"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "letter",
-        "df",
-        F.coalesce(F.sum("n_words").over(w_off), F.lit(0)).alias("offset"),
-    )
-    w_in = Window.partitionBy("letter", "df").orderBy(F.asc("word"))
-    return (
-        idx.withColumn("within", F.row_number().over(w_in))
-        .join(offsets, ["letter", "df"])
-        .select(
-            "letter",
-            "word",
-            "df",
-            "postings",
-            (F.col("offset") + F.col("within")).cast("long").alias("rank"),
-        )
-    )
 
 
 def document_frequency(docs: DataFrame) -> DataFrame:

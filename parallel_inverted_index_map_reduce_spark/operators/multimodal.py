@@ -372,50 +372,3 @@ def codec_roundtrip_features(docs: DataFrame) -> DataFrame:
     return spread(docs).select("doc_id").mapInPandas(
         codec_batches, schema=CODEC_SCHEMA
     )
-
-
-FRAME_SCHEMA = "doc_id long, frame_idx long, frame binary, n_frame_bytes long"
-
-
-def frame_samples(
-    docs: DataFrame, frame_bytes: int = 16, stride: int = 4, max_frames: int = 8
-) -> DataFrame:
-    """Video-style frame sampling over binary payloads: each payload
-    yields every ``stride``-th ``frame_bytes`` chunk, up to
-    ``max_frames`` — the 1:N row-expanding ``mapInPandas`` shape a real
-    decoder (ffmpeg frame extraction, audio windowing) would use. The
-    chunking stands in for frame decode (no codecs in this
-    environment); the Spark plumbing — binary in, multiple typed rows
-    out, narrow map with no shuffle, output bounded by
-    max_frames per row — is the real thing.
-    """
-
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for k in range(max_frames):
-                    off = k * stride * frame_bytes
-                    chunk = payload[off : off + frame_bytes]
-                    if not chunk:
-                        break
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    frames.append(bytes(chunk))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": _pd.Series(ids, dtype="int64"),
-                    "frame_idx": _pd.Series(idxs, dtype="int64"),
-                    "frame": _pd.Series(frames, dtype="object"),
-                    "n_frame_bytes": _pd.Series(
-                        [len(f) for f in frames], dtype="int64"
-                    ),
-                }
-            )
-
-    payloads = with_binary_payload(docs)
-    return payloads.select("doc_id", "payload").mapInPandas(
-        frame_batches, schema=FRAME_SCHEMA
-    )

@@ -31,18 +31,6 @@ def _unit_hash(key: Column, salt: str) -> Column:
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, decided by the key's hash alone.
-
-    Sampling by a KEY (not the whole row) keeps entity cohorts intact:
-    sampling events by user_id keeps every event of a kept user, which
-    is what longitudinal analyses need.
-    """
-    return df.where(_unit_hash(F.col(key), salt) < F.lit(float(fraction)))
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
@@ -186,31 +174,6 @@ def _temperature_weights_from_counts(
     return {s: r / total for s, r in raw.items()}
 
 
-def temperature_mix(
-    df: DataFrame,
-    strata_col: str,
-    alpha: float,
-    key: str,
-    salt: str = "tmix",
-) -> tuple[DataFrame, dict[str, float]]:
-    """Downsample to the n^alpha temperature mixture (never upsamples —
-    same largest-achievable-output rule as mix_to_proportions). alpha=1
-    is the identity over the non-null strata (every keep fraction 1.0);
-    alpha=0 levels every domain down to the rarest one's size. Rows
-    with a NULL ``strata_col`` are dropped (they have no domain to
-    weight — filter or impute upstream if they must survive).
-
-    ONE corpus pass for the strata counts feeds both the temperature
-    weights and the keep-fraction solve; the data-scale work is the
-    single hash-filter pass of stratified_sample."""
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError(f"alpha must be in [0, 1], got {alpha}")
-    counts = _strata_counts(df, strata_col)
-    weights = _temperature_weights_from_counts(counts, strata_col, alpha)
-    fractions = _mix_fractions(weights, counts)
-    return stratified_sample(df, strata_col, fractions, key, salt), fractions
-
-
 def priority_sample(
     df: DataFrame,
     key: str,
@@ -310,9 +273,8 @@ def quota_sample_scalable(
     n_buckets: int = 64,
     salt: str = "quota",
 ) -> DataFrame:
-    """:func:`quota_sample` with the hot-stratum sort DECOMPOSED — the
-    index build's scalable-rank move (build_index_scalable), applied to
-    per-group top-k.
+    """:func:`quota_sample` with the hot-stratum sort DECOMPOSED into
+    bucket-local top-ks and a small re-rank of their union.
 
     The plain form windows over the stratum, so one task sorts each
     stratum end to end; a stratum holding half the corpus is then one
@@ -379,9 +341,9 @@ def priority_sample_scalable(
     k=25, wrong at k=10M) and without any single task sorting the
     corpus.
 
-    The rank decomposes the build_index_scalable way, bucketed by the
-    priority's VALUE RANGE (priorities are round-9 -ln(u)/w with
-    w >= 1, so they live in [0, 22.181): u >= 2^-32 bounds -ln(u)):
+    The rank decomposes over buckets of the priority's VALUE RANGE
+    (priorities are round-9 -ln(u)/w with w >= 1, so they live in
+    [0, 22.181): u >= 2^-32 bounds -ln(u)):
 
     - bucket = floor(p / 22.181 * n_buckets): rank order IS bucket
       order, so global rank = (count in lower buckets) + (rank within

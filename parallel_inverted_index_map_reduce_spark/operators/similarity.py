@@ -130,11 +130,6 @@ def _sql_norm(a: str) -> str:
     return f"SQRT({_sql_dot(a, a)})"
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Whole-stage-codegen cosine over two array<float> columns."""
-    return _dot_expr(a, b) / (_norm_expr(a) * _norm_expr(b))
-
-
 def _topk_by_cosine(cos: DataFrame, k: int) -> DataFrame:
     """Shared tail of every fast top-k: rank per query by (cosine desc,
     vec_b asc) — the single place the tie-break lives."""
@@ -822,97 +817,6 @@ def bucket_expr(n_planes: int) -> Column:
     return F.concat(*bits)
 
 
-def probe_buckets_expr(n_planes: int, n_probes: int) -> Column:
-    """Array of ``n_probes`` sign-LSH bucket strings for ``embedding``:
-    the vector's own bucket first, then buckets with ONE bit flipped in
-    ascending |projection| order — the multi-probe pattern (Lv et al.,
-    "Multi-Probe LSH", VLDB 2007: a vector near a hyperplane is nearly
-    as likely to match across it, so flip the least-confident planes
-    first). Still a narrow per-row expression: no explode-by-component,
-    no shuffle; the query side simply fans out to ``n_probes`` bucket
-    keys instead of one, trading ~n_probes x join probes for the recall
-    a second hash table would cost a full extra index at 100 TB.
-    """
-    assert 1 <= n_probes <= n_planes + 1
-
-    def _weighted(p: int):
-        return lambda xf, i: F.round(
-            xf.cast("double") * _plane_weight(p, i), 7
-        ).cast(_FOLD_DEC)
-
-    planes = []
-    for p in range(n_planes):
-        proj = _decimal_fold(
-            F.zip_with(
-                F.col("embedding"),
-                F.sequence(F.lit(0), F.size("embedding") - 1),
-                _weighted(p),
-            )
-        )
-        planes.append(
-            F.struct(
-                F.abs(proj.cast("double")).alias("a"),
-                F.lit(p).alias("p"),
-                F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")).alias("b"),
-            )
-        )
-    arr = F.array(*planes)
-    bits = F.transform(arr, lambda s: s["b"])
-    base = F.array_join(bits, "")
-    # planes ordered by confidence (|proj| asc, plane id tie-break)
-    by_conf = F.array_sort(
-        F.transform(arr, lambda s: F.struct(s["a"].alias("a"), s["p"].alias("p")))
-    )
-    probes = [base]
-    for j in range(n_probes - 1):
-        flip_p = F.element_at(by_conf, j + 1)["p"]
-        flipped = F.transform(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            lambda i: F.when(
-                i == flip_p,
-                F.when(F.element_at(bits, i + 1) == "1", F.lit("0")).otherwise(
-                    F.lit("1")
-                ),
-            ).otherwise(F.element_at(bits, i + 1)),
-        )
-        probes.append(F.array_join(flipped, ""))
-    return F.array(*probes)
-
-
-def multiprobe_neighbors(
-    emb: DataFrame, n_planes: int = 8, k: int = 3, n_probes: int = 2
-) -> DataFrame:
-    """Bucket-local top-k with multi-probe queries: the corpus stays
-    single-bucket (one row per vector, as stored), queries fan out to
-    their ``n_probes`` most promising buckets. Candidates are the union
-    over probes — a superset of :func:`lsh_bucketed_neighbors`'s, so
-    recall vs brute force is monotonically non-decreasing in n_probes
-    (asserted in tests/test_similarity.py) while the join stays
-    bucket-local. Each (query, candidate) pair joins at most once:
-    probe buckets are distinct and a candidate lives in exactly one.
-    """
-    q = emb.where(F.size("embedding") > 0).select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("qe"),
-        F.explode(probe_buckets_expr(n_planes, n_probes)).alias("bucket"),
-    )
-    c = emb.where(F.size("embedding") > 0).select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("ce"),
-        bucket_expr(n_planes).alias("bucket"),
-    )
-    cos = (
-        q.join(c, "bucket")
-        .where(F.col("vec_a") != F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(cosine_expr(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-        )
-    )
-    return _topk_by_cosine(cos, k)
-
-
 def norm_sq_expr(a: Column) -> Column:
     """Decimal ||a||^2 as an array fold (same rounding as the oracle)."""
     return decimal_dot_expr(a, a)
@@ -1134,41 +1038,6 @@ def bucketed_overflow(
         .groupBy("bucket")
         .agg(F.count("*").alias("n_members"))
         .where(F.col("n_members") > max_bucket)
-    )
-
-
-def lsh_bucketed_neighbors(
-    emb: DataFrame, n_planes: int = 8, k: int = 3
-) -> DataFrame:
-    """Random-hyperplane LSH bucketed top-k: candidate pairs are
-    bucket-local (see :func:`hyperplane_buckets`).
-
-    At 100 TB this replaces the full cross join: buckets partition the
-    corpus, the pair join is per-bucket, and recall is tuned by
-    (n_planes, multi-probe). Returns bucket-local top-k per vector.
-    """
-    withb = emb.join(hyperplane_buckets(emb, n_planes), "vec_id")
-    a = withb.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("qe"), "bucket"
-    )
-    b = withb.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("ce"), "bucket"
-    )
-    cos = (
-        a.join(b, "bucket")
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "bucket",
-            "vec_a",
-            "vec_b",
-            F.round(cosine_expr(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("vec_a").orderBy(F.desc("cosine"), F.asc("vec_b"))
-    return (
-        cos.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("vec_a", "vec_b", "cosine", "rank", "bucket")
     )
 
 

@@ -267,15 +267,6 @@ def hll_register_table(df: DataFrame, key_col) -> DataFrame:
     )
 
 
-def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Element-wise max of two register tables — the HLL union."""
-    return (
-        a.unionByName(b)
-        .groupBy("register")
-        .agg(F.max("max_rho").alias("max_rho"))
-    )
-
-
 def hll_estimate(regs: DataFrame) -> DataFrame:
     """One-row (estimate: double) from a register table.
 

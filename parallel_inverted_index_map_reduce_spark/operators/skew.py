@@ -1,19 +1,13 @@
-"""Skew mitigation: key salting for hot-key aggregations and joins.
+"""Skew mitigation: key salting for hot-key aggregations.
 
 AQE's skew-join handling covers sort-merge joins at runtime — proven
 live in tests/test_aqe_skew.py (a synthetically hot orderkey makes the
 final adaptive plan split the oversized partition, ``skew=true`` on the
 join). Salting is the plan-level fallback for what AQE cannot rewrite:
-hot-key AGGREGATIONS, pre-partitioned bucketed joins, and any consumer
-that pins the join's output partitioning. The pattern:
-
-    aggregate:  two-phase — group on (key, salt) first (spreads the hot
-                key over N reducers), then merge partials on key alone.
-    join:       explode the small side N ways, salt the big side
-                uniformly, join on (key, salt).
-
-Both produce results identical to the unsalted plan (asserted in
-tests/test_skew.py); only the shuffle distribution changes.
+hot-key AGGREGATIONS. The pattern is two-phase — group on (key, salt)
+first (spreads the hot key over N reducers), then merge partials on key
+alone. The result is identical to the unsalted plan (asserted in
+tests/test_bucketing_skew.py); only the shuffle distribution changes.
 """
 
 from __future__ import annotations
@@ -44,18 +38,3 @@ def salted_sum(
         .agg(F.sum(value).alias("_partial"))
     )
     return partial.groupBy(key).agg(F.sum("_partial").alias(alias))
-
-
-def salted_join_small(
-    big: DataFrame, small: DataFrame, key: str, n_salts: int = 16
-) -> DataFrame:
-    """Skew-proof equi-join: replicate the small side across all salts,
-    salt the big side once, join on (key, salt)."""
-    salts = small.sparkSession.range(n_salts).select(
-        F.col("id").cast("int").alias("_salt")
-    )
-    small_rep = small.crossJoin(F.broadcast(salts))
-    big_salted = big.withColumn(
-        "_salt", F.pmod(F.hash(*big.columns), F.lit(n_salts))
-    )
-    return big_salted.join(small_rep, [key, "_salt"]).drop("_salt")

@@ -198,29 +198,3 @@ def run_and_land(
     )
     write_partitioned(landed, out_dir, ["shard"])
     return packed
-
-
-def land_training_shards(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    n_shards: int = 16,
-    salt: str = "export",
-    **kwargs,
-) -> DataFrame:
-    """Prepare and land as DETERMINISTIC, globally-shuffled training
-    shards (operators/export.py): shard membership and within-shard
-    order are pure functions of each chunk's (doc_id, chunk_id) key, so
-    re-running the pipeline replays byte-identical shards — unlike
-    :func:`run_and_land`'s bin-keyed layout, whose bin ids follow the
-    packer's partition layout. The composite key is carried as a
-    string join of the two id columns (no bit-packing, so any id width
-    is safe); returns the prepared frame for inspection."""
-    packed = prepare_training_data(docs, **kwargs)
-    keyed = packed.withColumn(
-        "chunk_key", F.concat_ws("#", F.col("doc_id"), F.col("chunk_id"))
-    )
-    from .operators.export import write_training_shards
-
-    write_training_shards(keyed, out_dir, key="chunk_key", n_shards=n_shards, salt=salt)
-    return packed

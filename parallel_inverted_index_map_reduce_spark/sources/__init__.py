@@ -1,2 +1,2 @@
 from .tables import TABLE_NAMES, load_table, load_tables, register_views
-from .corpus import read_manifest_corpus, manifest_documents
+from .corpus import read_manifest_corpus

@@ -114,25 +114,3 @@ def _join_manifest(files: DataFrame, manifest: DataFrame) -> DataFrame:
     )
     manifest_n = manifest.withColumn("norm_path", F.col("path"))
     return norm.join(F.broadcast(manifest_n), "norm_path", "inner")
-
-
-def manifest_documents(spark: SparkSession, manifest_path: str, base_dir: str | None = None) -> DataFrame:
-    """Whole-file variant: one row per document ``(doc_id, text)``.
-
-    Reads each file as ONE row (``wholetext``) instead of re-assembling
-    lines with ``collect_list`` after a shuffle: collect_list carries no
-    line-order key, so multi-line files would concatenate in
-    partition-arrival order — nondeterministic input for every
-    order-sensitive consumer (shingles, fingerprints, simhash). The
-    wholetext scan preserves byte order by construction and removes the
-    groupBy shuffle entirely; newlines normalize to single spaces so the
-    result matches the line-join form on single-line corpora.
-    """
-    paths = _manifest_paths(manifest_path, base_dir)
-    files = spark.read.text(paths, wholetext=True).select(
-        F.input_file_name().alias("file_uri"), F.col("value").alias("raw")
-    )
-    return _join_manifest(files, _manifest_table(spark, paths)).select(
-        "doc_id",
-        F.trim(F.regexp_replace("raw", r"(\r?\n)+", " ")).alias("text"),
-    )

@@ -1,17 +1,16 @@
 """Structured Streaming over the events table (SURVEY.md §7 Phase 5).
 
 The reference is strictly batch (barrier-separated phases,
-/root/reference/src/main.cpp:143,155,207); this module re-expresses the
-engine's windowed aggregations as streams: file source -> event-time
-windows (+ watermark for late data) -> sink. The batch twins of these
-plans live in plans/queries_streaming.py and go through the DuckDB
-oracle; the streaming variants are asserted equal to their batch twins
-in tests (same data, complete output mode).
+/root/reference/src/main.cpp:143,155,207); this module holds the events
+file-stream source, the drain into an in-memory table, and one windowed
+aggregation as a stream: file source -> 1h tumbling event-time windows
+(+ watermark for late data) -> sink. Its batch twin, the 'tumbling'
+branch of time_window_stats, lives in plans/queries_streaming.py and
+goes through the DuckDB oracle; :func:`tumbling_counts_stream` is
+asserted equal to it in tests (same data, complete output mode).
 
 At scale the source would be Kafka/object-store file streams; the state
-store bounds memory via the watermark, and session windows use Spark's
-native session_window (state merged per key, no custom stateful op
-needed).
+store bounds memory via the watermark.
 """
 
 from __future__ import annotations
@@ -65,9 +64,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         # Watermarks demand TIMESTAMP (LTZ): EVENT_TIME_IS_NOT_ON_
         # TIMESTAMP_TYPE for NTZ event-time columns. The session runs in
-        # UTC, so the NTZ -> LTZ cast keeps the wall-clock instant; the
-        # window operators cast their outputs back to NTZ to stay
-        # type-identical with the batch twins.
+        # UTC, so the NTZ -> LTZ cast keeps the wall-clock instant;
+        # tumbling_counts_stream casts its output back to NTZ to stay
+        # type-identical with the batch twin.
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
 
@@ -87,46 +86,6 @@ def tumbling_counts_stream(events: DataFrame, watermark: str = "1 hour") -> Data
             "n_events",
             "sum_value",
         )
-    )
-
-
-def sliding_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """2h windows sliding by 1h (every event lands in two windows) —
-    streaming twin of time_window_stats' 'sliding' branch."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("win"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").cast("timestamp_ntz").alias("win_start"),
-            "n_events",
-        )
-    )
-
-
-def session_counts_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows (gap-based) — native session_window."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("win"), F.col("user_id"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Stateful streaming dedup on event_id within the watermark."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
     )
 
 

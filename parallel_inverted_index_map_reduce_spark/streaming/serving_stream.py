@@ -38,9 +38,11 @@ extend_search_index.
 Every positions delta is letter-partitioned parquet, so the
 query-side pruning (PartitionFilters + pushed word IN) holds per delta
 scan, matching the stored-table path; queries run through the SAME
-frame-parameterized bodies (serving.bm25_from_frames /
-phrase_from_frames / mlt_from_frames), so streamed answers are the
-stored path's answers by construction. :func:`compact_serving_store` +
+frame-parameterized bodies as the stored path
+(:func:`bm25_search_version` calls serving.bm25_from_frames;
+phrase_from_frames / mlt_from_frames take the frames of
+:func:`read_serving_version`), so streamed answers are the stored
+path's answers by construction. :func:`compact_serving_store` +
 ``deltas.prune_versions`` are the offline maintenance pair that bounds
 the live-delta count.
 """
@@ -59,8 +61,6 @@ from ..operators.serving import (
     _appendable_frames,
     _positions_frame,
     bm25_from_frames,
-    mlt_from_frames,
-    phrase_from_frames,
 )
 from . import deltas as dv
 from . import sinks as eo
@@ -282,32 +282,5 @@ def bm25_search_version(
         query,
         k1=k1,
         b=b,
-        k=k,
-    )
-
-
-def phrase_search_version(
-    spark: SparkSession, store_dir: str, phrase: str
-) -> DataFrame:
-    """Exact-phrase match served from the latest committed snapshot."""
-    return phrase_from_frames(
-        _committed_version(spark, store_dir)["positions"], phrase
-    )
-
-
-def mlt_search_version(
-    spark: SparkSession, store_dir: str, doc_id: int, k: int = 10
-) -> DataFrame:
-    """More-like-this served from the latest committed streamed
-    snapshot — the same frame-parameterized body as the stored-table
-    path (serving.mlt_from_frames); norms recompute from the docterms
-    composition at query time (idf moves every batch, so a norms
-    artifact would be stale the moment the next batch lands)."""
-    v = _committed_version(spark, store_dir)
-    return mlt_from_frames(
-        v["docterms"],
-        v["positions"],
-        int(v["stats"].first()["n_docs"]),
-        doc_id,
         k=k,
     )

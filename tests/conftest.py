@@ -67,7 +67,6 @@ _SLOW_TESTS = {
     ("test_determinism.py", "test_result_invariant_to_shuffle_partitions[dedup_clusters]"),
     ("test_determinism.py", "test_result_invariant_to_shuffle_partitions[ranked_retrieval]"),
     ("test_dsum_properties.py", "test_dsum_exact_and_partition_independent"),
-    ("test_index_properties.py", "test_scalable_build_equals_plain_on_random_corpora"),
     ("test_index_storage.py", "test_extend_rejects_duplicate_doc_ids"),
     ("test_index_storage.py", "test_extend_search_index_equals_full_rebuild"),
     ("test_more_like_this.py", "test_mlt_stored_lifecycle_matches_scan"),
@@ -82,7 +81,6 @@ _SLOW_TESTS = {
     ("test_schema_drift.py", "test_streamed_serving_survives_int32_doc_ids"),
     ("test_serving_lifecycle.py", "test_successive_extends_equal_full_rebuild"),
     ("test_serving_stream.py", "test_streamed_serving_converges_and_serves"),
-    ("test_similarity.py", "test_multiprobe_recall_monotone_and_consistent"),
     ("test_similarity.py", "test_semantic_dedup_multicluster_sound_and_complete"),
     ("test_streaming_pipeline.py", "test_cross_batch_near_dup_suppressed_via_signature_store"),
     ("test_streaming_pipeline.py", "test_empty_batch_commits_and_later_batches_land"),
@@ -94,16 +92,28 @@ _SLOW_TESTS = {
 
 
 def check_slow_entries(items, entries=_SLOW_TESTS):
-    """Raise if an entry names a collected file but no test function in
-    it: a renamed or deleted slow test would otherwise leave a dead
+    """Raise if an entry names a file that does not exist next to this
+    conftest, or a collected file but no test function in it: a renamed
+    or deleted slow test (or test file) would otherwise leave a dead
     entry, and the renamed test would silently join the default tier.
-    Names are checked against the module, not the collected items, so
-    partial runs (``file::test``, ``-k``) still pass."""
+    Names are checked against the module, not the collected items, and
+    files that exist but were not collected are skipped, so partial runs
+    (``file::test``, ``-k``) still pass."""
+    here = os.path.dirname(os.path.abspath(__file__))
     modules = {
         item.fspath.basename: item.module
         for item in items
         if getattr(item, "module", None) is not None
     }
+    missing = sorted(
+        (fname, name)
+        for fname, name in entries
+        if not os.path.isfile(os.path.join(here, fname))
+    )
+    if missing:
+        raise pytest.UsageError(
+            f"_SLOW_TESTS entries name no file in {here}: {missing}"
+        )
     stale = sorted(
         (fname, name)
         for fname, name in entries

@@ -1,4 +1,4 @@
-"""CLI parity (reference ./tema1 interface) and format round-trips."""
+"""CLI parity (reference ./tema1 interface) and the CLI's other modes."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import sys
 
 import pytest
 
-from parallel_inverted_index_map_reduce_spark.sources import formats
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
 from .conftest import SF_ORACLE
@@ -110,49 +109,6 @@ def test_cli_search_mode_requires_an_op(tmp_path):
     )
     assert res.returncode == 2
     assert "nothing to do" in res.stderr
-
-
-@pytest.mark.parametrize("table", ["orders", "events", "nation"])
-def test_csv_roundtrip(spark, tmp_path, table):
-    df = load_table(spark, SF_ORACLE, table)
-    path = str(tmp_path / f"{table}_csv")
-    formats.write_csv(df, path)
-    back = formats.read_csv(spark, path, df.schema)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, back.collect()))
-
-
-@pytest.mark.parametrize("table", ["customer", "events"])
-def test_jsonl_roundtrip(spark, tmp_path, table):
-    df = load_table(spark, SF_ORACLE, table)
-    path = str(tmp_path / f"{table}_json")
-    formats.write_jsonl(df, path)
-    back = formats.read_jsonl(spark, path, df.schema)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, back.collect()))
-
-
-def test_embeddings_roundtrip_jsonl(spark, tmp_path):
-    """Array<float> columns survive the JSON edge."""
-    df = load_table(spark, SF_ORACLE, "embeddings")
-    path = str(tmp_path / "emb_json")
-    formats.write_jsonl(df, path)
-    back = formats.read_jsonl(spark, path, df.schema)
-    a = sorted((r.vec_id, tuple(r.embedding)) for r in df.collect())
-    b = sorted((r.vec_id, tuple(r.embedding)) for r in back.collect())
-    assert a == b
-
-
-@pytest.mark.parametrize("table", ["orders", "events", "embeddings"])
-def test_orc_roundtrip(spark, tmp_path, table):
-    """ORC round-trips every value type in the schema, including
-    TIMESTAMP_NTZ (events.ts) and array<float> (embeddings)."""
-    df = load_table(spark, SF_ORACLE, table)
-    path = str(tmp_path / f"{table}_orc")
-    formats.write_orc(df, path)
-    back = formats.read_orc(spark, path, df.schema)
-    assert back.schema == df.schema
-    a = sorted(map(lambda r: tuple(map(str, r)), df.collect()))
-    b = sorted(map(lambda r: tuple(map(str, r)), back.collect()))
-    assert a == b
 
 
 def test_cli_prep_mode(spark, tmp_path):

@@ -1,20 +1,15 @@
-"""Manifest corpus sources: URI decoding and whole-text reassembly.
+"""Manifest corpus sources: URI decoding and jobless construction.
 
 The manifest format is whitespace-tokenized (faithful to the
 reference's fscanf("%s"), src/main.cpp:59-80), so paths can never
 contain spaces — but they CAN contain '%' and literal '+', which
 input_file_name() percent-encodes ('%' -> '%25'). The manifest join
 must decode the URI before matching or those documents silently drop
-out of the inner join. manifest_documents must keep multi-line files
-in byte order (wholetext read), which collect_list reassembly could
-not guarantee."""
+out of the inner join."""
 
 from __future__ import annotations
 
-from parallel_inverted_index_map_reduce_spark.sources.corpus import (
-    manifest_documents,
-    read_manifest_corpus,
-)
+from parallel_inverted_index_map_reduce_spark.sources.corpus import read_manifest_corpus
 
 
 def _mk_corpus(tmp_path, files: dict[str, str]) -> str:
@@ -39,17 +34,6 @@ def test_awkward_paths_survive_the_manifest_join(spark, tmp_path):
     assert by_id[3] == "epsilon"
 
 
-def test_manifest_documents_preserves_line_order(spark, tmp_path):
-    files = {
-        "multi_line.txt": "first line\nsecond line\nthird line\n",
-        "single.txt": "only one",
-    }
-    m = _mk_corpus(tmp_path, files)
-    docs = {r.doc_id: r.text for r in manifest_documents(spark, m).collect()}
-    assert docs[1] == "first line second line third line"
-    assert docs[2] == "only one"
-
-
 def _forty_file_corpus(tmp_path) -> tuple[str, dict[int, str]]:
     """40 files — past Spark's 32-path parallel-listing default — with
     the two percent-encoding cases among them."""
@@ -65,9 +49,7 @@ def _forty_file_corpus(tmp_path) -> tuple[str, dict[int, str]]:
 def test_forty_file_manifest_keeps_every_id(spark, tmp_path):
     m, expected = _forty_file_corpus(tmp_path)
     lines = {r.doc_id: r.text for r in read_manifest_corpus(spark, m).collect()}
-    docs = {r.doc_id: r.text for r in manifest_documents(spark, m).collect()}
     assert lines == expected
-    assert docs == expected
 
 
 def test_constructing_the_corpus_runs_no_spark_job(spark, tmp_path):

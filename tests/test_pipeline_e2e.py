@@ -100,24 +100,6 @@ def test_pipeline_cluster_best_dedup(spark):
         pl.prepare_training_data(docs, dedup_policy="nope")
 
 
-def test_land_training_shards_deterministic(spark, tmp_path):
-    docs = load_table(spark, SF_ORACLE, "documents")
-    out_a = str(tmp_path / "a")
-    out_b = str(tmp_path / "b")
-    pl.land_training_shards(spark, docs, out_a, n_shards=4)
-    # second run from a differently-partitioned input: same shards
-    pl.land_training_shards(spark, docs.repartition(7), out_b, n_shards=4)
-    read = lambda p: sorted(
-        (r["shard"], r["_train_ord"], r["doc_id"], r["chunk_id"])
-        for r in spark.read.parquet(p)
-        .select("shard", "_train_ord", "doc_id", "chunk_id")
-        .collect()
-    )
-    a, b = read(out_a), read(out_b)
-    assert a == b
-    assert len(a) > 0
-
-
 def test_pipeline_span_dedup_stage(spark):
     """The optional span-dedup stage cuts a shared boilerplate span
     from every doc but its first occurrence, while doc-level dedup

@@ -1,5 +1,5 @@
-"""Deterministic sampling: partition-invariance, cohort integrity,
-split disjointness, stratum fractions."""
+"""Deterministic sampling: split disjointness, stratum fractions,
+weighted and per-stratum top-k samples, partition-invariance."""
 
 from __future__ import annotations
 
@@ -13,21 +13,6 @@ from .conftest import SF_ORACLE
 
 def _events(spark):
     return load_table(spark, SF_ORACLE, "events")
-
-
-def test_sample_invariant_under_repartition(spark):
-    ev = _events(spark)
-    a = sp.deterministic_sample(ev, "user_id", 0.3)
-    b = sp.deterministic_sample(ev.repartition(13), "user_id", 0.3)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_sample_keeps_cohorts_whole(spark):
-    ev = _events(spark)
-    s = sp.deterministic_sample(ev, "user_id", 0.3)
-    kept_users = {r.user_id for r in s.select("user_id").distinct().collect()}
-    all_events_of_kept = ev.where(F.col("user_id").isin(list(kept_users)))
-    assert s.count() == all_events_of_kept.count()
 
 
 def test_train_test_split_disjoint_exhaustive_no_leak(spark):
@@ -59,52 +44,6 @@ def test_stratified_fractions_and_determinism(spark):
     # deterministic: same call, same rows
     s2 = sp.stratified_sample(ev, "event_type", fr, key="event_id")
     assert sorted(map(tuple, s.collect())) == sorted(map(tuple, s2.collect()))
-
-
-def test_temperature_mix_endpoints_and_boost(spark):
-    """alpha=1 keeps the natural mixture untouched; alpha=0 levels all
-    domains toward the rarest; intermediate alpha strictly boosts the
-    rare domain's SHARE while never upsampling any domain. (A skewed
-    synthetic corpus — the testdata documents are uniform across
-    sources, where every alpha is the identity.)"""
-    rows = (
-        [(i, "web") for i in range(160)]
-        + [(1000 + i, "code") for i in range(40)]
-        + [(2000 + i, "books") for i in range(10)]
-    )
-    docs = spark.createDataFrame(rows, ["doc_id", "source"])
-    base = {
-        r.source: r.n
-        for r in docs.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(base.values())
-
-    # alpha=1: identity — every keep fraction is 1.0
-    mixed1, fr1 = sp.temperature_mix(docs, "source", 1.0, key="doc_id")
-    assert all(abs(f - 1.0) < 1e-12 for f in fr1.values()), fr1
-    assert mixed1.count() == total
-
-    # alpha=0: uniform target — the rarest domain binds at fraction 1.0,
-    # every other domain downsamples toward its size
-    mixed0, fr0 = sp.temperature_mix(docs, "source", 0.0, key="doc_id")
-    rarest = min(base, key=lambda s: (base[s], s))
-    assert abs(fr0[rarest] - 1.0) < 1e-12, fr0
-    c0 = {
-        r.source: r.n
-        for r in mixed0.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    for s in base:
-        assert c0.get(s, 0) <= base[s]  # never upsampled
-
-    # intermediate alpha: the rarest domain's expected share strictly
-    # exceeds its natural share
-    w = sp.temperature_weights(docs, "source", 0.5)
-    assert w[rarest] > base[rarest] / total
-
-    # deterministic across calls
-    m2, _ = sp.temperature_mix(docs, "source", 0.5, key="doc_id")
-    m3, _ = sp.temperature_mix(docs, "source", 0.5, key="doc_id")
-    assert sorted(map(tuple, m2.collect())) == sorted(map(tuple, m3.collect()))
 
 
 def test_priority_sample_matches_sequential_reference(spark):

@@ -20,6 +20,10 @@ from parallel_inverted_index_map_reduce_spark.operators.index import (
     index_from_pairs,
     phrase_search,
 )
+from parallel_inverted_index_map_reduce_spark.operators.serving import (
+    mlt_from_frames,
+    phrase_from_frames,
+)
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 from parallel_inverted_index_map_reduce_spark.streaming import serving_stream as svs
 
@@ -57,22 +61,30 @@ def test_streamed_serving_converges_and_serves(spark, tmp_path):
 
     # the postings derived from the streamed positions are the batch
     # build's index (the index_lines 'streamed' derivation)
-    positions = svs.read_serving_version(spark, store)["positions"]
+    snapshot = svs.read_serving_version(spark, store)
+    positions = snapshot["positions"]
     assert _rows(index_from_pairs(positions.select("word", "doc_id"))) == (
         _rows(build_index(docs))
     )
 
-    got_ph = svs.phrase_search_version(spark, store, "spark query")
+    got_ph = phrase_from_frames(positions, "spark query")
     want_ph = phrase_search(docs, "spark query")
     assert _rows(got_ph) == _rows(want_ph)
 
     # streamed MLT answers exactly what the corpus-scan operator answers
-    # on the full corpus (norms recomputed from the docterms snapshot)
+    # on the full corpus (norms recomputed from the docterms snapshot:
+    # idf moves every batch, so a stored norms artifact would be stale)
     from parallel_inverted_index_map_reduce_spark.operators.index import (
         more_like_this,
     )
 
-    got_mlt = svs.mlt_search_version(spark, store, 7, k=10)
+    got_mlt = mlt_from_frames(
+        snapshot["docterms"],
+        positions,
+        int(snapshot["stats"].first()["n_docs"]),
+        7,
+        k=10,
+    )
     want_mlt = more_like_this(docs, 7, k=10)
     assert _rows(got_mlt) == _rows(want_mlt) and _rows(got_mlt)
 

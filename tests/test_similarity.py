@@ -38,79 +38,6 @@ def test_fast_topk_matches_exact(spark):
         assert abs(fcos - cos) < 1e-5, f"{key}: cosine {fcos} vs {cos}"
 
 
-def test_lsh_neighbors_are_true_neighbors(spark):
-    """Bucketed LSH results must be a subset of real pairs with sane
-    cosines, and bucket-local top-1 should usually agree with global
-    top-1 when both vectors share a bucket."""
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    lsh = sim.lsh_bucketed_neighbors(emb, n_planes=8, k=3)
-    rows = lsh.collect()
-    assert len(rows) > 0
-    assert all(-1.0 <= r.cosine <= 1.0 for r in rows)
-    # buckets must be 8-bit sign strings
-    assert all(len(r.bucket) == 8 and set(r.bucket) <= {"0", "1"} for r in rows)
-
-
-def test_multiprobe_recall_monotone_and_consistent(spark):
-    """Multi-probe LSH: probing more buckets can only add candidates,
-    so recall@k vs brute-force truth is non-decreasing in n_probes;
-    n_probes=1 is plain single-bucket probing; probe lists start with
-    the vector's own bucket and differ by exactly one flipped bit."""
-    emb = load_table(spark, SF_ORACLE, "embeddings").where(F.col("vec_id") < 200)
-    n_queries = 200
-    truth = {
-        (r.vec_a, r.vec_b)
-        for r in sim.ann_topk_fast(emb, k=3, n_queries=n_queries).collect()
-    }
-
-    recalls = []
-    for n_probes in (1, 2, 4):
-        got = {
-            (r.vec_a, r.vec_b)
-            for r in sim.multiprobe_neighbors(
-                emb, n_planes=8, k=3, n_probes=n_probes
-            ).collect()
-        }
-        recalls.append(len(got & truth) / len(truth))
-    assert recalls == sorted(recalls), recalls
-
-    # deterministic coverage guarantee (not a data-dependent recall
-    # delta, which regenerated fixtures could legitimately flatten):
-    # probing ALL single-bit flips with k >= sample size must surface
-    # every truth pair whose buckets differ by at most one bit
-    buckets = {
-        r.vec_id: r.b
-        for r in emb.select("vec_id", sim.bucket_expr(8).alias("b")).collect()
-    }
-    close = {
-        (a, b)
-        for (a, b) in truth
-        if sum(x != y for x, y in zip(buckets[a], buckets[b])) <= 1
-    }
-    full = {
-        (r.vec_a, r.vec_b)
-        for r in sim.multiprobe_neighbors(
-            emb, n_planes=8, k=250, n_probes=9
-        ).collect()
-    }
-    assert close and close <= full, (len(close), len(close - full))
-
-    # structural check on the probe list itself
-    probes = (
-        emb.select(
-            sim.bucket_expr(8).alias("base"),
-            sim.probe_buckets_expr(8, 3).alias("probes"),
-        )
-        .limit(50)
-        .collect()
-    )
-    for r in probes:
-        assert r.probes[0] == r.base
-        assert len(set(r.probes)) == 3
-        for alt in r.probes[1:]:
-            assert sum(a != b for a, b in zip(alt, r.base)) == 1
-
-
 def test_embedding_pairs_symmetric_bound(spark):
     emb = load_table(spark, SF_ORACLE, "embeddings")
     cos = sim.pairwise_cosine(emb, max_query_id=3)
@@ -412,8 +339,14 @@ def test_vectorized_pair_cosine_edge_cases(spark):
     """Degenerate inputs must match the expression form exactly:
     ragged lengths (index-intersection semantics), empty arrays and
     zero vectors (a NULL cosine in both forms), tiny negative cosines
-    (round6 -> Java's positive 0.0, never -0.0), and half-boundary-
-    shaped components (the exact-fallback band). ANSI is disabled for
+    (round6 -> Java's positive 0.0, never -0.0), and half-boundary
+    products (the exact-fallback band of ``units9``). Row 5's product
+    with row 0 is an exact scale-7 half, and its product with row 7's
+    3.3f is 1058.23026425 by its shortest repr but a hair below it in
+    binary: the binary half-up rounds that component one 1e-7 unit
+    down, and only the band's decimal fallback rounds it up as the
+    expression does. The (5, 7) cosine sits ~1e-13 above a scale-6
+    half, so that one unit decides its last digit. ANSI is disabled for
     the comparison: under ANSI (the session default) the EXPRESSION
     path raises DIVIDE_BY_ZERO on a zero-norm pair. With ANSI off the
     expression's Divide returns NULL for a zero divisor, and the
@@ -427,7 +360,7 @@ def test_vectorized_pair_cosine_edge_cases(spark):
         (2, [0.0, 0.0, 0.0]),            # zero norm -> NULL cosine
         (3, []),                          # empty -> zero norm -> NULL
         (4, [0.5, 0.5]),                  # ragged vs dim-3 rows
-        (5, [5e-8, 2.5e-7, -5e-8]),      # half-boundary products vs row 0
+        (5, [0.01171875, 1.6069905757904053, 320.67584228515625]),  # band
         (6, [0.25, -0.75, 1.5]),         # exact dyadics
         (7, [1234.5678, -0.0001234, 3.3]),
     ]
@@ -454,6 +387,8 @@ def test_vectorized_pair_cosine_edge_cases(spark):
     assert fast == expr
     # the tiny-negative pair must have collapsed to positive 0.0
     assert expr[(0, 1)] == "0.0"
+    # the band-decided pair: without the fallback the fast form says 0.002709
+    assert expr[(5, 7)] == "0.00271"
     zero_norm = [p for p in expr if {2, 3} & set(p)]
     assert len(zero_norm) == 2 * (len(rows) - 2) + 1
     for pair in zero_norm:

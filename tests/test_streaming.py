@@ -38,55 +38,6 @@ def test_tumbling_stream_matches_batch(spark):
     assert srows == brows
 
 
-def test_sliding_stream_matches_batch(spark):
-    from pyspark.sql import functions as F
-
-    stream = sev.sliding_counts_stream(
-        sev.read_events_stream(spark, SF_ORACLE)
-    )
-    got = _drain(spark, stream, "t_sliding")
-    batch = (
-        all_specs()["time_window_stats"].fn(spark, SF_ORACLE)
-        .where(F.col("win_kind") == "sliding")
-        .select("win_start", "n_events")
-    )
-    srows = sorted(map(tuple, got.collect()))
-    brows = sorted(map(tuple, batch.collect()))
-    assert srows == brows
-
-
-def test_session_stream_matches_batch(spark):
-    stream = sev.session_counts_stream(
-        sev.read_events_stream(spark, SF_ORACLE)
-    )
-    got = _drain(spark, stream, "t_session")
-    # the registry entry is a labeled multi-part result since round 8
-    # (streaming-join parts); the session-window twin is its 'session'
-    # rows, in the stream's column shape
-    batch = (
-        all_specs()["session_window_stats"]
-        .fn(spark, SF_ORACLE)
-        .where("part = 'session'")
-        .selectExpr(
-            "user_id",
-            "t_start AS session_start",
-            "t_end AS session_end",
-            "n_events",
-        )
-    )
-    srows = sorted(map(tuple, got.select(*batch.columns).collect()))
-    brows = sorted(map(tuple, batch.collect()))
-    assert srows == brows
-
-
-def test_streaming_dedup_keeps_all_unique_ids(spark):
-    stream = sev.dedup_stream(sev.read_events_stream(spark, SF_ORACLE))
-    got = _drain(spark, stream, "t_dedup", mode="append")
-    n_stream = got.count()
-    n_batch = load_table(spark, SF_ORACLE, "events").select("event_id").distinct().count()
-    assert n_stream == n_batch
-
-
 def test_stateful_running_totals(spark):
     """Custom applyInPandasWithState operator: cumulative per-type
     totals must equal the batch aggregate after draining the stream."""
