@@ -35,15 +35,6 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens_df
 
 
-def postings_flat(docs: DataFrame, one_based: bool = False) -> DataFrame:
-    """Distinct (word, doc_id) pairs — reference O8's dedup-on-insert
-    (main.cpp:183-200) as a distinct aggregation."""
-    t = tokens_df(docs)
-    if one_based:
-        t = t.withColumn("doc_id", F.col("doc_id") + F.lit(1))
-    return t.distinct()
-
-
 def term_frequencies(docs: DataFrame) -> DataFrame:
     """(word, doc_id, tf) — occurrence counts before dedup; the tf
     extension SURVEY.md §7 Phase 2 names (reference never computes it)."""

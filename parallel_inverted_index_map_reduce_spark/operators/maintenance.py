@@ -1,21 +1,15 @@
-"""Dataset maintenance: small-file compaction and keyed upserts.
+"""Dataset maintenance: keyed upserts and corpus diffs.
 
-Long-running ingestion (streaming sinks, frequent small batch landings)
-accretes many small files per partition; at 100 TB that turns every scan
-into a metadata storm (one task per tiny file, listing dominates I/O).
-Compaction rewrites a partitioned dataset with a bounded file count —
-the janitorial half of a lake the write path can't always guarantee.
-
-Row-group-level stats (min/max pushdown) survive because the rewrite is
-plain parquet-to-parquet; partition directories are preserved.
+A refreshed snapshot lands as an SCD1 merge (updates win, new keys
+append) with an audit row of what it changed, and a diff between two
+corpus versions says which documents must re-enter the pipeline. Each
+result is a full snapshot or frame the caller writes out-of-place.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..sinks.partitioned import read_partitioned, write_partitioned
 
 
 def merge_upsert(current: DataFrame, updates: DataFrame, key: str) -> DataFrame:
@@ -27,7 +21,7 @@ def merge_upsert(current: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     (broadcast when updates are small — the common case of a day's
     changes against a full snapshot, which AQE picks automatically);
     the result is a full snapshot the caller writes out-of-place and
-    swaps, same discipline as :func:`compact_partitioned`.
+    swaps, so a failed rewrite never destroys the only copy.
 
     Deterministic requirement: ``updates`` must carry one row per key
     (enforce upstream with dedup ops); duplicate update keys would make
@@ -55,27 +49,6 @@ def upsert_stats(current: DataFrame, updates: DataFrame, key: str) -> DataFrame:
         ).alias("n_updated"),
         F.count(F.when(F.col("_in_cur").isNull(), 1)).alias("n_inserted"),
         F.count(F.when(F.col("_in_upd").isNull(), 1)).alias("n_unchanged"),
-    )
-
-
-def compact_partitioned(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """Rewrite ``src_path`` into ``dst_path`` with one writer task per
-    partition key (file count = ceil(rows / max_records_per_file) per
-    partition). Kept out-of-place: compaction must never destroy the
-    only copy mid-rewrite; callers swap directories after validating.
-    """
-    df = read_partitioned(spark, src_path)
-    write_partitioned(
-        df,
-        dst_path,
-        partition_cols,
-        max_records_per_file=max_records_per_file,
     )
 
 

@@ -1,14 +1,13 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 processed by Arrow-batched pandas functions (``mapInPandas``).
 
-``decode_image`` REALLY decodes netpbm (P6 PPM / P5 PGM), baseline
-JPEG (functions/jpeg.py), and 8-bit PNG — including PLTE-indexed
-palette color, Adam7 interlacing, and tRNS transparency
-(functions/png.py); ``decode_audio`` decodes PCM WAV
-(functions/audio.py) — all pure Python, no codec library. Formats
-needing codec machinery this codebase does not carry (progressive
-JPEG, GIF, compressed audio, video) stay behind a clearly-marked
-NotImplementedError stub.
+The decode paths REALLY decode netpbm (P6 PPM / P5 PGM, the parser
+below), baseline JPEG (functions/jpeg.py), 8-bit PNG — including
+PLTE-indexed palette color, Adam7 interlacing, and tRNS transparency
+(functions/png.py) — and PCM WAV (functions/audio.py), all pure Python,
+no codec library. Formats needing codec machinery this codebase does
+not carry (progressive JPEG, GIF, compressed audio, video) have no
+decoder.
 Everything Spark-side is real either way: binary column schema, Arrow
 batch transfer, per-batch vectorized feature extraction, and the
 partitioning story (binary payloads stay with their row; feature
@@ -82,56 +81,6 @@ def _make_netpbm_parser():
 
 
 _parse_netpbm = _make_netpbm_parser()
-
-
-def decode_image(payload: bytes, codec: str = "auto"):
-    """Decode an image payload.
-
-    Netpbm raw formats (P6/P5 magic), baseline JPEG (SOI magic;
-    pure-Python T.81 sequential decoder, functions/jpeg.py — grayscale
-    and YCbCr at any sampling factors, restart markers honored), and
-    8-bit PNG incl. PLTE palette, Adam7 interlacing, and tRNS
-    transparency (functions/png.py) decode for real — no codec library
-    needed. ``codec='fake'`` returns the deterministic stand-in.
-    Everything else (progressive JPEG, GIF, video) raises
-    NotImplementedError: those need codec machinery this codebase does
-    not carry, and a silent fake would be worse than an honest stub.
-    """
-    if codec == "fake":
-        return {"width": len(payload) % 640, "height": len(payload) % 480}
-    if payload[:2] in (b"P6", b"P5"):
-        return _parse_netpbm(payload)
-    if payload[:2] == b"\xff\xd8":
-        from ..functions.jpeg import decode_baseline_jpeg
-
-        out = decode_baseline_jpeg(payload)
-        out.pop("pixels")  # stats surface matches the netpbm parser's
-        return out
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from ..functions.png import decode_png
-
-        out = decode_png(payload)
-        out.pop("pixels")
-        return out
-    raise NotImplementedError(
-        "netpbm (P6/P5), baseline JPEG, and PNG decode without codec "
-        "libraries; use codec='fake' for a deterministic stand-in"
-    )
-
-
-def decode_audio(payload: bytes):
-    """Decode an audio payload: PCM WAV decodes for real
-    (functions/audio.py — RIFF walk, 8/16-bit planes, exact sample
-    statistics); compressed formats raise NotImplementedError."""
-    if payload[:4] == b"RIFF":
-        from ..functions.audio import decode_wav
-
-        out = decode_wav(payload)
-        out.pop("samples")  # stats surface, like the image decoders
-        return out
-    raise NotImplementedError(
-        "only PCM WAV decodes without codec libraries"
-    )
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -227,7 +176,7 @@ def with_ppm_payload(docs: DataFrame) -> DataFrame:
 
 def decoded_image_features(docs: DataFrame) -> DataFrame:
     """The decode path run END-TO-END: build PPM payloads, ship them
-    through Arrow batches, and call :func:`decode_image` for real on
+    through Arrow batches, and run the netpbm parser for real on
     every row — header parse, plane validation, exact pixel statistics.
     Same closure-serialization note as :func:`binary_features`."""
 

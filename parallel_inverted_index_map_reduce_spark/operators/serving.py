@@ -145,10 +145,12 @@ _SWAPPED_SUFFIXES = tuple(s for s, t in _TEXT_LAYOUT.items() if t.swapped)
 # The ANN store's layout: each IVF inverted list is its own list_id
 # directory, so a query's probes prune at the directory level; a
 # quantize=True store holds int8 rows instead of the float embedding.
-# Centroids are n_list rows and stay full-precision either way.
+# The embedding keeps its input's type (array<float> or array<double>),
+# which the sidecar records and the attach declares. Centroids are
+# n_list rows and stay full-precision either way.
 _ANN_LAYOUT = {
     "_vectors": _TableSpec(
-        "vec_id bigint, embedding array<float>, list_id int",
+        "vec_id bigint, embedding {embedding}, list_id int",
         None,
         "list_id",
         qcols="vec_id bigint, q array<tinyint>, q_scale double, list_id int",
@@ -175,7 +177,7 @@ _KINDS = {
         "_doclen", "store_search_index", "extend_search_index",
     ),
     "ann": _StoreKind(
-        _ANN_LAYOUT, 2, "vec_id", "embedding", "n_vecs",
+        _ANN_LAYOUT, 3, "vec_id", "embedding", "n_vecs",
         "_vectors", "store_ann_index", "extend_ann_index",
     ),
 }
@@ -212,18 +214,24 @@ def _append_text_table(
 
 def _register_store_table(
     spark: SparkSession, base: str, suffix: str, n_buckets: int,
-    quantized: bool = False,
+    meta: dict | None = None,
 ) -> None:
     """CREATE TABLE ... LOCATION DDL over existing external files,
     carrying the layout's bucket/sort/partition spec so every pruning
     property (PartitionFilters, SelectedBucketsCount, sorted files)
-    survives. A missing directory is a loud FileNotFoundError."""
+    survives. The sidecar ``meta`` picks a quantized store's columns
+    and fills the column types the layout leaves to it. A missing
+    directory is a loud FileNotFoundError."""
     spec = _LAYOUTS[suffix]
     table = f"{base}{suffix}"
     loc = table_location(spark, table)
     if not os.path.isdir(loc):
         raise FileNotFoundError(f"no stored data for {table} at {loc}")
-    cols = spec.qcols if quantized and spec.qcols else spec.cols
+    meta = meta or {}
+    if meta.get("quantized") and spec.qcols:
+        cols = spec.qcols
+    else:
+        cols = spec.cols.format(**meta)
     part = f"PARTITIONED BY ({spec.part})" if spec.part else ""
     buckets = (
         f"CLUSTERED BY ({spec.key}) SORTED BY ({spec.key}) "
@@ -545,9 +553,9 @@ def _attach_store(spark: SparkSession, base: str, kind: str) -> None:
             f"store '{base}' is layout version {version}, older than "
             f"v{k.version} — rebuild with {k.build_fn}"
         )
-    n, quantized = int(meta.get("n_buckets", 0)), bool(meta.get("quantized"))
+    n = int(meta.get("n_buckets", 0))
     for suffix in k.layout:
-        _register_store_table(spark, base, suffix, n, quantized)
+        _register_store_table(spark, base, suffix, n, meta)
 
 
 def _verify_store(
@@ -1112,6 +1120,7 @@ def store_ann_index(
             "version": _KINDS["ann"].version,
             "n_list": len(centroids),
             "quantized": bool(quantize),
+            "embedding": emb.schema["embedding"].dataType.simpleString(),
             "fingerprint": embeddings_fingerprint(emb),
         },
     )
@@ -1148,7 +1157,7 @@ def ensure_ann_index(
     """:func:`ensure_search_index` for the ANN store: after this
     returns, ``<base>_vectors``/``<base>_centroids`` are registered and
     provably current for ``emb``. Besides a missing store, regenerated
-    embeddings or a pre-v2 sidecar, a storage format not matching
+    embeddings or a pre-v3 sidecar, a storage format not matching
     ``quantize`` also triggers a full rebuild."""
     _ensure_store(
         emb,

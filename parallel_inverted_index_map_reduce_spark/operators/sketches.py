@@ -80,23 +80,6 @@ def cms_build(
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Slot-wise sum — the mergeability that lets per-shard sketches
-    roll up into a corpus sketch without re-reading any shard. Both
-    sides must share a geometry; the carried width column makes a
-    mismatch a loud error (grouping by width would silently keep the
-    sketches apart, so it is checked instead)."""
-    wa = {r["width"] for r in a.select("width").distinct().collect()}
-    wb = {r["width"] for r in b.select("width").distinct().collect()}
-    if wa != wb:
-        raise ValueError(f"cannot merge sketches of widths {wa} and {wb}")
-    return (
-        a.unionByName(b)
-        .groupBy("seed", "slot", "width")
-        .agg(F.sum("c").alias("c"))
-    )
-
-
 def cms_estimate(sketch: DataFrame, words: list[str]) -> DataFrame:
     """(word, est): min over the depth rows of each word's slot counter
     — an upper bound on the word's true occurrence count. The probe set
@@ -246,9 +229,9 @@ _HLL_W_BITS = 48 - HLL_B  # 42
 def hll_register_table(df: DataFrame, key_col) -> DataFrame:
     """(register, max_rho): the 64-row HLL summary of ``key_col``'s
     distinct count. Build = ONE groupBy producing m rows whatever the
-    input size; two summaries MERGE by element-wise max (same
-    commutative-monoid shape as cms_merge), so per-shard summaries
-    roll up without rescanning. Duplicate keys are free: max over
+    input size; two summaries MERGE by element-wise max (the same
+    commutative-monoid shape as the count-min slot-wise sum), so
+    per-shard summaries roll up without rescanning. Duplicate keys are free: max over
     identical hashes is idempotent, no distinct shuffle needed."""
     from ..functions.hashing import stable_hash48
 

@@ -102,8 +102,7 @@ GROUP BY event_type
 """,
     tags=("streaming", "window"),
     doc="Time-window aggregates in one labeled result: hourly tumbling "
-    "per event_type (streaming twin: streaming/events.py "
-    "tumbling_counts_stream) and a 2h window sliding by 1h (every "
+    "per event_type and a 2h window sliding by 1h (every "
     "event lands in two windows). 'stateful_totals' rows driver-verify "
     "the CUSTOM STATEFUL operator (streaming/stateful.py "
     "running_totals_exact — applyInPandasWithState, the extension "

@@ -22,36 +22,24 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+# Bounds file size from above; far above a periodic landing's rows per key,
+# so each key still writes one file.
+MAX_RECORDS_PER_FILE = 1_000_000
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = 1_000_000,
-    coalesce_per_partition: bool = True,
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Write a partitioned parquet dataset.
 
-    ``coalesce_per_partition`` routes each output partition's rows to
-    one task first (a hash repartition on the keys), trading one shuffle
-    for a bounded file count — the right default for periodic batch
-    landing; turn it off for huge single partitions where parallel
-    writers matter more than file count.
+    Each output partition's rows go to one task first (a hash
+    repartition on the keys), trading one shuffle for a bounded file
+    count — the right choice for periodic batch landing.
     """
-    writer = df
-    if coalesce_per_partition:
-        writer = df.repartition(*partition_cols)
     (
-        writer.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        df.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy(*partition_cols)
         .parquet(path)
     )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a partitioned dataset; partition columns come back as real
-    columns and predicates on them prune directories at planning time."""
-    return spark.read.parquet(path)

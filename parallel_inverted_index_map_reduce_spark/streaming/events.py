@@ -2,12 +2,9 @@
 
 The reference is strictly batch (barrier-separated phases,
 /root/reference/src/main.cpp:143,155,207); this module holds the events
-file-stream source, the drain into an in-memory table, and one windowed
-aggregation as a stream: file source -> 1h tumbling event-time windows
-(+ watermark for late data) -> sink. Its batch twin, the 'tumbling'
-branch of time_window_stats, lives in plans/queries_streaming.py and
-goes through the DuckDB oracle; :func:`tumbling_counts_stream` is
-asserted equal to it in tests (same data, complete output mode).
+file-stream source and the drain into an in-memory table that the
+tests of the streamed operators (the exactly-once sink, the stream-stream
+joins) run on.
 
 At scale the source would be Kafka/object-store file streams; the state
 store bounds memory via the watermark.
@@ -64,29 +61,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         # Watermarks demand TIMESTAMP (LTZ): EVENT_TIME_IS_NOT_ON_
         # TIMESTAMP_TYPE for NTZ event-time columns. The session runs in
-        # UTC, so the NTZ -> LTZ cast keeps the wall-clock instant;
-        # tumbling_counts_stream casts its output back to NTZ to stay
-        # type-identical with the batch twin.
+        # UTC, so the NTZ -> LTZ cast keeps the wall-clock instant; a
+        # consumer compared with a batch twin casts back to NTZ.
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
-
-
-def tumbling_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Hourly tumbling counts/sums with a watermark for late data."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value"), 6).cast("decimal(38,8)")).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").cast("timestamp_ntz").alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"):

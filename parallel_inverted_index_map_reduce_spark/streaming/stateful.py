@@ -14,41 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = "event_type string, n_events long, sum_value double"
-STATE_SCHEMA = "n long, s double"
-
-
-def running_totals_per_type(events: DataFrame) -> DataFrame:
-    """Cumulative (count, sum(value)) per event_type across batches."""
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"event_type": [key[0]], "n_events": [n], "sum_value": [s]}
-        )
-
-    return events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 EXACT_OUTPUT_SCHEMA = "event_type string, n_events long, sum_value string"
 EXACT_STATE_SCHEMA = "n long, s string"
 
 
 def running_totals_exact(events: DataFrame) -> DataFrame:
     """Cumulative (count, EXACT decimal sum) per event_type across
-    batches — the hash-comparable twin of :func:`running_totals_per_type`.
+    batches, hash-comparable with the DuckDB oracle's decimal sum.
 
     The caller pre-rounds the measure to 6 decimals IN SPARK
     (``F.round(value, 6).alias("value6")``), so the one genuinely

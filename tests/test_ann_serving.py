@@ -99,6 +99,24 @@ def test_stored_ann_attach_after_catalog_loss(spark, emb):
     srv.attach_ann_index(spark, BASE)  # no-op second attach
 
 
+def test_float64_ann_store_attaches_after_catalog_loss(spark, emb):
+    """A store keeps its input's embedding type, so one built from
+    float64 vectors must read back through the attach's declared
+    columns (an array<float> declaration fails every scan)."""
+    base = "annidx_f64"
+    e64 = emb.where(F.col("vec_id") < 60).withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    srv.store_ann_index(e64, base, n_list=2, n_iters=1)
+    queries = e64.where(F.col("vec_id") < NQ)
+    want = _rows(srv.ann_search_stored(spark, base, queries, k=K, nprobe=2))
+    for sfx in ("_vectors", "_centroids"):
+        spark.sql(f"DROP TABLE {base}{sfx}")
+    srv.attach_ann_index(spark, base)
+    got = _rows(srv.ann_search_stored(spark, base, queries, k=K, nprobe=2))
+    assert got == want and got
+
+
 def test_stored_decimal_scores_match_in_session_ivf(spark, emb):
     """decimal_scores through the stored path = ivf_topk decimal_scores
     with the same centroids — the flag the cross-engine-checked

@@ -230,28 +230,6 @@ def test_wav_malformed_fmt_raises_value_error():
         A.decode_wav(_wav_with_fmt(b"\x01\x00\x01\x00"))
 
 
-def test_multimodal_dispatch_png_and_wav():
-    from parallel_inverted_index_map_reduce_spark.operators.multimodal import (
-        decode_audio,
-        decode_image,
-    )
-
-    img = RNG.randint(0, 256, (4, 5, 3), dtype=np.uint8)
-    out = decode_image(P.encode_png(img))
-    assert out["pixel_sum"] == int(img.astype(np.int64).sum())
-    assert "pixels" not in out  # stats surface only
-
-    s = (np.arange(64) % 256).astype(np.uint8)
-    got = decode_audio(A.encode_wav(s, 16000, bits=8))
-    assert got["sample_sum"] == int(s.astype(np.int64).sum())
-    assert "samples" not in got
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"GIF87a......")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"OggS........")
-
-
 def test_g711_tables_involution():
     # decode -> encode is the identity on codes, modulo the standard
     # +/-0 degeneracy: mu-law negative zero (127) re-encodes as 255

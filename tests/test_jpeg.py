@@ -193,33 +193,12 @@ def test_invalid_scan_headers_and_garbage_rejected():
         J.decode_baseline_jpeg(bytes(enc))
 
 
-def test_decode_image_dispatches_on_jpeg_magic():
-    from parallel_inverted_index_map_reduce_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    img = np.full((16, 16), 42, dtype=np.uint8)
-    out = decode_image(J.encode_baseline_jpeg(img, quant_luma=ONES))
-    assert out == {
-        "width": 16,
-        "height": 16,
-        "channels": 1,
-        "maxval": 255,
-        "pixel_sum": 42 * 256,
-        "n_pixel_bytes": 256,
-    }
-    with pytest.raises(NotImplementedError):
-        decode_image(b"GIF87a......")
-
-
 def test_spark_decodes_jpeg_payload_column(spark):
     """The real multimodal path end-to-end: JPEG bytes in a binary
     column, Arrow-batched decode, exact per-image statistics out."""
     import pandas as pd
 
-    from parallel_inverted_index_map_reduce_spark.operators.multimodal import (
-        decode_image,
-    )
+    decode = J.decode_baseline_jpeg
 
     rows = []
     for doc_id in range(6):
@@ -230,8 +209,8 @@ def test_spark_decodes_jpeg_payload_column(spark):
 
     def decode_batches(batches):
         for pdf in batches:
-            out = [decode_image(bytes(p)) for p in pdf["payload"]]
-            res = pd.DataFrame(out)
+            out = [decode(bytes(p)) for p in pdf["payload"]]
+            res = pd.DataFrame(out).drop(columns="pixels")
             res.insert(0, "doc_id", pdf["doc_id"].values)
             yield res.astype("int64")
 

@@ -41,10 +41,14 @@ def test_binary_features_match_column_exprs(spark):
 def test_decode_image_netpbm_real():
     import pytest
 
+    from parallel_inverted_index_map_reduce_spark.functions.jpeg import (
+        decode_baseline_jpeg,
+    )
+
     # P6 with a header comment: 2x2 RGB, known plane
     plane = bytes(range(12))
     ppm = b"P6\n# a comment\n2 2\n255\n" + plane
-    got = mm.decode_image(ppm)
+    got = mm._parse_netpbm(ppm)
     assert got == {
         "width": 2,
         "height": 2,
@@ -55,20 +59,14 @@ def test_decode_image_netpbm_real():
     }
     # P5 grayscale
     pgm = b"P5\n3 1\n255\n" + bytes([10, 20, 30])
-    got = mm.decode_image(pgm)
+    got = mm._parse_netpbm(pgm)
     assert (got["channels"], got["pixel_sum"], got["n_pixel_bytes"]) == (1, 60, 3)
     # truncated plane is an error, not silence
     with pytest.raises(ValueError, match="truncated"):
-        mm.decode_image(b"P6\n2 2\n255\n" + bytes(5))
-    # codec-requiring formats stay honestly stubbed (JPEG and PNG no
-    # longer are — functions/jpeg.py and functions/png.py decode for
-    # real; a TRUNCATED jpeg is a loud error, not silence)
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"GIF87a......")
+        mm._parse_netpbm(b"P6\n2 2\n255\n" + bytes(5))
+    # so is a truncated jpeg
     with pytest.raises(ValueError, match="missing SOS"):
-        mm.decode_image(b"\xff\xd8\xff\xe0\x00\x09JFIF...\xff\xd9")
-    # the deterministic fake is still available
-    assert mm.decode_image(b"abc", codec="fake") == {"width": 3, "height": 3}
+        decode_baseline_jpeg(b"\xff\xd8\xff\xe0\x00\x09JFIF...\xff\xd9")
 
 
 def test_decoded_image_features_end_to_end(spark):

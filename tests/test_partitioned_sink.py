@@ -24,7 +24,7 @@ def test_partitioned_roundtrip_and_pruning(spark, tmp_path):
     path = str(tmp_path / "events_by_day")
     ps.write_partitioned(df, path, ["event_date"])
 
-    back = ps.read_partitioned(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == df.count()
 
     # A predicate on the partition key must prune at planning time:

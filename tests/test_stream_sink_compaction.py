@@ -1,14 +1,7 @@
-"""Exactly-once foreachBatch sink and small-file compaction."""
+"""Exactly-once foreachBatch sink."""
 
 from __future__ import annotations
 
-import glob
-
-from pyspark.sql import functions as F
-
-from parallel_inverted_index_map_reduce_spark.operators.maintenance import (
-    compact_partitioned,
-)
 from parallel_inverted_index_map_reduce_spark.sources.tables import load_table
 from parallel_inverted_index_map_reduce_spark.streaming import events as sev
 from parallel_inverted_index_map_reduce_spark.streaming import sinks as ssk
@@ -66,22 +59,3 @@ def test_read_tolerates_empty_committed_batches(spark, tmp_path):
     got = ssk.read_exactly_once_parquet(spark, out)
     assert sorted(r.event_id for r in got.collect()) == [1, 2]
 
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    df = load_table(spark, SF_ORACLE, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    # fragment deliberately: many tasks x many days -> many small files
-    df.repartition(8).write.partitionBy("event_date").parquet(src)
-    n_src = len(glob.glob(f"{src}/event_date=*/*.parquet"))
-    n_days = df.select("event_date").distinct().count()
-    assert n_src > n_days  # fixture really is fragmented
-
-    compact_partitioned(spark, src, dst, ["event_date"])
-    n_dst = len(glob.glob(f"{dst}/event_date=*/*.parquet"))
-    assert n_dst == n_days
-    src_rows = sorted(map(tuple, spark.read.parquet(src).collect()))
-    dst_rows = sorted(map(tuple, spark.read.parquet(dst).collect()))
-    assert src_rows == dst_rows
